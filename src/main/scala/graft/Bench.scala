@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 
 import searchspark.gen.TranscriptGen
 import searchspark.index.{IndexBuild, PostingIndex}
-import searchspark.query.Wand
 
 /** Round benchmark (driver contract): one JSON line with per-query
   * seconds over SPARK_GRAFT_SF_DIR, plus engine headline numbers —
@@ -107,7 +106,7 @@ object Bench {
     // 3) engine: top-k BM25 latency over the built index (reference
     //    defaults k=20), a mixed query workload from the fixture shapes,
     //    through the hot (shard-partitioned, shuffle-free) path
-    val engine = searchspark.query.SearchEngine(spark, idx, postings)
+    val engine = searchspark.query.SearchEngine(spark, idx, postings, shardSize = 16384)
     val queries = Seq("w0003", "w0010 w0025", "w0001 w0002 w0005",
       "w0100 w0200", "w0042s w0042ing", "w0007 w0011 w0013 w0017 w0019")
     // warmup: three full passes (first touches the partitioned-RDD cache,

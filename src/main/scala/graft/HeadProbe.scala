@@ -21,7 +21,7 @@ object HeadProbe {
     val idx = IndexBuild.build(spark, turns, partitions = 64)
     val postings = PostingIndex.build(spark, idx, shardSize = 16384).cache()
     postings.count()
-    val engine = searchspark.query.SearchEngine(spark, idx, postings)
+    val engine = searchspark.query.SearchEngine(spark, idx, postings, shardSize = 16384)
     val headTerms = idx.terms.orderBy(org.apache.spark.sql.functions.desc("df"))
       .filter(org.apache.spark.sql.functions.col("term").rlike("^w\\d{4}"))
       .limit(2).collect().map(_.getString(0))

@@ -23,10 +23,11 @@ object BigBuild {
     val t0 = System.nanoTime()
     BuildPipeline.run(spark, turns, root, s"gen:42:$convs", partitions = cores * 2)
     val sec = (System.nanoTime() - t0) / 1e9
-    val engine = SearchEngine.load(spark, root)
-    // first query = index load: materializes the shard-partitioned
-    // posting RDD from parquet (serving warm-up, paid once per snapshot)
+    // index load + first query: the load builds the serving partitions
+    // from the parquet postings and docs, the first query fills the df
+    // cache (serving warm-up, paid once per snapshot)
     val t1 = System.nanoTime()
+    val engine = SearchEngine.load(spark, root)
     val r = engine.search("w0001 w0002")
     val loadMs = (System.nanoTime() - t1) / 1e6
     val lat = (1 to 10).map { i =>

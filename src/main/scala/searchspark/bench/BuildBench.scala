@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import searchspark.gen.TranscriptGen
 import searchspark.index.{IndexBuild, PostingIndex}
-import searchspark.query.Wand
+import searchspark.query.SearchEngine
 
 /** Two-parallelism scaling study (BASELINE.json north_rule: ≥0.8
   * throughput scaling efficiency between N and 4N executors; the
@@ -70,10 +70,11 @@ object BuildBench {
         postings.cache()
         postings.count()
         val sec = (System.nanoTime() - t0) / 1e9
-        val r = Wand.search(spark, idx, postings, "w0001 w0002")
+        val engine = SearchEngine(spark, idx, postings, shardSize = 16384)
+        val r = engine.search("w0001 w0002")
         require(r.ok && r.count > 0, "bench query returned nothing")
         val out = (idx.stats.totalTurns, sec, r.hits.head.score)
-        postings.unpersist(); idx.unpersist()
+        engine.close(); postings.unpersist(); idx.unpersist()
         spark.sharedState.cacheManager.clearCache()
         out
       }

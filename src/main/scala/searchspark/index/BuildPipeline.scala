@@ -64,6 +64,10 @@ object BuildPipeline {
     else Some(mapper.readValue(p.toFile, classOf[Manifest]))
   }
 
+  /** The shard size the build at `root` recorded in its manifest. */
+  def manifestShardSize(root: String): Option[Int] =
+    readManifest(root).flatMap(_.params.get("shardSize")).map(_.toInt)
+
   private def writeManifest(root: String, m: Manifest): Unit = {
     Files.createDirectories(Paths.get(root))
     val tmp = Paths.get(root, "build_manifest.json.tmp")
@@ -186,9 +190,11 @@ object BuildPipeline {
     stage("docs_raw") {
       val totalTurns = turns.count()
       // Sort-on-write: the persisted docs table is range-partitioned and
-      // sorted by docId so the query path's top-k hydration
-      // (Wand: docId isin(ids)) prunes row groups via parquet min/max
-      // stats instead of scanning every file (PlanGuardSpec pins it).
+      // sorted by docId so a docId lookup (the parity path's page
+      // hydration, SearchService: docId isin(ids)) prunes row groups via
+      // parquet min/max stats instead of scanning every file
+      // (PlanGuardSpec pins it). The engine reads the whole table once,
+      // at load, into its serving partitions.
       // This is the ONE text-bearing exchange left anywhere, and it is
       // a durable-layout choice in the persist-only path — the
       // in-memory build (the throughput metric) never moves text bytes

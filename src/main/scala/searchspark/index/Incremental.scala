@@ -55,9 +55,9 @@ object Incremental {
     // silently mis-shards the rebuilt segments and duplicates kept ones
     // — caught by StreamIngestSpec); an explicit argument is only
     // accepted when it agrees
-    val manifest = BuildPipeline.readManifest(root)
-    val zones = manifest.flatMap(_.params.get("zones")).flatMap(BuildPipeline.parseZones)
-    val manifestShard = manifest.flatMap(_.params.get("shardSize")).map(_.toInt)
+    val zones = BuildPipeline.readManifest(root).flatMap(_.params.get("zones"))
+      .flatMap(BuildPipeline.parseZones)
+    val manifestShard = BuildPipeline.manifestShardSize(root)
     require(shardSize <= 0 || manifestShard.forall(_ == shardSize),
       s"shardSize $shardSize contradicts the build manifest ($manifestShard)")
     val effShardSize = manifestShard

@@ -9,16 +9,19 @@ import searchspark.index.{BuildPipeline, BuiltIndex, IndexBuild, PostingIndex}
 import searchspark.model.{SearchResult, TermPostings, Turn}
 
 /** The user-facing engine facade: one object holding the hot index and
-  * routing each query to the zero-shuffle block-max WAND path over the
-  * shard-partitioned posting RDD (single stage per query; the RDD is
-  * hash-partitioned by shard once at load so every shard's rows are
-  * complete within one partition).
+  * serving every query through the block-max WAND path (Wand).
   *
-  * Role-scoped queries take the SAME hot path: blocks carry per-posting
+  * At load, the posting rows and the docs are hash-partitioned by shard
+  * with one partitioner and zipped into one [[ServingPartition]] per
+  * partition (a `term → rows` map and the shard's docs), persisted once.
+  * A warm query is then ONE Spark job with no Catalyst plan: each task
+  * scores its shards, and hydrates and snippets its own top k; the
+  * driver only merges, windows and normalizes relevance.
+  *
+  * Role-scoped queries take the SAME path: blocks carry per-posting
   * roleIds, and pruning bounds are computed at query time from
   * (maxTfE1, minDl) + scope-local idf/avgdl, which is a valid upper
-  * bound under any stats (Scoring.blockBound) — this removed round 1's
-  * scoped detour through the DataFrame parity path. The parity path
+  * bound under any stats (Scoring.blockBound). The parity path
   * (SearchService) remains as the declarative cross-check.
   *
   * `exactTotal=false` opts into estimated totals for head queries
@@ -26,14 +29,14 @@ import searchspark.model.{SearchResult, TermPostings, Turn}
 final class SearchEngine private (
     val spark: SparkSession,
     val idx: BuiltIndex,
-    val postings: Dataset[TermPostings],
-    byShard: RDD[TermPostings]) {
+    val shardSize: Int,
+    serving: RDD[ServingPartition]) {
 
   /** Driver-side term→df dictionary cache: the index is an immutable
     * snapshot, so df per term never changes for the lifetime of this
-    * facade. Repeat terms skip the term-stats Spark job entirely (2 jobs
-    * per warm query instead of 3 — scatter + hydration). Bounded: cleared
-    * if it ever exceeds MaxDfCache distinct terms. */
+    * facade. Repeat terms skip the term-stats Spark job entirely, so a
+    * warm query is the scatter job alone. Bounded: cleared if it ever
+    * exceeds MaxDfCache distinct terms. */
   private val dfCache = scala.collection.concurrent.TrieMap.empty[String, Long]
   private val MaxDfCache = 1 << 20
 
@@ -41,55 +44,73 @@ final class SearchEngine private (
              offset: Int = 0, limit: Int = 20,
              exactTotal: Boolean = true): SearchResult = {
     if (dfCache.size > MaxDfCache) dfCache.clear()
-    Wand.searchPartitioned(spark, idx, byShard, query, offset, limit,
+    Wand.searchPartitioned(idx, serving, query, offset, limit,
       Some(dfCache), scope, exactTotal)
   }
 
+  /** Release everything this engine persisted: the serving partitions
+    * and the dictionary tables the df lookup reads. */
   def close(): Unit = {
-    idx.unpersist()
-    postings.unpersist()
-    byShard.unpersist()
+    serving.unpersist()
+    idx.terms.unpersist()
+    idx.termsByRole.unpersist()
   }
 }
 
 object SearchEngine {
 
-  private def partitionByShard(spark: SparkSession,
-                               postings: Dataset[TermPostings]): RDD[TermPostings] = {
+  /** Wrap a built index whose postings were built with `shardSize`-doc
+    * shards. The serving partitions are built and materialized EAGERLY
+    * by one job, so the first real query runs at warm-path latency; that
+    * job also checks `shardSize` against the rows' doc ranges and fails
+    * loudly on a mismatch (docs would otherwise land in the wrong
+    * partition and hydration could not find them). */
+  def apply(spark: SparkSession, idx: BuiltIndex, postings: Dataset[TermPostings],
+            shardSize: Int = PostingIndex.DefaultShardSize): SearchEngine = {
+    require(shardSize > 0, s"shardSize must be positive, got $shardSize")
     // serving layout: FEWER, fatter partitions than the build — per-query
-    // latency is dominated by task-launch overhead (each query scans all
-    // partitions once), not per-task work
-    val n = math.max(spark.sparkContext.defaultParallelism / 4, 4)
-    postings.rdd
-      .map(p => (p.shard, p))
-      .partitionBy(new HashPartitioner(n))
-      .values
+    // latency is dominated by task-launch overhead (each query runs one
+    // task per partition), not per-task work
+    val byShard = new HashPartitioner(math.max(spark.sparkContext.defaultParallelism / 4, 4))
+    val rows = postings.rdd.map(p => (p.shard, p)).partitionBy(byShard)
+    val docs = idx.docs.select("docId", "conv_id", "turn_idx", "role", "text").rdd
+      .map { r =>
+        val d = r.getLong(0)
+        ((d / shardSize).toInt, ServedDoc(d, r.getString(1), r.getInt(2), r.getString(3), r.getString(4)))
+      }
+      .partitionBy(byShard)
+    val serving = rows
+      .zipPartitions(docs, preservesPartitioning = true) { (rs, ds) =>
+        Iterator.single(ServingPartition(shardSize, rs.map(_._2), ds.map(_._2)))
+      }
       .persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** Wrap an in-memory built index. The serving RDD is materialized
-    * EAGERLY (one foreachPartition no-op) so the first real query runs
-    * at warm-path latency instead of paying the partition-by-shard
-    * shuffle + cache fill — load time is the honest place for that cost
-    * (round-2 bench recorded it as a p95 outlier instead). */
-  def apply(spark: SparkSession, idx: BuiltIndex,
-            postings: Dataset[TermPostings]): SearchEngine = {
-    val cached = postings.cache()
-    val byShard = partitionByShard(spark, cached)
-    byShard.foreachPartition((_: Iterator[TermPostings]) => ())
-    new SearchEngine(spark, idx.cache(), cached, byShard)
+    val bounds = serving.map(p => (p.minShardSize, p.maxShardSize)).collect()
+    val (lo, hi) = (bounds.map(_._1).max, bounds.map(_._2).min)
+    if (shardSize < lo || shardSize > hi) {
+      serving.unpersist()
+      val built =
+        if (lo == hi) s"they were built with $lo-doc shards"
+        else if (hi == Long.MaxValue) s"they need shards of at least $lo docs"
+        else s"they need shards of $lo to $hi docs"
+      throw new IllegalArgumentException(
+        s"shardSize $shardSize contradicts the postings' doc ranges: $built")
+    }
+    idx.terms.cache()
+    idx.termsByRole.cache()
+    new SearchEngine(spark, idx, shardSize, serving)
   }
 
   /** Build from a transcript Dataset (tests / Main). */
   def fromTurns(spark: SparkSession, turns: Dataset[Turn], partitions: Int,
                 shardSize: Int = PostingIndex.DefaultShardSize): SearchEngine = {
     val idx = IndexBuild.build(spark, turns, partitions)
-    apply(spark, idx, PostingIndex.build(spark, idx, shardSize))
+    apply(spark, idx, PostingIndex.build(spark, idx, shardSize), shardSize)
   }
 
-  /** Load a persisted (IceLite) index built by BuildPipeline. */
-  def load(spark: SparkSession, root: String): SearchEngine = {
-    val idx = BuildPipeline.loadRelational(spark, root)
-    apply(spark, idx, BuildPipeline.loadPostings(spark, root))
-  }
+  /** Load a persisted (IceLite) index built by BuildPipeline, at the
+    * shard size its build manifest records. */
+  def load(spark: SparkSession, root: String): SearchEngine =
+    apply(spark, BuildPipeline.loadRelational(spark, root),
+      BuildPipeline.loadPostings(spark, root),
+      BuildPipeline.manifestShardSize(root).getOrElse(PostingIndex.DefaultShardSize))
 }

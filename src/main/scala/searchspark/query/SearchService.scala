@@ -20,9 +20,10 @@ import searchspark.model.{Hit, SearchResult}
   * Scale notes: the only per-query driver data are the query-term stats
   * (|q| rows) and the hydrated result page (≤ offset+limit rows — the
   * reference's N+1 `findById` hydration, SearchingServiceImpl.java:89-95,
-  * becomes one isin-pushdown scan). Candidate scoring is one shuffle on
-  * docId; the term-stats join is a literal CASE (broadcast-equivalent,
-  * no join at all).
+  * becomes one isin-pushdown scan here; the engine path instead hydrates
+  * on the executors, per partition, inside its one scatter job).
+  * Candidate scoring is one shuffle on docId; the term-stats join is a
+  * literal CASE (broadcast-equivalent, no join at all).
   */
 object SearchService {
 
@@ -35,7 +36,7 @@ object SearchService {
     * immutable snapshot; misses are stored as 0 so unknown terms also
     * skip the Spark lookup on repeat. Scope-local df is a different
     * keyspace — cached under a "role NUL term" key so warm SCOPED
-    * queries also run at 2 Spark jobs (scatter + hydration). */
+    * queries also run as the engine's one scatter job. */
   private[searchspark] def planTerms(
       idx: BuiltIndex, query: String, scope: Option[String],
       dfCache: Option[scala.collection.concurrent.Map[String, Long]] = None)

@@ -17,9 +17,10 @@ import searchspark.analyze.Analyzer
   * reference NPEs (its `k` stays null, SearchingServiceImpl.java:152);
   * we return an empty snippet instead.
   *
-  * Pure driver-side code: runs only over the ≤(offset+limit) hydrated
-  * top-k rows, never distributed (the reference likewise snippets only
-  * the result page).
+  * Pure function of (text, terms): the engine path calls it on the
+  * executors, over each partition's ≤(offset+limit) top-k docs only
+  * (Wand.partitionTop); the parity path calls it on the driver over the
+  * result page (the reference likewise snippets only the result page).
   */
 object Snippets {
 

@@ -2,8 +2,7 @@ package searchspark.query
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.rdd.RDD
 
 import searchspark.index.{BuiltIndex, Segments}
 import searchspark.model.{Hit, PostingBlock, SearchResult, TermPostings}
@@ -44,8 +43,10 @@ import searchspark.model.{Hit, PostingBlock, SearchResult, TermPostings}
   *    their exact count unchanged.
   *  - executors: each PARTITION pre-merges its shards' heaps and counts
   *    into one result ([[mergeShardTops]]), so driver fan-in scales with
-  *    partitions (~10^2), never shards (~10^6 at design scale);
-  *  - driver: merge per-partition tops, window, hydrate.
+  *    partitions (~10^2), never shards (~10^6 at design scale), and
+  *    hydrates + snippets that result's top k from its co-partitioned
+  *    docs ([[ServingPartition]]);
+  *  - driver: merge per-partition tops, window, normalize relevance.
   *
   * Scores are bit-identical to the oracle/parity path: per-term partials
   * summed in ascending TERM order (intersection order ≠ summation
@@ -109,71 +110,30 @@ object Wand {
     else Iterator.single((total, 0L, false, heap.dequeueAll.toArray.sortWith(better)))
   }
 
-  /** Test-only instrumentation: number of ShardTop entries the driver
-    * merged on the most recent query (must scale with PARTITIONS on the
-    * hot path, not shards — WandSpec pins it). */
+  /** Test-only instrumentation: number of per-partition results the
+    * driver merged on the most recent query (must scale with PARTITIONS
+    * on the hot path, not shards — WandSpec pins it). */
   @volatile private[searchspark] var lastFanIn: Int = -1
 
-  def search(spark: SparkSession, idx: BuiltIndex,
-             postings: Dataset[TermPostings], query: String,
-             offset: Int = 0, limit: Int = 20,
-             scope: Option[String] = None,
-             exactTotal: Boolean = true): SearchResult =
-    searchWith(spark, idx, query, offset, limit, scope, None) {
-      case (surviving, bIdf, bOrder, avgdl, k, roleId) =>
-        val nTerms = surviving.size
-        import spark.implicits._
-        postings
-          .filter(col("term").isInCollection(surviving))
-          .groupByKey(_.shard)
-          .mapGroups { (_, it) =>
-            val lists = it.toArray
-            if (lists.length < nTerms) (0L, 0L, false, Array.empty[(Long, Double)])
-            else wandShard(lists, bIdf.value, bOrder.value._1, bOrder.value._2,
-              avgdl, k, roleId, exactTotal)
-          }
-          .collect()
-    }
+  /** One partition's answer: its resolved candidate total and its top
+    * `offset+limit` hits, hydrated and snippeted (relevance is set by
+    * the driver, which alone knows the global max score). */
+  private type PartitionTop = (Long, Array[Hit])
 
-  /** Hot path: postings pre-partitioned by shard (SearchEngine.load) —
-    * the scatter is a SINGLE stage with no shuffle: filter preserves the
-    * partitioning, each partition groups its complete shards locally. */
-  def searchPartitioned(spark: SparkSession, idx: BuiltIndex,
-                        byShard: org.apache.spark.rdd.RDD[TermPostings],
+  /** The query path: ONE Spark job and no Catalyst plan once the query's
+    * df values are cached (SearchEngine's dictionary cache). Each task
+    * looks up only the query's terms in its partition's term map, runs
+    * [[wandShard]] per shard holding every term, folds the shards with
+    * [[mergeShardTops]], and hydrates + snippets that partition's top k
+    * from the co-partitioned docs. idf and the term orders ride in the
+    * task closure. The driver merges, windows and normalizes relevance.
+    * The `collect` stays in this method: the benchmark's tracer names
+    * the scatter phase after it. */
+  def searchPartitioned(idx: BuiltIndex, serving: RDD[ServingPartition],
                         query: String, offset: Int = 0, limit: Int = 20,
                         dfCache: Option[scala.collection.concurrent.Map[String, Long]] = None,
                         scope: Option[String] = None,
-                        exactTotal: Boolean = true): SearchResult =
-    searchWith(spark, idx, query, offset, limit, scope, dfCache) {
-      case (surviving, bIdf, bOrder, avgdl, k, roleId) =>
-        val survSet = surviving.toSet
-        val bSurv = spark.sparkContext.broadcast(survSet)
-        val nTerms = surviving.size
-        byShard
-          .mapPartitions { it =>
-            val surv = bSurv.value
-            val perShard = it.filter(p => surv.contains(p.term))
-              .toSeq.groupBy(_.shard).iterator
-              .map { case (_, rows) =>
-                val lists = rows.toArray
-                if (lists.length < nTerms) (0L, 0L, false, Array.empty[(Long, Double)])
-                else wandShard(lists, bIdf.value, bOrder.value._1, bOrder.value._2,
-                  avgdl, k, roleId, exactTotal)
-              }
-            // ONE result per partition crosses to the driver, however
-            // many shards the partition holds
-            mergeShardTops(perShard, k)
-          }
-          .collect()
-    }
-
-  private def searchWith(spark: SparkSession, idx: BuiltIndex, query: String,
-                         offset: Int, limit: Int, scope: Option[String],
-                         dfCache: Option[scala.collection.concurrent.Map[String, Long]])(
-      scatter: ((Seq[String],
-                 org.apache.spark.broadcast.Broadcast[Map[String, Double]],
-                 org.apache.spark.broadcast.Broadcast[(Seq[String], Seq[String])],
-                 Double, Int, Int)) => Array[ShardTop]): SearchResult = {
+                        exactTotal: Boolean = true): SearchResult = {
     // scope-local stats flow through planTerms (unknown scope → n == 0 →
     // "Nothing found" there); the roleIds lookup is still defensive: a
     // scope present in statsByRole but missing from the role dictionary
@@ -190,39 +150,52 @@ object Wand {
         val idfByTerm = surviving.map(t => t -> Scoring.idf(dfMap(t), n)).toMap
         val termsAsc = surviving.sorted
         val byRarity = surviving.sortBy(t => (dfMap(t), t))
-        val bIdf = spark.sparkContext.broadcast(idfByTerm)
-        val bOrder = spark.sparkContext.broadcast((termsAsc, byRarity))
-        val shardTops = scatter((surviving, bIdf, bOrder, avgdl, k, roleId))
-        lastFanIn = shardTops.length
-
-        // per shard: exact count when nothing was skipped there, else
-        // the systematic-sample estimate (deterministic), floored at the
-        // exact count of candidates the scan DID intersect — already
-        // computed, and strictly tightens a sample that under-shoots
-        // (a zero estimate must never erase real hits)
-        val total = shardTops.map { case (exact, sampleCand, skippedAny, _) =>
-          if (!skippedAny) exact
-          else math.max(sampleCand * ApproxSampleRate, exact)
-        }.sum
-        if (total == 0) return SearchResult(ok = false, 0, Nil, "Nothing found")
-        val merged = shardTops.flatMap(_._4)
-          .sortWith(better)
-        val maxScore = merged.head._2
-        val page = merged.slice(offset, offset + limit)
-
-        val ids = page.map(_._1)
-        val hydrated = idx.docs
-          .filter(col("docId").isInCollection(ids.map(java.lang.Long.valueOf).toSeq))
-          .select("docId", "conv_id", "turn_idx", "role", "text")
-          .collect()
-          .map(r => r.getLong(0) -> ((r.getString(1), r.getInt(2), r.getString(3), r.getString(4))))
-          .toMap
         val qSet = surviving.toSet
-        val hits = page.map { case (d, s) =>
-          val (cid, tix, role, text) = hydrated(d)
-          Hit(d, cid, tix, role, s, s / maxScore, Snippets.snippet(text, qSet))
-        }
-        SearchResult(ok = true, total, hits.toIndexedSeq, null)
+        val tops = serving
+          .mapPartitions(_.flatMap(p => partitionTop(p, idfByTerm, termsAsc, byRarity,
+            avgdl, k, roleId, exactTotal, qSet)))
+          .collect()
+        lastFanIn = tops.length
+
+        // partition totals are already resolved by mergeShardTops (exact
+        // per shard when nothing was skipped there, else the systematic
+        // sample estimate floored at the exact count)
+        val total = tops.map(_._1).sum
+        if (total == 0) return SearchResult(ok = false, 0, Nil, "Nothing found")
+        val merged = tops.flatMap(_._2)
+          .sortWith((a, b) => better((a.docId, a.score), (b.docId, b.score)))
+        val maxScore = merged.head.score
+        val page = merged.slice(offset, offset + limit)
+          .map(h => h.copy(relevance = h.score / maxScore))
+        SearchResult(ok = true, total, page.toIndexedSeq, null)
+    }
+  }
+
+  /** One partition's share of a query, run on the executor. Shards are
+    * found through the rarest term's rows (a shard lacking any query
+    * term holds no conjunctive candidate); the partition's top k is
+    * hydrated from its own docs, so a miss there is a broken layout and
+    * fails loudly. */
+  private def partitionTop(p: ServingPartition, idfByTerm: Map[String, Double],
+                           termsAsc: Seq[String], byRarity: Seq[String],
+                           avgdl: Double, k: Int, roleId: Int, exactTotal: Boolean,
+                           qSet: Set[String]): Iterator[PartitionTop] = {
+    val rows = byRarity.map(p.rows).toArray
+    if (rows.exists(_.isEmpty)) return Iterator.empty
+    val perShard = rows.head.iterator.flatMap { driverRow =>
+      val lists = rows.map(rs => ServingPartition.inShard(rs, driverRow.shard))
+      if (lists.contains(null)) None
+      else Some(wandShard(lists, idfByTerm, termsAsc, byRarity, avgdl, k, roleId, exactTotal))
+    }
+    mergeShardTops(perShard, k).map { case (total, _, _, top) =>
+      (total, top.map { case (d, s) =>
+        val doc = p.doc(d)
+        if (doc == null)
+          throw new IllegalStateException(
+            s"top-k docId $d (shard ${d / p.shardSize}) is missing from its serving " +
+              "partition's docs: the postings and docs are not co-partitioned")
+        Hit(d, doc.conv_id, doc.turn_idx, doc.role, s, 0.0, Snippets.snippet(doc.text, qSet))
+      })
     }
   }
 

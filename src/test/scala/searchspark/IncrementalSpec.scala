@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import searchspark.gen.TranscriptGen
 import searchspark.index._
 import searchspark.model.Turn
-import searchspark.query.Wand
+import searchspark.query.SearchEngine
 
 /** C9 incremental (re)index: delta TF + shard-local segment rebuild +
   * union merge must equal a full recompute from the same updated
@@ -57,7 +57,8 @@ class IncrementalSpec extends AnyFunSuite {
 
     // and the merged index answers queries (replaced text is findable)
     val postings = BuildPipeline.loadPostings(spark, root)
-    val r = Wand.search(spark, idx, postings, "completely wording")
+    val engine = SearchEngine(spark, idx, postings, shardSize = 256)
+    val r = try engine.search("completely wording") finally engine.close()
     assert(r.ok && r.hits.exists(h =>
       h.conv_id == edited.conv_id && h.turn_idx == edited.turn_idx))
   }
@@ -99,7 +100,8 @@ class IncrementalSpec extends AnyFunSuite {
     // (the id renumbering is monotone, so ordering/ties are unaffected)
     val survivors = base.tail ++ TranscriptGen.conversation(42L, 700L)
     val oracle = new searchspark.oracle.ScalarOracle(survivors)
-    val engine = Wand.search(spark, idx, postings, "w0001 w0002")
+    val served = SearchEngine(spark, idx, postings, shardSize = 256)
+    val engine = try served.search("w0001 w0002") finally served.close()
     val expect = oracle.search("w0001 w0002", None)
     assert(engine.ok && expect.ok && engine.count == expect.count)
     assert(engine.hits.map(h => (h.conv_id, h.turn_idx, h.score)) ==
@@ -129,11 +131,12 @@ class IncrementalSpec extends AnyFunSuite {
     val oracle = new searchspark.oracle.ScalarOracle(allTurns)
     val postings = BuildPipeline.loadPostings(spark, root)
     val spec = new RankIdentitySpec
-    Seq("user", "assistant", "admin").foreach { role =>
+    val engine = SearchEngine(spark, idx, postings, shardSize = 256)
+    try Seq("user", "assistant", "admin").foreach { role =>
       val q = "w0001 w0002"
       spec.assertSame(s"role-append-$role",
-        Wand.search(spark, idx, postings, q, scope = Some(role)),
+        engine.search(q, scope = Some(role)),
         oracle.search(q, Some(role)))
-    }
+    } finally engine.close()
   }
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import searchspark.gen.TranscriptGen
 import searchspark.index.BuildPipeline
 import searchspark.oracle.ScalarOracle
-import searchspark.query.Wand
+import searchspark.query.SearchEngine
 
 /** Resumability + persistence gate (BASELINE.md "resumability" row):
   * a build killed mid-pipeline and resumed must produce an index
@@ -97,8 +97,9 @@ class ResumeSpec extends AnyFunSuite {
     val idxIce = BuildPipeline.loadRelational(spark, viaIce)
     val pDir = BuildPipeline.loadPostings(spark, viaDir, catalog = DirCatalog)
     val pIce = BuildPipeline.loadPostings(spark, viaIce)
-    val qDir = Wand.search(spark, idxDir, pDir, "w0001 w0002")
-    val qIce = Wand.search(spark, idxIce, pIce, "w0001 w0002")
+    def query(e: SearchEngine) = try e.search("w0001 w0002") finally e.close()
+    val qDir = query(SearchEngine(spark, idxDir, pDir))
+    val qIce = query(SearchEngine(spark, idxIce, pIce))
     assert(qDir.hits.map(h => (h.docId, h.score)) ==
       qIce.hits.map(h => (h.docId, h.score)))
   }
@@ -141,11 +142,12 @@ class ResumeSpec extends AnyFunSuite {
     val postings = BuildPipeline.loadPostings(spark, root).cache()
     val oracle = new ScalarOracle(TranscriptGen.localCorpus(TranscriptGen.DefaultSeed, convs))
     val spec = new RankIdentitySpec
+    val engine = SearchEngine(spark, idx, postings)
     QueryFixtures.deriveQueries(oracle).filter(_.scope.isEmpty).foreach { q =>
       val expect = oracle.search(q.query, None, q.offset, q.limit)
-      val engine = Wand.search(spark, idx, postings, q.query, q.offset, q.limit)
-      spec.assertSame("persisted-" + q.id, engine, expect)
+      val got = engine.search(q.query, None, q.offset, q.limit)
+      spec.assertSame("persisted-" + q.id, got, expect)
     }
-    idx.unpersist(); postings.unpersist()
+    engine.close(); idx.unpersist(); postings.unpersist()
   }
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import searchspark.gen.TranscriptGen
 import searchspark.index.{BuildPipeline, IceLite, IndexBuild, PostingIndex}
 import searchspark.model.Turn
-import searchspark.query.{SearchEngine, Wand}
+import searchspark.query.SearchEngine
 import searchspark.streaming.StreamIngest
 
 /** Structured-Streaming ingest: micro-batches folded into the persisted
@@ -64,8 +64,7 @@ class StreamIngestSpec extends AnyFunSuite {
     // late + replaced content is searchable through the reopened engine
     val engine = SearchEngine.load(spark, root)
     try {
-      val r = Wand.search(spark, idx, BuildPipeline.loadPostings(spark, root),
-        "streamed replacement")
+      val r = engine.search("streamed replacement")
       assert(r.ok && r.hits.exists(h =>
         h.conv_id == base.head.conv_id && h.turn_idx == base.head.turn_idx))
     } finally engine.close()

@@ -3,13 +3,13 @@ package searchspark
 import org.scalatest.funsuite.AnyFunSuite
 
 import searchspark.gen.TranscriptGen
-import searchspark.index.{IndexBuild, PostingIndex}
+import searchspark.index.{BuildPipeline, IndexBuild, PostingIndex}
 import searchspark.oracle.ScalarOracle
-import searchspark.query.Wand
+import searchspark.query.{SearchEngine, Wand}
 
 /** The WAND engine path must be rank-identical to the oracle too —
   * same gate as RankIdentitySpec but through compressed segments +
-  * per-shard block-max scan + driver merge. */
+  * per-shard block-max scan + per-partition hydration + driver merge. */
 class WandSpec extends AnyFunSuite {
 
   private lazy val turns = QueryFixtures.corpus(TranscriptGen.UnitConvs * 4)
@@ -20,6 +20,13 @@ class WandSpec extends AnyFunSuite {
     IndexBuild.build(spark, spark.createDataset(turns), partitions = 4).cache()
   }
   private lazy val postings = PostingIndex.build(spark, idx, shardSize = 512).cache()
+  private lazy val engine = SearchEngine(spark, idx, postings, shardSize = 512)
+
+  /** Causes' messages of a throwable, outermost first (a task's throw
+    * reaches the driver wrapped in a SparkException). */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
 
   test("segment build covers every term exactly once per shard") {
     import spark.implicits._
@@ -34,13 +41,12 @@ class WandSpec extends AnyFunSuite {
     val spec = new RankIdentitySpec
     QueryFixtures.deriveQueries(oracle).filter(_.scope.isEmpty).foreach { q =>
       val expect = oracle.search(q.query, None, q.offset, q.limit)
-      val engine = Wand.search(spark, idx, postings, q.query, q.offset, q.limit)
-      spec.assertSame("wand-" + q.id, engine, expect)
+      val got = engine.search(q.query, None, q.offset, q.limit)
+      spec.assertSame("wand-" + q.id, got, expect)
     }
   }
 
   test("SearchEngine hot path (partitioned, shuffle-free) is rank-identical too") {
-    val engine = searchspark.query.SearchEngine(spark, idx, postings)
     val spec = new RankIdentitySpec
     QueryFixtures.deriveQueries(oracle).foreach { q =>
       val expect = oracle.search(q.query, q.scope, q.offset, q.limit)
@@ -50,27 +56,17 @@ class WandSpec extends AnyFunSuite {
   }
 
   test("term-stats dictionary cache: warm query identical, one fewer Spark job") {
-    val engine = searchspark.query.SearchEngine(spark, idx, postings)
     val q = QueryFixtures.deriveQueries(oracle).find(_.scope.isEmpty).get
 
+    // every job `body` submits carries a fresh job group; the status
+    // tracker lists the group's jobs once the listener bus has drained
     def countJobs(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        // listener delivery is async; wait until the count settles
-        var last = -1
-        var settle = 0
-        while (settle < 3) {
-          Thread.sleep(100)
-          if (jobs.get() == last) settle += 1 else { last = jobs.get(); settle = 0 }
-        }
-      } finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
+      val sc = spark.sparkContext
+      val group = s"wandspec-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(group, "jobs of one query")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.statusTracker.getJobIdsForGroup(group).length
     }
 
     val cold = engine.search(q.query, None, q.offset, q.limit) // fills the cache
@@ -78,32 +74,31 @@ class WandSpec extends AnyFunSuite {
     val warmJobs = countJobs { warm = engine.search(q.query, None, q.offset, q.limit) }
     assert(warm.count == cold.count)
     assert(warm.hits.map(h => (h.docId, h.score)) == cold.hits.map(h => (h.docId, h.score)))
-    assert(warmJobs == 2, s"warm query should be scatter + hydration only, saw $warmJobs jobs")
-    // unknown terms are cached too (df=0) — still correct, still 2 jobs
+    assert(warmJobs == 1, s"warm query should be the scatter job only, saw $warmJobs jobs")
+    // unknown terms are cached too (df=0) — still correct, still 1 job
     val miss1 = engine.search(q.query + " qzzzznotaword", None, q.offset, q.limit)
     val missJobs = countJobs { engine.search(q.query + " qzzzznotaword", None, q.offset, q.limit) }
     assert(miss1.hits.map(_.docId) == cold.hits.map(_.docId)) // unknown-term silent drop
-    assert(missJobs == 2)
+    assert(missJobs == 1, s"warm query with an unknown term: $missJobs jobs")
   }
 
   test("scoped WAND (role filter in-scan, scope-local bounds) == oracle") {
     val spec = new RankIdentitySpec
     QueryFixtures.deriveQueries(oracle).filter(_.scope.nonEmpty).foreach { q =>
       val expect = oracle.search(q.query, q.scope, q.offset, q.limit)
-      val engine = Wand.search(spark, idx, postings, q.query, q.offset, q.limit, q.scope)
-      spec.assertSame("wand-scoped-" + q.id, engine, expect)
+      val got = engine.search(q.query, q.scope, q.offset, q.limit)
+      spec.assertSame("wand-scoped-" + q.id, got, expect)
     }
     // a scope absent from the corpus → Nothing found (reference: unknown
     // site filter yields an empty page set)
-    val r = Wand.search(spark, idx, postings, "w0001", scope = Some("no-such-role"))
+    val r = engine.search("w0001", scope = Some("no-such-role"))
     assert(!r.ok && r.error == "Nothing found")
   }
 
   test("approx total (opt-in): top-k exact, count estimated, default exact") {
     val q = QueryFixtures.deriveQueries(oracle).find(_.id == "q10a").get
-    val exact = Wand.search(spark, idx, postings, q.query, q.offset, q.limit)
-    val approx = Wand.search(spark, idx, postings, q.query, q.offset, q.limit,
-      exactTotal = false)
+    val exact = engine.search(q.query, None, q.offset, q.limit)
+    val approx = engine.search(q.query, None, q.offset, q.limit, exactTotal = false)
     assert(approx.hits == exact.hits, "approx mode must never change the page")
     assert(approx.count > 0)
     // estimate stays within 20% of truth on this corpus (uniform-ish
@@ -133,8 +128,10 @@ class WandSpec extends AnyFunSuite {
         "yy qq", null, ts))
     val sIdx = IndexBuild.build(spark, spark.createDataset(turns), partitions = 4)
     val sPost = PostingIndex.build(spark, sIdx, shardSize = 4096)
-    val exact = Wand.search(spark, sIdx, sPost, "xx yy")
-    val approx = Wand.search(spark, sIdx, sPost, "xx yy", exactTotal = false)
+    val sEngine = SearchEngine(spark, sIdx, sPost, shardSize = 4096)
+    val exact = sEngine.search("xx yy")
+    val approx = sEngine.search("xx yy", exactTotal = false)
+    sEngine.close()
     assert(exact.count == 1519, "fixture sanity: aaaa + bbb docs are the candidates")
     assert(approx.hits == exact.hits, "approx must not change the page")
     // candidates are docIds 0..1518; the sample is the bit-mixed
@@ -167,12 +164,13 @@ class WandSpec extends AnyFunSuite {
   test("hot-path driver fan-in scales with partitions, not shards") {
     val fine = PostingIndex.build(spark, idx, shardSize = 64).cache()
     try {
-      val engine = searchspark.query.SearchEngine(spark, idx, fine)
+      val fineEngine = SearchEngine(spark, idx, fine, shardSize = 64)
       val nShards = fine.select("shard").distinct().count()
       val nParts = math.max(spark.sparkContext.defaultParallelism / 4, 4)
       assert(nShards > nParts, s"fixture sanity: $nShards shards vs $nParts partitions")
       val q = QueryFixtures.deriveQueries(oracle).find(_.scope.isEmpty).get
-      val r = engine.search(q.query, None, q.offset, q.limit)
+      val r = fineEngine.search(q.query, None, q.offset, q.limit)
+      fineEngine.close()
       assert(r.ok)
       assert(Wand.lastFanIn > 0 && Wand.lastFanIn <= nParts,
         s"driver merged ${Wand.lastFanIn} entries for $nShards shards; " +
@@ -184,10 +182,52 @@ class WandSpec extends AnyFunSuite {
     val p2 = PostingIndex.build(spark, idx, shardSize = 64).cache()
     try {
       val q = QueryFixtures.deriveQueries(oracle).find(_.id == "q11").get
-      val a = Wand.search(spark, idx, postings, q.query, q.offset, q.limit)
-      val b = Wand.search(spark, idx, p2, q.query, q.offset, q.limit)
+      val e2 = SearchEngine(spark, idx, p2, shardSize = 64)
+      val a = engine.search(q.query, None, q.offset, q.limit)
+      val b = e2.search(q.query, None, q.offset, q.limit)
+      e2.close()
       assert(a.count == b.count)
       assert(a.hits.map(h => (h.docId, h.score)) == b.hits.map(h => (h.docId, h.score)))
     } finally p2.unpersist()
+  }
+
+  test("a shardSize that contradicts the postings fails at load, naming both sizes") {
+    val fine = PostingIndex.build(spark, idx, shardSize = 64)
+    val e = intercept[IllegalArgumentException](SearchEngine(spark, idx, fine))
+    assert(e.getMessage.contains(s"shardSize ${PostingIndex.DefaultShardSize}") &&
+      e.getMessage.contains("built with 64-doc shards"), e.getMessage)
+  }
+
+  test("a top-k doc missing from its partition fails loudly, naming docId and shard") {
+    import org.apache.spark.sql.functions.col
+    val q = QueryFixtures.deriveQueries(oracle).find(_.scope.isEmpty).get
+    val victim = engine.search(q.query, None, q.offset, q.limit).hits.head.docId
+    val broken = SearchEngine(spark, idx.copy(docs = idx.docs.filter(col("docId") =!= victim)),
+      postings, shardSize = 512)
+    try {
+      val e = intercept[Throwable](broken.search(q.query, None, q.offset, q.limit))
+      val msgs = messages(e)
+      assert(msgs.contains("IllegalStateException") &&
+        msgs.contains(s"docId $victim (shard ${victim / 512})"), msgs)
+    } finally broken.close()
+  }
+
+  test("close() leaves none of the engine's RDDs persisted") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("wand-close").toString
+    BuildPipeline.run(spark, spark.createDataset(TranscriptGen.localCorpus(42L, 20)),
+      root, "gen:42:20", partitions = 2, shardSize = 256)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val loaded = SearchEngine.load(spark, root)
+    assert(loaded.shardSize == 256, "load takes the shard size from the build manifest")
+    // cold queries fill the engine's dictionary caches, scoped and not
+    assert(loaded.search("w0001 w0002").ok)
+    loaded.search("w0001 w0002", scope = Some("user"))
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, "fixture sanity: the engine persists")
+    loaded.close()
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"RDDs still persisted after close(): " +
+      leaked.map(id => sc.getPersistentRDDs(id).toString).mkString(", "))
   }
 }

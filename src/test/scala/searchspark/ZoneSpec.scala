@@ -8,7 +8,7 @@ import searchspark.gen.TranscriptGen
 import searchspark.index.{IndexBuild, PostingIndex}
 import searchspark.model.{Turn, ZoneConfig}
 import searchspark.oracle.ScalarOracle
-import searchspark.query.Wand
+import searchspark.query.SearchEngine
 
 /** C5 zone-weighted TF (reference Link.java:88-100,209-216: rank =
   * tf_in_tag × ratio, title 1.0 / body 0.8, body overwriting title):
@@ -28,13 +28,14 @@ class ZoneSpec extends AnyFunSuite {
       zones = zones).cache()
     val postings = PostingIndex.build(spark, idx, shardSize = 512).cache()
     val spec = new RankIdentitySpec
+    val engine = SearchEngine(spark, idx, postings, shardSize = 512)
     try {
       QueryFixtures.deriveQueries(oracle).foreach { q =>
         val expect = oracle.search(q.query, q.scope, q.offset, q.limit)
-        val got = Wand.search(spark, idx, postings, q.query, q.offset, q.limit, q.scope)
+        val got = engine.search(q.query, q.scope, q.offset, q.limit)
         spec.assertSame("zoned-" + q.id, got, expect)
       }
-    } finally { idx.unpersist(); postings.unpersist() }
+    } finally { engine.close(); idx.unpersist(); postings.unpersist() }
   }
 
   test("incremental append to a ZONED build analyzes the delta under the manifest's zones") {
@@ -74,7 +75,8 @@ class ZoneSpec extends AnyFunSuite {
       val idx = IndexBuild.build(spark, spark.createDataset(turns), partitions = 2,
         zones = z)
       val postings = PostingIndex.build(spark, idx, shardSize = 16)
-      val r = Wand.search(spark, idx, postings, "w9991")
+      val engine = SearchEngine(spark, idx, postings, shardSize = 16)
+      val r = try engine.search("w9991") finally engine.close()
       r.hits.map(_.docId)
     }
     // unzoned: equal scores → tie-break docId asc → convA (id 0) first
