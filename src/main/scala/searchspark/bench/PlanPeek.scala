@@ -11,7 +11,7 @@ object PlanPeek {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val turns = searchspark.gen.TranscriptGen.corpus(spark, 42L, 200L, 8)
-    val assigned = searchspark.index.DocIds.assign(spark, turns, 8)
+    val assigned = searchspark.index.DocIds.assign(spark, turns, 8, new searchspark.index.CacheScope)
     assigned.collect()
     val plan = assigned.queryExecution.executedPlan.toString
     println(plan)

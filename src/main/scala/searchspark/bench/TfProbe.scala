@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import searchspark.analyze.Analyzer
 import searchspark.gen.TranscriptGen
-import searchspark.index.{DocIds, IndexBuild}
+import searchspark.index.{CacheScope, DocIds, IndexBuild}
 
 /** Dev probe: decompose the TF phase — tokenize/explode/lemma scan vs
   * the groupBy shuffle vs the dl join.
@@ -20,7 +20,7 @@ object TfProbe {
     spark.sparkContext.setLogLevel("WARN")
     val turns = TranscriptGen.corpus(spark, TranscriptGen.DefaultSeed, convs, cores * 2).cache()
     turns.count()
-    val docsRaw = DocIds.assign(spark, turns, cores * 2)
+    val docsRaw = DocIds.assign(spark, turns, cores * 2, new CacheScope)
     docsRaw.count()
     def time(label: String)(body: => Long): Unit = (1 to 2).foreach { i =>
       val t0 = System.nanoTime()

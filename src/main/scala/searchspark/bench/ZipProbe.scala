@@ -3,7 +3,7 @@ package searchspark.bench
 import org.apache.spark.sql.SparkSession
 
 import searchspark.gen.TranscriptGen
-import searchspark.index.{DocIds, IndexBuild}
+import searchspark.index.{CacheScope, DocIds, IndexBuild}
 
 /** Dev probe: isolate the two-pass docId assignment's cost components —
   * (a) the narrow key pass + rank (runs inside assignWithMeta), (b) the
@@ -34,7 +34,7 @@ object ZipProbe {
       val turns = TranscriptGen.corpus(spark, TranscriptGen.DefaultSeed, convs, cores * 2).cache()
       time("gen")(turns.count())
       val (docsRaw, meta) = time("assignWithMeta (key pass + rank)") {
-        DocIds.assignWithMeta(spark, turns, cores * 2)
+        DocIds.assignWithMeta(spark, turns, cores * 2, new CacheScope)
       }
       time("zip-back count (docsRaw.count)")(docsRaw.count())
       time("zip-back count AGAIN")(docsRaw.count())

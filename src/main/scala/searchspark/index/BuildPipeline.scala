@@ -30,9 +30,15 @@ import searchspark.model.{TermPostings, Turn, ZoneConfig}
   *   tf         analyzer projection + TF agg (carries role + dl)
   *   terms      global dictionary (termId, df, cf)
   *   terms_by_role  scope-local df
-  *   stats      scalar stats JSON (n, avgdl, blanks, per-role)
-  *   postings   compressed sharded segments
+  *   stats      scalar stats JSON (n, avgdl, blanks, per-role, exact sums)
+  *   postings   compressed segments, rows (shard, term, blocks)
   * }}}
+  *
+  * docs_raw, tf and postings are written one file per doc-range shard
+  * (IceLite.FileLayout), so Incremental.append rewrites the files of the
+  * shards it touches and keeps every other file. The stage bodies are
+  * shared with Incremental, which re-derives the tables from docs_raw
+  * when it finds them out of step.
   */
 object BuildPipeline {
 
@@ -189,74 +195,27 @@ object BuildPipeline {
     try {
     stage("docs_raw") {
       val totalTurns = turns.count()
-      // Sort-on-write: the persisted docs table is range-partitioned and
-      // sorted by docId so a docId lookup (the parity path's page
-      // hydration, SearchService: docId isin(ids)) prunes row groups via
-      // parquet min/max stats instead of scanning every file
-      // (PlanGuardSpec pins it). The engine reads the whole table once,
-      // at load, into its serving partitions.
-      // This is the ONE text-bearing exchange left anywhere, and it is
-      // a durable-layout choice in the persist-only path — the
-      // in-memory build (the throughput metric) never moves text bytes
-      // (DocIds.assign class doc).
-      val docsRaw = DocIds.assign(spark, turns, partitions)
-        .repartitionByRange(partitions, col("docId"))
-        .sortWithinPartitions("docId")
-      val snap = catalog.commit(spark, docsRaw, table("docs_raw"),
-        props = Map("totalTurns" -> totalTurns.toString))
-      snap.totalRows
+      // Sort-on-write, one file per doc-range shard: a docId lookup (the
+      // parity path's page hydration, SearchService: docId isin(ids))
+      // prunes files and row groups via parquet min/max stats instead of
+      // scanning every file (PlanGuardSpec pins it), and an append
+      // rewrites only the shards it touches. The engine reads the whole
+      // table once, at load, into its serving partitions.
+      // The layout's shard exchange is the ONE text-bearing exchange
+      // left anywhere, and it is a durable-layout choice in the
+      // persist-only path — the in-memory build (the throughput metric)
+      // never moves text bytes (DocIds.assign class doc).
+      CacheScope { scope =>
+        catalog.commit(spark, DocIds.assign(spark, turns, partitions, scope),
+          table("docs_raw"), props = Map("totalTurns" -> totalTurns.toString),
+          layout = docLayout(shardSize)).totalRows
+      }
     }
-
-    lazy val docsRaw = catalog.read(spark, table("docs_raw"))
-    stage("tf") {
-      catalog.commit(spark, IndexBuild.tfFromDocs(docsRaw, zones), table("tf")).totalRows
-    }
-
-    lazy val tf = catalog.read(spark, table("tf"))
-    stage("terms") {
-      catalog.commit(spark, IndexBuild.termDict(spark, tf, partitions), table("terms")).totalRows
-    }
-    stage("terms_by_role") {
-      catalog.commit(spark, IndexBuild.termsByRole(tf), table("terms_by_role")).totalRows
-    }
-    stage("stats") {
-      val totalTurns = catalog.currentSnapshot(table("docs_raw"))
-        .flatMap(_.props.get("totalTurns")).map(_.toLong).getOrElse(0L)
-      val (stats, byRole) = IndexBuild.corpusStats(docsRaw, tf, totalTurns)
-      val payload = Map(
-        "n" -> stats.n.toString, "avgdl" -> stats.avgdl.toString,
-        "totalTurns" -> stats.totalTurns.toString,
-        "skippedBlank" -> stats.skippedBlank.toString,
-        // append-only role dictionary (cold build: sorted) — roleIds in
-        // posting blocks are positions in this list and must never move
-        "roles" -> encodeRoles(byRole.keys.toSeq.sorted)) ++
-        byRole.map { case (r, (n, a)) => s"role.$r" -> s"$n:$a" }
-      val tmp = Paths.get(root, "stats.json.tmp")
-      Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(payload))
-      Files.move(tmp, Paths.get(root, "stats.json"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      stats.n
-    }
-    stage("postings") {
-      val idx = loadRelational(spark, root, catalog)
-      // record the per-build packed-key split next to the manifest
-      // (derived from the corpus' max docId — see PostingIndex): purely
-      // observational (the key never outlives the build job), but it
-      // makes "what layout did this build use" auditable after the fact
-      val (shardBits, termBits) = PostingIndex.shardSplit(idx, shardSize)
-      Files.write(Paths.get(root, "postings_meta.json"),
-        (s"""{"shardSize":$shardSize,"shardBits":$shardBits,""" +
-          s""""termBits":$termBits,"codec":"delta-varint-v2"}""")
-          .getBytes("UTF-8"))
-      val segs = PostingIndex.build(spark, idx, shardSize)
-      // at-rest layout: range-partition + sort by termId so a query's
-      // term-IN filter prunes row groups via parquet min/max stats
-      // (PlanAudit shows PushedFilters reaching this scan)
-      val sorted = segs.toDF()
-        .repartitionByRange(math.max(1, partitions / 2), col("termId"))
-        .sortWithinPartitions("termId", "shard")
-      catalog.commit(spark, sorted, table("postings")).totalRows
-    }
+    stage("tf") { commitTf(spark, root, catalog, zones, shardSize).totalRows }
+    stage("terms") { commitTerms(spark, root, catalog, partitions).totalRows }
+    stage("terms_by_role") { commitTermsByRole(spark, root, catalog).totalRows }
+    stage("stats") { commitStats(spark, root, catalog).n }
+    stage("postings") { commitPostings(spark, root, catalog, shardSize).totalRows }
 
     } catch {
       case e: Throwable =>
@@ -274,12 +233,123 @@ object BuildPipeline {
     BuildReport(ran.result(), skipped.result(), total)
   }
 
+  private def table(root: String, name: String) = Paths.get(root, name).toString
+
+  /** docs_raw and tf: one file per doc-range shard, keyed by docId. */
+  private[index] def docLayout(shardSize: Int) = Some(IceLite.FileLayout("docId", shardSize))
+  /** postings: one file per shard. */
+  private[index] val postingsLayout = Some(IceLite.FileLayout("shard", 1))
+  /** terms: each file records its termId range (appends number new terms
+    * after the max without a scan). */
+  private[index] val termsLayout = Some(IceLite.FileLayout("termId"))
+
+  /** Stage tf: the TF kernel over the committed docs_raw. */
+  private[index] def commitTf(spark: SparkSession, root: String, catalog: TableCatalog,
+                              zones: Option[ZoneConfig], shardSize: Int,
+                              props: Map[String, String] = Map.empty): IceLite.Snapshot =
+    catalog.commit(spark,
+      IndexBuild.tfFromDocs(catalog.read(spark, table(root, "docs_raw")), zones),
+      table(root, "tf"), props = props, layout = docLayout(shardSize))
+
+  /** Stage terms: the global dictionary over the committed tf. */
+  private[index] def commitTerms(spark: SparkSession, root: String, catalog: TableCatalog,
+                                 partitions: Int,
+                                 props: Map[String, String] = Map.empty): IceLite.Snapshot =
+    CacheScope { scope =>
+      catalog.commit(spark,
+        IndexBuild.termDict(spark, catalog.read(spark, table(root, "tf")), partitions, scope),
+        table(root, "terms"), props = props, layout = termsLayout)
+    }
+
+  /** Stage terms_by_role: scope-local df over the committed tf. */
+  private[index] def commitTermsByRole(spark: SparkSession, root: String, catalog: TableCatalog,
+                                       props: Map[String, String] = Map.empty): IceLite.Snapshot =
+    catalog.commit(spark, IndexBuild.termsByRole(catalog.read(spark, table(root, "tf"))),
+      table(root, "terms_by_role"), props = props)
+
+  /** Stage stats: exact sums over the committed docs_raw and tf. A cold
+    * build lists its roles sorted; with `appendRoles` the roles already
+    * in stats.json keep their position (see [[writeStats]]). */
+  private[index] def commitStats(spark: SparkSession, root: String, catalog: TableCatalog,
+                                 appendRoles: Boolean = false,
+                                 extra: Map[String, String] = Map.empty): CorpusStats = {
+    val totalTurns = catalog.currentSnapshot(table(root, "docs_raw"))
+      .flatMap(_.props.get("totalTurns")).map(_.toLong).getOrElse(0L)
+    val sums = IndexBuild.corpusSums(catalog.read(spark, table(root, "docs_raw")),
+      catalog.read(spark, table(root, "tf")))
+    writeStats(root, sums, totalTurns, appendRoles, extra)
+  }
+
+  /** Stage postings: every shard's segments from the committed tables. */
+  private[index] def commitPostings(spark: SparkSession, root: String, catalog: TableCatalog,
+                                    shardSize: Int,
+                                    props: Map[String, String] = Map.empty): IceLite.Snapshot = {
+    val idx = loadRelational(spark, root, catalog)
+    val maxDocId = catalog.currentSnapshot(table(root, "docs_raw"))
+      .flatMap(s => IceLite.maxKey(s.files)).getOrElse(PostingIndex.maxDocId(idx))
+    // record the per-build packed-key split next to the manifest
+    // (derived from the corpus' max docId — see PostingIndex): purely
+    // observational (the key never outlives the build job), but it
+    // makes "what layout did this build use" auditable after the fact
+    val (shardBits, termBits) = PostingIndex.splitFor(maxDocId / shardSize)
+    Files.write(Paths.get(root, "postings_meta.json"),
+      (s"""{"shardSize":$shardSize,"shardBits":$shardBits,""" +
+        s""""termBits":$termBits,"codec":"delta-varint-v2"}""")
+        .getBytes("UTF-8"))
+    catalog.commit(spark, PostingIndex.build(spark, idx, shardSize, Some(maxDocId)).toDF(),
+      table(root, "postings"), props = props, layout = postingsLayout)
+  }
+
+  /** stats.json with the exact per-role sums (`sumDl`, `roleDl.<role>`)
+    * an append updates by delta. With `appendRoles` the role dictionary
+    * is APPEND-ONLY: roles already listed keep their position (posting
+    * blocks encode roleIds as positions and kept shards are never
+    * re-encoded); new roles go at the end, sorted among themselves; a
+    * role with no docs left stays listed. */
+  private[index] def writeStats(root: String, sums: Map[String, DocSums], totalTurns: Long,
+                                appendRoles: Boolean,
+                                extra: Map[String, String] = Map.empty): CorpusStats = {
+    val (stats, byRole) = IndexBuild.statsFromSums(sums, totalTurns)
+    val oldRoles =
+      if (!appendRoles) Nil
+      else readStats(root).flatMap(_.get("roles")).map(decodeRoles).getOrElse(Nil)
+    val roles = oldRoles ++ (byRole.keySet -- oldRoles).toSeq.sorted
+    val payload = Map(
+      "n" -> stats.n.toString, "avgdl" -> stats.avgdl.toString,
+      "totalTurns" -> stats.totalTurns.toString,
+      "skippedBlank" -> stats.skippedBlank.toString,
+      "roles" -> encodeRoles(roles),
+      "sumDl" -> sums.valuesIterator.filter(_.n > 0).map(_.sumDl).sum.toString) ++
+      byRole.map { case (r, (n, a)) => s"role.$r" -> s"$n:$a" } ++
+      sums.collect { case (r, d) if d.n > 0 => s"roleDl.$r" -> d.sumDl.toString } ++
+      extra
+    val tmp = Paths.get(root, "stats.json.tmp")
+    Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(payload))
+    Files.move(tmp, Paths.get(root, "stats.json"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    stats
+  }
+
+  private[index] def readStats(root: String): Option[Map[String, String]] = {
+    val p = Paths.get(root, "stats.json")
+    if (!Files.exists(p)) None else Some(mapper.readValue(p.toFile, stringMapRef))
+  }
+
+  /** The exact per-role sums stats.json records (None: written before
+    * the sums were kept). */
+  private[index] def statsSums(stats: Map[String, String]): Option[Map[String, DocSums]] =
+    if (!stats.contains("sumDl")) None
+    else Some(stats.collect { case (k, v) if k.startsWith("role.") =>
+      val role = k.stripPrefix("role.")
+      role -> DocSums(v.split(":")(0).toLong, stats(s"roleDl.$role").toLong)
+    })
+
   /** Load the relational index tables from a build root. */
   def loadRelational(spark: SparkSession, root: String,
                      catalog: TableCatalog = IceLite): BuiltIndex = {
     def table(name: String) = Paths.get(root, name).toString
-    val statsMap: Map[String, String] =
-      mapper.readValue(Paths.get(root, "stats.json").toFile, stringMapRef)
+    val statsMap = readStats(root).getOrElse(
+      throw new IllegalStateException(s"no stats.json in $root"))
     val stats = CorpusStats(statsMap("n").toLong, statsMap("avgdl").toDouble,
       statsMap("totalTurns").toLong, statsMap("skippedBlank").toLong)
     val byRole = statsMap.collect { case (k, v) if k.startsWith("role.") =>

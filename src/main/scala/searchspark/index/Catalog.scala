@@ -18,7 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Contract:
   *  - `commit` atomically publishes `df` as the table's next snapshot
   *    and returns its metadata record; readers concurrent with a commit
-  *    see either the old or the new snapshot, never a mix;
+  *    see either the old or the new snapshot, never a mix. `layout`
+  *    clusters the written files by shard and records each file's key
+  *    range;
   *  - `read` resolves the current snapshot (or a pinned id — time
   *    travel) to an immutable file set;
   *  - `currentSnapshot` exposes the record (props carry build lineage
@@ -28,7 +30,8 @@ trait TableCatalog {
   def commit(spark: SparkSession, df: DataFrame, table: String,
              operation: String = "overwrite",
              props: Map[String, String] = Map.empty,
-             partitions: Option[Int] = None): IceLite.Snapshot
+             partitions: Option[Int] = None,
+             layout: Option[IceLite.FileLayout] = None): IceLite.Snapshot
   def read(spark: SparkSession, table: String,
            snapshotId: Option[Long] = None): DataFrame
   def currentSnapshot(table: String): Option[IceLite.Snapshot]
@@ -73,7 +76,8 @@ object DirCatalog extends TableCatalog {
   override def commit(spark: SparkSession, df: DataFrame, table: String,
                       operation: String = "overwrite",
                       props: Map[String, String] = Map.empty,
-                      partitions: Option[Int] = None): IceLite.Snapshot = {
+                      partitions: Option[Int] = None,
+                      layout: Option[IceLite.FileLayout] = None): IceLite.Snapshot = {
     val parent = currentSnapshot(table)
     Files.createDirectories(Paths.get(table))
     val existing = {
@@ -86,15 +90,11 @@ object DirCatalog extends TableCatalog {
     }
     val id = (existing ++ parent.map(_.snapshotId)).foldLeft(-1L)(math.max) + 1
     val dataDir = Paths.get(table, s"snap-$id")
-    if (Files.exists(dataDir)) { // debris from a crashed writer (no record committed)
-      Files.walk(dataDir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
-    val out = partitions.map(df.repartition(_)).getOrElse(df)
-    out.write.mode("errorifexists").parquet(dataDir.toString)
-    val files = IceLite.footerEntries(spark, dataDir)
+    // debris from a crashed writer (no record committed)
+    if (Files.exists(dataDir)) IceLite.deleteTree(dataDir)
+    val files = IceLite.writeFiles(spark, df, dataDir, partitions, layout)
     val snap = IceLite.Snapshot(id, parent.map(_.snapshotId).getOrElse(-1L),
-      operation, files.map(_.rows).sum, files, props)
+      operation, files.map(_.rows).sum, files, props, Some(df.schema.json))
     val tmp = Paths.get(table, s"snap-$id.json.tmp")
     Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(snap))
     Files.move(tmp, Paths.get(table, s"snap-$id.json"),
@@ -114,6 +114,6 @@ object DirCatalog extends TableCatalog {
       case None => currentSnapshot(table).getOrElse(
         throw new IllegalStateException(s"no current snapshot in $table"))
     }
-    spark.read.parquet(snap.files.map(_.path): _*)
+    IceLite.readFiles(spark, snap, snap.files)
   }
 }

@@ -1,6 +1,7 @@
 package searchspark.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, struct, trim}
 import org.apache.spark.sql.types._
 
 import searchspark.model.Turn
@@ -55,7 +56,8 @@ final case class KeyWin(conv_id: String, turn_idx: Int, role: String,
   * each evaluate the input plan once and must see identical partition
   * layouts; plans containing their own exchanges (e.g. join outputs)
   * can legally re-coalesce between evaluations under AQE — such callers
-  * (Incremental's delta path) use [[assignViaRangeExchange]] instead.
+  * use [[assignViaRangeExchange]] instead (Incremental ranks its fresh
+  * keys with a window over the resolved delta).
   * The zip walk verifies every routed address resolves and fails loudly
   * on a violation rather than mis-assigning.
   *
@@ -75,6 +77,12 @@ object DocIds {
     StructField("ts", TimestampType, nullable = true),
     StructField("text", StringType, nullable = true)))
 
+  /** A turn is indexable when its text is not blank. */
+  def indexable: Column = col("text").isNotNull && trim(col("text")) =!= ""
+
+  /** The per-key winner is the max of this tuple over indexable rows. */
+  def payload: Column = struct(col("ts"), col("role"), col("tool"), col("text"))
+
   /** The SINGLE deterministic key-dedup used by cold builds AND
     * incremental deltas (they must agree or cold-vs-incremental
     * equivalence breaks): keep the max (ts, role, tool, text) tuple per
@@ -83,11 +91,11 @@ object DocIds {
     * dropDuplicates' arbitrary-row pick. Blank-text turns (the
     * failed-fetch analog, Link.java:110-116) are excluded. */
   def dedupIndexable(turns: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, max, struct, trim}
+    import org.apache.spark.sql.functions.{coalesce, lit, max}
     turns
-      .filter(col("text").isNotNull && trim(col("text")) =!= "")
+      .filter(indexable)
       .groupBy("conv_id", "turn_idx")
-      .agg(max(struct(col("ts"), col("role"), col("tool"), col("text"))).as("v"))
+      .agg(max(payload).as("v"))
       .select(col("conv_id"), col("turn_idx"),
         // null roles normalized to "" AT INGEST: every downstream
         // role-keyed structure (role dictionary, per-posting roleIds,
@@ -100,15 +108,18 @@ object DocIds {
     * shuffle path (see class doc). Returns only the docs DataFrame;
     * [[assignWithMeta]] additionally exposes the narrow per-doc winner
     * table so the build's stats jobs never have to re-walk the texts. */
-  def assign(spark: SparkSession, turns: Dataset[Turn], partitions: Int): DataFrame =
-    assignWithMeta(spark, turns, partitions)._1
+  def assign(spark: SparkSession, turns: Dataset[Turn], partitions: Int,
+             scope: CacheScope): DataFrame =
+    assignWithMeta(spark, turns, partitions, scope)._1
 
   /** [[assign]] plus the cached NARROW per-doc metadata
     * (docId, conv_id, turn_idx, role, tool, ts) — one row per surviving
     * doc, winner values, role normalized. Scanning it costs nothing
-    * text-shaped; IndexBuild.corpusStats runs on it. */
+    * text-shaped; IndexBuild.corpusStats runs on it. Both frames read
+    * the winners cached in `scope`: release it only after the docs are
+    * materialized. */
   def assignWithMeta(spark: SparkSession, turns: Dataset[Turn],
-                     partitions: Int): (DataFrame, DataFrame) = {
+                     partitions: Int, scope: CacheScope): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -205,7 +216,7 @@ object DocIds {
       }
     }
     // rank over the (still range-sorted) winners; caches the narrow rows
-    val winners0 = ZipIndex.rankOverSorted(perKey.toDF(), "docId")
+    val winners0 = ZipIndex.rankOverSorted(perKey.toDF(), "docId", scope)
 
     // ---- contested fix-up: exact max-(ts, role, tool, text) tie-break,
     // evaluated only over the (normally zero) tied keys — the one case
@@ -318,12 +329,10 @@ object DocIds {
 
   /** The single-exchange fused form (round-3's design): key-dedup fused
     * into ZipIndex's range shuffle — ONE wide exchange of the full rows.
-    * Kept for (a) inputs that violate [[assign]]'s repeatable-scan
-    * contract (Incremental's join-derived deltas — tiny, so the wide
-    * exchange is irrelevant there) and (b) as the independent
-    * cross-check form StabilitySpec pins the zip path against. */
+    * Kept as the independent cross-check form StabilitySpec pins the zip
+    * path against. */
   def assignViaRangeExchange(spark: SparkSession, turns: Dataset[Turn],
-                             partitions: Int): DataFrame = {
+                             partitions: Int, scope: CacheScope): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val sortedDedup = turns.toDF()
@@ -339,7 +348,7 @@ object DocIds {
         coalesce(col("__v.role"), lit("")).as("role"),
         col("__v.tool").as("tool"), col("__v.ts").as("ts"),
         col("__v.text").as("text"))
-    ZipIndex.rankOverSorted(sortedDedup, "docId")
+    ZipIndex.rankOverSorted(sortedDedup, "docId", scope)
       .select("docId", "conv_id", "turn_idx", "role", "tool", "ts", "text")
   }
 }

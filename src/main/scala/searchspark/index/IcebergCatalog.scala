@@ -33,7 +33,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    reports null, matching IceLite's "no parent" encoding; totalRows
   *    from the `total-records` summary; the per-file list stays empty —
   *    Iceberg owns file-level lineage and `read` never consumes it);
-  *  - `read(snapshotId = Some(id))` → `VERSION AS OF id`.
+  *  - `read(snapshotId = Some(id))` → `VERSION AS OF id`;
+  *  - `layout` is ignored (the table's own partition spec decides the
+  *    files).
   */
 final class IcebergCatalog(catalogName: String,
                            defaultNamespace: String = "searchspark")
@@ -85,7 +87,8 @@ final class IcebergCatalog(catalogName: String,
   override def commit(spark: SparkSession, df: DataFrame, table: String,
                       operation: String = "overwrite",
                       props: Map[String, String] = Map.empty,
-                      partitions: Option[Int] = None): IceLite.Snapshot = {
+                      partitions: Option[Int] = None,
+                      layout: Option[IceLite.FileLayout] = None): IceLite.Snapshot = {
     val id = ident(table)
     val ns = id.split('.').dropRight(1).mkString(".")
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $ns")

@@ -14,6 +14,9 @@ import searchspark.query.Scoring
   * dl/avgdl ratio BM25 consumes is scale-invariant. */
 final case class CorpusStats(n: Long, avgdl: Double, totalTurns: Long, skippedBlank: Long)
 
+/** Exact sums over one role's docs: doc count and Σ dlE1. */
+final case class DocSums(n: Long, sumDl: Long)
+
 /** One uncompressed posting row as emitted by the TF kernel (field
   * order IS the tf table's column order). */
 final case class TfRow(docId: Long, role: String, dlE1: Long, term: String, tfE1: Int)
@@ -28,7 +31,8 @@ final case class BuiltIndex(
     termsByRole: DataFrame, // role, term, df              (scope-local df)
     stats: CorpusStats,
     statsByRole: Map[String, (Long, Double)], // role -> (N, avgdlE1)
-    roleList: Seq[String] = Nil) { // APPEND-ONLY role dictionary order
+    roleList: Seq[String] = Nil, // APPEND-ONLY role dictionary order
+    caches: CacheScope = new CacheScope) { // the build's own caches
 
   /** Compact role ids for the posting codec / scoped scans: position in
     * the APPEND-ONLY `roleList` (cold build: sorted distinct roles;
@@ -46,6 +50,7 @@ final case class BuiltIndex(
   }
   def unpersist(): Unit = {
     docs.unpersist(); tf.unpersist(); terms.unpersist(); termsByRole.unpersist()
+    caches.release()
   }
 }
 
@@ -219,12 +224,16 @@ object IndexBuild {
 
   /** Stage: term dictionary — df = distinct docs (tf rows are unique per
     * (docId, term)), cf = Σ tfE1 (E1 units); termId = rank in term sort
-    * order (stable across parallelism, same zipWithIndex as DocIds). */
-  def termDict(spark: SparkSession, tf: DataFrame, partitions: Int): DataFrame = {
+    * order (stable across parallelism, same zipWithIndex as DocIds).
+    * Appends keep these ids and number new terms after the max
+    * (Incremental), so termId is the cold build's rank only until the
+    * first append. The ranks read a sort cached in `scope`. */
+  def termDict(spark: SparkSession, tf: DataFrame, partitions: Int,
+               scope: CacheScope): DataFrame = {
     val termAgg = tf.groupBy("term")
       .agg(count(lit(1)).as("df"), sum("tfE1").as("cf"))
     ZipIndex.withRank(termAgg, Seq(col("term")),
-        math.max(1, partitions / 4), "termId")
+        math.max(1, partitions / 4), "termId", scope)
       .select("term", "termId", "df", "cf")
   }
 
@@ -243,15 +252,8 @@ object IndexBuild {
     // range shuffle + sort — serially re-paying fixed costs that drown
     // the parallel speedup (measured: 0.36 scaling efficiency uncached
     // at 8→32 cores vs near-linear cached).
-    def phase[T](name: String)(body: => T): T =
-      if (!sys.env.contains("SPARK_GRAFT_PHASE_TIMING")) body
-      else {
-        val s = System.nanoTime()
-        val r = body
-        System.err.println(f"[build-phase] $name: ${(System.nanoTime() - s) / 1e9}%.2f s")
-        r
-      }
-    val timing = sys.env.contains("SPARK_GRAFT_PHASE_TIMING")
+    // The caches belong to the returned index: `unpersist()` releases them.
+    val caches = new CacheScope
     // Input caching is for REPEATABILITY cost, not correctness (the
     // two-pass docId assignment anchors one RDD instance either way).
     // A plain file/table scan is re-scanned instead of cached: the
@@ -263,25 +265,22 @@ object IndexBuild {
     // join-derived or generated input) still caches to pin its layout.
     val inputIsTableScan = isRepeatableScan(turns.queryExecution.optimizedPlan)
     val turnsCached = if (inputIsTableScan) turns else turns.cache()
-    val totalTurns = phase("scan+count")(turnsCached.count())
+    val totalTurns = turnsCached.count()
     // Zero-text-shuffle assignment: the narrow key pass runs eagerly
     // inside assignWithMeta (rank prefix sums); the text-bearing zip
     // output stays LAZY and materializes exactly once — into the TF
     // kernel below. keyMeta is the cached narrow winner table; every
     // later per-doc question (stats role counts) reads it instead of
     // re-walking texts.
-    val (docsRaw, keyMeta) =
-      phase("docIds")(DocIds.assignWithMeta(spark, turnsCached, partitions))
-    val tf = tfFromDocs(docsRaw, zones).cache()
-    if (timing) phase("tf")(tf.count())
-    val terms = termDict(spark, tf, partitions)
-    if (timing) phase("dict")(terms.count())
+    val (docsRaw, keyMeta) = DocIds.assignWithMeta(spark, turnsCached, partitions, caches)
+    val tf = caches.cache(tfFromDocs(docsRaw, zones))
+    val terms = termDict(spark, tf, partitions, caches)
     val byRoleDf = termsByRole(tf)
 
-    val (stats, byRole) = phase("stats")(corpusStats(keyMeta, tf, totalTurns))
+    val (stats, byRole) = corpusStats(keyMeta, tf, totalTurns)
     if (!inputIsTableScan) turnsCached.unpersist()
     BuiltIndex(docsRaw, tf, terms, byRoleDf, stats, byRole,
-      roleList = byRole.keys.toSeq.sorted)
+      roleList = byRole.keys.toSeq.sorted, caches = caches)
   }
 
   /** Global + per-role scalar stats. avgdl (E1 units) = exact Long sum /
@@ -296,29 +295,37 @@ object IndexBuild {
     * the pipeline's stats stage passes the persisted docs_raw (parquet
     * column pruning reads role only). */
   def corpusStats(docMeta: DataFrame, tf: DataFrame, totalTurns: Long)
-    : (CorpusStats, Map[String, (Long, Double)]) = {
+    : (CorpusStats, Map[String, (Long, Double)]) =
+    statsFromSums(corpusSums(docMeta, tf), totalTurns)
+
+  /** The exact Long sums behind [[corpusStats]], per role. */
+  def corpusSums(docMeta: DataFrame, tf: DataFrame): Map[String, DocSums] = {
     // ONE job total (global scalars derived from the per-role rollups):
     // every extra driver job here is serial time paid identically at
     // every cluster size — pure Amdahl loss on the scaling criterion.
     // The doc-count side scans docsRaw (zero-term docs must count) and
     // the dl side scans tf; a left join runs both aggregations as one
     // job (roles are a handful of rows — the join is a broadcast).
-    val roleRows = docMeta.groupBy("role").agg(count(lit(1)).as("n"))
+    docMeta.groupBy("role").agg(count(lit(1)).as("n"))
       .join(tf.groupBy("role").agg(sum("tfE1").as("sumdl")), Seq("role"), "left")
       .collect()
-    val roleN = roleRows
-      .map(r => Option(r.getString(0)).getOrElse("") -> r.getLong(1)).toMap
-    val roleDl = roleRows.filter(!_.isNullAt(2))
-      .map(r => Option(r.getString(0)).getOrElse("") -> r.getLong(2)).toMap
-    val nDocs = roleN.valuesIterator.sum
-    val sumDl = roleDl.valuesIterator.sum
+      .map(r => Option(r.getString(0)).getOrElse("") ->
+        DocSums(r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
+      .toMap
+  }
+
+  /** Corpus stats from exact per-role sums; roles without docs drop out.
+    * An append keeps the sums by delta and derives the same Doubles a
+    * full recompute would. */
+  def statsFromSums(byRole: Map[String, DocSums], totalTurns: Long)
+    : (CorpusStats, Map[String, (Long, Double)]) = {
+    val live = byRole.filter(_._2.n > 0)
+    val nDocs = live.valuesIterator.map(_.n).sum
+    val sumDl = live.valuesIterator.map(_.sumDl).sum
     val stats = CorpusStats(nDocs,
       if (nDocs == 0) 0.0 else sumDl.toDouble / nDocs,
       totalTurns, totalTurns - nDocs)
-    val byRole = roleN.map { case (role, n) =>
-      role -> (n, roleDl.getOrElse(role, 0L).toDouble / n)
-    }
-    (stats, byRole)
+    (stats, live.map { case (role, s) => role -> (s.n, s.sumDl.toDouble / s.n) })
   }
 
   /** True iff the plan is a bare FILE scan (optionally wrapped in

@@ -10,9 +10,9 @@ import searchspark.model.TermPostings
   * is the segment build's dominant shuffle cost — the optimized build
   * is memory-bandwidth-bound at high parallelism, and every UnsafeRow
   * slot removed is bandwidth returned to the encode (one extra 8-byte
-  * slot alone measured ~14% on the whole phase; the term string and df
-  * are attached by a dictionary join on the ~|groups|-row output
-  * instead of riding on every posting).
+  * slot alone measured ~14% on the whole phase; the term string is
+  * attached by a dictionary join on the ~|groups|-row output instead of
+  * riding on every posting).
   *
   * key  = shard << termBits | termId, where the split is DERIVED PER
   *        BUILD from the corpus' actual max shard id (round-4 VERDICT
@@ -36,7 +36,7 @@ import searchspark.model.TermPostings
   *        word and caught by the kernel's roleId check) */
 final case class PostingRowPacked(key: Long, docId: Long, meta: Long, dlE1: Long)
 
-/** Encoded segment group before the dictionary attach. */
+/** Encoded segment group before the term attach. */
 final case class SegGroup(shard: Int, termId: Long, blocks: Array[searchspark.model.PostingBlock])
 
 /** The compressed, sharded posting-list index (SURVEY.md §3.2 build
@@ -51,9 +51,10 @@ final case class SegGroup(shard: Int, termId: Long, blocks: Array[searchspark.mo
   *    shard and the merged tops).
   *
   * At 10^12 turns: shardSize ~2^20 → ~10^6 shards; per-(shard,term)
-  * encode groups stay ≤ 2^20 entries; the postings table is written
-  * sorted by (termId) within files so a query's isin(termIds) prunes
-  * row groups (min/max stats) before any decode.
+  * encode groups stay ≤ 2^20 entries. termId is only the encode's
+  * packed sort key: the rows it emits are (shard, term, blocks), and
+  * the postings table is written one file per shard (BuildPipeline),
+  * so an append replaces the files of the shards it touches.
   */
 object PostingIndex {
 
@@ -71,20 +72,26 @@ object PostingIndex {
     (shardBits, 63 - shardBits)
   }
 
-  /** The split [[build]] will use for this index + shardSize — one
-    * narrow max(docId) agg. Exposed so BuildPipeline can record the
-    * split in the build manifest. */
-  def shardSplit(idx: BuiltIndex, shardSize: Int): (Int, Int) = {
+  /** The largest docId in `idx.tf` — one narrow max(docId) agg. */
+  def maxDocId(idx: BuiltIndex): Long = {
     val r = idx.tf.agg(max(col("docId"))).head
-    val maxDocId = if (r.isNullAt(0)) 0L else r.getLong(0)
-    splitFor(maxDocId / shardSize)
+    if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
+  /** The split [[build]] will use for this index + shardSize. Exposed
+    * so BuildPipeline can record the split in the build manifest. */
+  def shardSplit(idx: BuiltIndex, shardSize: Int): (Int, Int) =
+    splitFor(maxDocId(idx) / shardSize)
+
   /** Build compressed posting segments from the relational index.
-    * Everything distributed: one join tf⋈dl⋈terms, one groupBy on
-    * (shard, termId) whose group size is bounded by shardSize. */
+    * Everything distributed: one join tf⋈terms, one groupBy on
+    * (shard, termId) whose group size is bounded by shardSize.
+    * `maxDocId` sizes the packed key; the caller passes it when it
+    * already knows it (an append reads it from file footers), else one
+    * agg job finds it. */
   def build(spark: SparkSession, idx: BuiltIndex,
-            shardSize: Int = DefaultShardSize): Dataset[TermPostings] = {
+            shardSize: Int = DefaultShardSize,
+            maxDocId: Option[Long] = None): Dataset[TermPostings] = {
     import spark.implicits._
     // role-dictionary guard (round-2 ADVICE, high): a role present in
     // the corpus but absent from the dictionary must fail the build
@@ -119,7 +126,8 @@ object PostingIndex {
     // on binary rows with codegen, and rows become objects exactly
     // once, inside the encode kernel. Group size stays bounded by
     // shardSize, so the run buffer is bounded too.
-    val (shardBits, termBits) = shardSplit(idx, shardSize)
+    val (shardBits, termBits) =
+      splitFor(maxDocId.getOrElse(PostingIndex.maxDocId(idx)) / shardSize)
     val shardCol = (col("docId") / shardSize).cast("long").as("shard")
     val keyCol = when(col("shard") >= (1L << shardBits) || col("termId") >= (1L << termBits),
         raise_error(concat(lit("posting key overflow: shard="),
@@ -175,11 +183,11 @@ object PostingIndex {
           }
         }
       }
-    // dictionary attach on the GROUP rows (|shards|·|terms-per-shard|,
-    // orders of magnitude fewer than postings)
+    // term attach on the GROUP rows (|shards|·|terms-per-shard|, orders
+    // of magnitude fewer than postings); termId goes no further
     groups.toDF()
-      .join(idx.terms.select(col("termId"), col("term"), col("df")), Seq("termId"))
-      .select(col("shard"), col("termId"), col("term"), col("df"), col("blocks"))
+      .join(idx.terms.select(col("termId"), col("term")), Seq("termId"))
+      .select(col("shard"), col("term"), col("blocks"))
       .as[TermPostings]
   }
 }

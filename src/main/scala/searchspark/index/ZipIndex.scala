@@ -26,14 +26,15 @@ import org.apache.spark.sql.functions._
 object ZipIndex {
 
   /** Returns df + a dense `name` rank column ordered by `sortCols`.
-    * The sorted intermediate stays cached for the session (callers
-    * doing repeated timed runs should clear the cache between runs). */
+    * The sorted intermediate is cached in `scope`: the ranks are only
+    * valid over that cached layout, so release the scope after the
+    * result has been materialized (written, collected or cached). */
   def withRank(df: DataFrame, sortCols: Seq[Column], partitions: Int,
-               name: String): DataFrame =
+               name: String, scope: CacheScope): DataFrame =
     rankOverSorted(
       df.repartitionByRange(partitions, sortCols: _*)
         .sortWithinPartitions(sortCols: _*),
-      name)
+      name, scope)
 
   /** The rank-assignment half of [[withRank]] for callers that already
     * hold a range-partitioned, within-partition-sorted DataFrame (e.g.
@@ -42,10 +43,8 @@ object ZipIndex {
     * in one partition, partitions ordered by key range, rows sorted
     * within each partition — rank = prefix-sum(partition counts) +
     * in-partition index is the global rank under that contract. */
-  def rankOverSorted(presorted: DataFrame, name: String): DataFrame = {
-    val sorted = presorted
-      .withColumn("__pid", spark_partition_id())
-      .cache()
+  def rankOverSorted(presorted: DataFrame, name: String, scope: CacheScope): DataFrame = {
+    val sorted = scope.cache(presorted.withColumn("__pid", spark_partition_id()))
     val counts = sorted.groupBy("__pid").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val maxPid = if (counts.isEmpty) 0 else counts.keys.max

@@ -78,12 +78,13 @@ final case class PostingBlock(
 
 /** Posting list of one term within one doc-range shard. Shards are
   * docId ranges (docId / shardSize), so query-time intersection is
-  * shard-local (scatter-gather top-k, no cross-shard shuffle). */
+  * shard-local (scatter-gather top-k, no cross-shard shuffle). A row
+  * holds nothing global: df and termId live only in the `terms` table,
+  * so a shard an append does not touch keeps its rows unchanged and
+  * they can never contradict the dictionary. */
 final case class TermPostings(
     shard: Int,
-    termId: Long,
     term: String,
-    df: Long,
     blocks: Array[PostingBlock])
 
 /** Scored search hit (API parity with the reference's response rows:

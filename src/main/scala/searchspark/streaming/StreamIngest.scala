@@ -19,15 +19,16 @@ import searchspark.model.Turn
   * `readStream` source (files landing in a directory, Kafka, …) feeds
   * `foreachBatch`, and each batch runs [[Incremental.append]]: replaced
   * keys keep their docId, new keys append, only touched doc-range
-  * shards rebuild their segments, and every table lands as a NEW IceLite
-  * snapshot — concurrent readers stay snapshot-isolated and a search
-  * engine reopened after any batch sees a complete, consistent index.
+  * shards get new files, and every table lands as a NEW IceLite
+  * snapshot — a search engine reopened after any batch sees a complete,
+  * consistent index.
   *
   * Exactly-once at the index level: Spark's checkpoint gives at-least-
   * once `foreachBatch` delivery; a batch-id high-watermark recorded
   * ATOMICALLY in the index root after each append makes replays no-ops,
   * so a crash between append and checkpoint commit cannot double-apply
-  * (the append itself is atomic via the IceLite pointer swap).
+  * (an append interrupted before its docs_raw commit is re-derived from
+  * docs_raw by the next one — see Incremental).
   */
 object StreamIngest {
 
@@ -72,13 +73,14 @@ object StreamIngest {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Apply one micro-batch (exposed for tests / manual batches). */
+  /** Apply one micro-batch (exposed for tests / manual batches). An
+    * empty batch commits nothing: the append's first job finds no keys. */
   def applyBatch(spark: SparkSession, root: String, batch: Dataset[Turn],
                  batchId: Long, partitions: Int,
                  checkpointId: String = "default"): Boolean = {
     if (batchId <= lastApplied(root, checkpointId)) false // replay after crash → no-op
     else {
-      if (!batch.isEmpty) Incremental.append(spark, root, batch, partitions)
+      Incremental.append(spark, root, batch, partitions)
       recordApplied(root, checkpointId, batchId)
       true
     }

@@ -3,7 +3,7 @@ package searchspark
 import org.scalatest.funsuite.AnyFunSuite
 
 import searchspark.gen.TranscriptGen
-import searchspark.index.{DocIds, IndexBuild, PostingIndex}
+import searchspark.index.{CacheScope, DocIds, IndexBuild, PostingIndex}
 
 /** Pipeline invariants (FIXTURES.md §5 / SURVEY.md §5.5-5.6):
   * parallelism-invariant ids, per-turn text equality, skew bounds. */
@@ -27,11 +27,11 @@ class StabilitySpec extends AnyFunSuite {
   }
 
   test("docId assignment is invariant to partitioning (SURVEY §7.3)") {
-    val a = DocIds.assign(spark, ds, partitions = 2)
-      .select("docId", "conv_id", "turn_idx").collect()
+    val a = CacheScope(DocIds.assign(spark, ds, partitions = 2, _)
+      .select("docId", "conv_id", "turn_idx").collect())
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).sortBy(_._1).toSeq
-    val b = DocIds.assign(spark, ds, partitions = 11)
-      .select("docId", "conv_id", "turn_idx").collect()
+    val b = CacheScope(DocIds.assign(spark, ds, partitions = 11, _)
+      .select("docId", "conv_id", "turn_idx").collect())
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).sortBy(_._1).toSeq
     assert(a == b)
     // dense ranks in key order
@@ -66,13 +66,13 @@ class StabilitySpec extends AnyFunSuite {
       .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
     // the zero-text-shuffle zip path (incl. its contested tie-break:
     // (c2,1) ties on (ts, role, tool) and only the texts differ) ...
-    val fused = rowsOf(DocIds.assign(spark, dsDup, partitions = 3))
+    val fused = CacheScope(s => rowsOf(DocIds.assign(spark, dsDup, partitions = 3, s)))
     // ... must agree with BOTH independent forms: the single-exchange
     // fused window form and the groupBy-max spec form
-    val viaExchange = rowsOf(DocIds.assignViaRangeExchange(spark, dsDup, 3))
-    val unfused = rowsOf(searchspark.index.ZipIndex.withRank(
+    val viaExchange = CacheScope(s => rowsOf(DocIds.assignViaRangeExchange(spark, dsDup, 3, s)))
+    val unfused = CacheScope(s => rowsOf(searchspark.index.ZipIndex.withRank(
       DocIds.dedupIndexable(dsDup.toDF()),
-      Seq(col("conv_id"), col("turn_idx")), 3, "docId"))
+      Seq(col("conv_id"), col("turn_idx")), 3, "docId", s)))
     assert(fused == unfused)
     assert(viaExchange == unfused)
     assert(fused.size == 5) // one row per surviving key; blanks gone
@@ -93,7 +93,8 @@ class StabilitySpec extends AnyFunSuite {
 
   test("TF kernel == declarative groupBy form, unzoned and zoned") {
     import searchspark.model.ZoneConfig
-    val docsRaw = DocIds.assign(spark, ds, partitions = 3)
+    val scope = new CacheScope
+    val docsRaw = DocIds.assign(spark, ds, partitions = 3, scope)
     def rowsOf(df: org.apache.spark.sql.DataFrame) = df
       .select("docId", "role", "dlE1", "term", "tfE1").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3), r.getInt(4)))
@@ -103,6 +104,7 @@ class StabilitySpec extends AnyFunSuite {
     val z = Some(ZoneConfig(titleTokens = 5))
     assert(rowsOf(IndexBuild.tfFromDocs(docsRaw, z)) ==
       rowsOf(IndexBuild.tfFromDocsDeclarative(docsRaw, z)))
+    scope.release()
   }
 
   test("uncached parquet build == in-memory build (cache-skip path, ADVICE r4)") {

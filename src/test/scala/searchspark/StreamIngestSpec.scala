@@ -49,6 +49,7 @@ class StreamIngestSpec extends AnyFunSuite {
     val tfIncr = IceLite.read(spark, java.nio.file.Paths.get(root, "tf").toString)
     val tfFull = IndexBuild.tfFromDocs(docsRaw)
     assert(tfIncr.exceptAll(tfFull).count() == 0 && tfFull.exceptAll(tfIncr).count() == 0)
+    IndexChecks.assertDictionaryIsRecompute(spark, root)
 
     // postings decode-identical to a from-scratch segment build
     val idx = BuildPipeline.loadRelational(spark, root)

@@ -30,7 +30,7 @@ class WandSpec extends AnyFunSuite {
 
   test("segment build covers every term exactly once per shard") {
     import spark.implicits._
-    val perTerm = postings.groupByKey(p => (p.shard, p.termId)).count().collect()
+    val perTerm = postings.groupByKey(p => (p.shard, p.term)).count().collect()
     assert(perTerm.forall(_._2 == 1))
     // total postings across segments == tf row count
     val totalPostings = postings.collect().map(_.blocks.map(_.count).sum.toLong).sum
@@ -58,16 +58,7 @@ class WandSpec extends AnyFunSuite {
   test("term-stats dictionary cache: warm query identical, one fewer Spark job") {
     val q = QueryFixtures.deriveQueries(oracle).find(_.scope.isEmpty).get
 
-    // every job `body` submits carries a fresh job group; the status
-    // tracker lists the group's jobs once the listener bus has drained
-    def countJobs(body: => Unit): Int = {
-      val sc = spark.sparkContext
-      val group = s"wandspec-${java.util.UUID.randomUUID()}"
-      sc.setJobGroup(group, "jobs of one query")
-      try body finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
+    def countJobs(body: => Unit): Int = IndexChecks.countJobs(spark.sparkContext)(body)
 
     val cold = engine.search(q.query, None, q.offset, q.limit) // fills the cache
     var warm: searchspark.model.SearchResult = null
