@@ -246,8 +246,8 @@ object Incremental {
             .select(col("term"),
               (lit(maxTermId) + row_number().over(Window.orderBy("term"))).as("termId"),
               col("dDf").as("df"), col("dCf").as("cf"))
-          commit("terms", kept.unionByName(added).filter(col("df") > 0), Nil,
-            BuildPipeline.termsLayout)
+          commit("terms", keepFileCount(termsSnap0, kept.unionByName(added).filter(col("df") > 0)),
+            Nil, BuildPipeline.termsLayout)
         })
         val tbrSnap = fork(step("terms_by_role") {
           val tbrSnap0 = snapshot("terms_by_role")
@@ -256,7 +256,7 @@ object Incremental {
             .select(col("role"), col("term"),
               (coalesce(col("df"), lit(0L)) + coalesce(col("dDf"), lit(0L))).as("df"))
             .filter(col("df") > 0)
-          commit("terms_by_role", tbr, Nil, None)
+          commit("terms_by_role", keepFileCount(tbrSnap0, tbr), Nil, None)
         })
         // postings: rebuild the touched shards from their new tf files
         val postSnap0 = snapshot("postings")
@@ -294,6 +294,12 @@ object Incremental {
       }
     }
   }
+
+  /** `df` in as many files as `snap` has: every query's df lookup scans
+    * the dictionary tables with one task per file, so a merge must not
+    * multiply them. */
+  private def keepFileCount(snap: Snapshot, df: DataFrame): DataFrame =
+    df.coalesce(math.max(1, snap.files.size))
 
   /** The largest key of a table, from its file entries when they record
     * it (else one agg; -1 when empty). */
