@@ -43,17 +43,9 @@ object Bench {
     // measurements whipsaw round-over-round on unchanged code (r4:
     // q3_relevance 1.78→3.33 s, siblings faster) — min-of-2 makes a
     // real regression distinguishable from a noise window.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
-        (System.nanoTime() - t0) / 1e9
-      }
-      name -> math.min(once(), once())
-    }
-    val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val (qs, errs, total) = queriesJson(SparkEntry.queries.toSeq.sortBy(_._1).map {
+      case (name, fn) => name -> timeMinOf2(() => fn(spark, sfDir).count())
+    })
 
     // the operator queries above leave caches behind (IVF memo, op-level
     // .cache() calls); evict them and settle the heap BEFORE the latency
@@ -190,7 +182,7 @@ object Bench {
     val exactCount = engine.search(headQ).count
     val approxCount = engine.search(headQ, exactTotal = false).count
 
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2","queries":$qs,"sf":"$sfDir","cpus":$cpus,"build_turns":${idx.stats.totalTurns},"build_sec":${f"$buildSec%.2f"},"build_protocol":"min_of_2_isolated","build_sec_runs":${buildSecRuns.map(s => f"$s%.2f").mkString("[", ",", "]")},"build_turns_per_sec":${f"$turnsPerSec%.0f"},"postings_rows":$nPostings,"query_p50_ms":${f"$p50%.1f"},"query_p95_ms":${f"$p95%.1f"},"latency_protocol":"best_of_4_windows_by_p95","latency_windows":$windowsJson,"scoped_p50_ms":${f"$p50Scoped%.1f"},"head_query_exact_ms":${f"$exactMs%.1f"},"head_query_approx_ms":${f"$approxMs%.1f"},"head_total_exact":$exactCount,"head_total_approx":$approxCount}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2","queries":$qs,"err":$errs,"sf":"$sfDir","cpus":$cpus,"build_turns":${idx.stats.totalTurns},"build_sec":${f"$buildSec%.2f"},"build_protocol":"min_of_2_isolated","build_sec_runs":${buildSecRuns.map(s => f"$s%.2f").mkString("[", ",", "]")},"build_turns_per_sec":${f"$turnsPerSec%.0f"},"postings_rows":$nPostings,"query_p50_ms":${f"$p50%.1f"},"query_p95_ms":${f"$p95%.1f"},"latency_protocol":"best_of_4_windows_by_p95","latency_windows":$windowsJson,"scoped_p50_ms":${f"$p50Scoped%.1f"},"head_query_exact_ms":${f"$exactMs%.1f"},"head_query_approx_ms":${f"$approxMs%.1f"},"head_total_exact":$exactCount,"head_total_approx":$approxCount}"""
     println(json)
     // stable on-disk copy (stdout additionally carries sbt noise when the
     // run is wrapped; BENCH_r01.json came back "parsed": null)
@@ -198,4 +190,34 @@ object Bench {
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
   }
+
+  /** Seconds of the faster of two runs of `run`, or the message of the
+    * first throw: a query that fails is reported, never timed. */
+  private[graft] def timeMinOf2(run: () => Unit): Either[String, Double] = {
+    def once(): Either[String, Double] = {
+      val t0 = System.nanoTime()
+      try { run(); Right((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable => Left(e.toString) }
+    }
+    once().flatMap(a => once().map(math.min(a, _)))
+  }
+
+  /** The artifact's `queries` object (seconds per timed query), its
+    * `err` object (message per failed query) and the total seconds,
+    * which sums the timed queries only. */
+  private[graft] def queriesJson(results: Seq[(String, Either[String, Double])])
+    : (String, String, Double) = {
+    val timed = results.collect { case (k, Right(v)) => k -> v }
+    val failed = results.collect { case (k, Left(e)) => k -> e }
+    (timed.map { case (k, v) => jsonString(k) + f":$v%.3f" }.mkString("{", ",", "}"),
+      failed.map { case (k, e) => jsonString(k) + ":" + jsonString(e) }.mkString("{", ",", "}"),
+      timed.map(_._2).sum)
+  }
+
+  private def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -1,12 +1,8 @@
 package searchspark.bench
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import searchspark.gen.TranscriptGen
-import searchspark.index.BuildPipeline
 import searchspark.ops.TextOps
 
 /** Physical-plan audit: dump formatted plans of the load-bearing
@@ -45,17 +41,6 @@ object PlanAudit {
         .select(col("vec_id"), col("embedding")))
     show("ann_batch_topk (full)",
       searchspark.ops.SimOps.annBatchTopK(emb, Seq(0L, 1L, 2L), 10))
-
-    // persisted-index query path: does the term filter prune the
-    // postings parquet scan?
-    val root = Files.createTempDirectory("planaudit").toString
-    import spark.implicits._
-    BuildPipeline.run(spark,
-      spark.createDataset(TranscriptGen.localCorpus(42L, 10)),
-      root, "gen:42:10", partitions = 2)
-    val postings = BuildPipeline.loadPostings(spark, root)
-    show("postings term filter (WAND scatter input)",
-      postings.filter(col("term").isInCollection(Seq("w0001", "w0002"))).toDF())
 
     spark.stop()
   }

@@ -36,8 +36,8 @@ package searchspark
   *    guards against driver-side job creep.
   *  - [[bench.AnnBench]] — typed cosine kernel vs interpreted
   *    expression at 256-dim (round-4 ANN rework).
-  *  - [[bench.PlanAudit]] / [[bench.PlanPeek]] — dump physical plans
-  *    of the driver queries / one op for the BENCH.md plan audit
+  *  - [[bench.PlanAudit]] — dump physical plans of the driver
+  *    queries for the BENCH.md plan audit
   *    (read-only; the enforced version of these checks lives in
   *    PlanGuardSpec).
   *

@@ -124,6 +124,19 @@ object Segments {
     (docs, tfs, dls, roles)
   }
 
+  /** Postings of one block whose roleId is `roleId`: a scan of the roles
+    * column alone (docs, tfs and dls stay encoded). */
+  def countRole(b: PostingBlock, roleId: Int): Int = {
+    var n = 0
+    var p = 0
+    while (p < b.roles.length) {
+      val (r, np) = readVarLong(b.roles, p)
+      if (r == roleId) n += 1
+      p = np
+    }
+    n
+  }
+
   /** Decode a whole posting list to (docIds, tfE1s, dlE1s, roleIds). */
   def decodeAll(blocks: Array[PostingBlock]): (Array[Long], Array[Int], Array[Long], Array[Int]) = {
     val n = blocks.map(_.count).sum

@@ -413,8 +413,13 @@ object SimOps {
     val qIds = queryIds.distinct.sorted
     val qRows = emb.filter(col("vec_id").isInCollection(qIds))
       .select(col("vec_id"), col("embedding")).collect()
-    require(qRows.length == qIds.length,
-      s"query vec_ids ${qIds.diff(qRows.map(_.getLong(0)).toSeq).mkString(",")} not found in the embeddings relation")
+    val found = qRows.map(_.getLong(0))
+    val missing = qIds.filterNot(found.toSet)
+    require(missing.isEmpty,
+      s"query vec_ids ${missing.mkString(",")} not found in the embeddings relation")
+    val duplicated = found.diff(found.distinct).distinct.sorted
+    require(duplicated.isEmpty,
+      s"query vec_ids ${duplicated.mkString(",")} occur more than once in the embeddings relation")
     val qs: Array[(Long, Array[Double], Double)] = qRows.map { r =>
       val v = r.getSeq[Float](1).toArray.map(_.toDouble)
       var s = 0.0; var i = 0

@@ -16,7 +16,10 @@ import searchspark.model.{SearchResult, TermPostings, Turn}
   * partition (a `term → rows` map and the shard's docs), persisted once.
   * A warm query is then ONE Spark job with no Catalyst plan: each task
   * scores its shards, and hydrates and snippets its own top k; the
-  * driver only merges, windows and normalizes relevance.
+  * driver only merges, windows and normalizes relevance. A cold query
+  * (a term not yet in the df cache) runs one more plain job over the
+  * same partitions to count df; the engine neither caches nor reads the
+  * `terms` / `terms_by_role` tables.
   *
   * Role-scoped queries take the SAME path: blocks carry per-posting
   * roleIds, and pruning bounds are computed at query time from
@@ -34,9 +37,12 @@ final class SearchEngine private (
 
   /** Driver-side term→df dictionary cache: the index is an immutable
     * snapshot, so df per term never changes for the lifetime of this
-    * facade. Repeat terms skip the term-stats Spark job entirely, so a
-    * warm query is the scatter job alone. Bounded: cleared if it ever
-    * exceeds MaxDfCache distinct terms. */
+    * facade. A term missing here is counted from the serving partitions'
+    * postings (SearchService.servingDf: one plain job, no Catalyst plan,
+    * no `terms` table), so a cold query is two jobs; repeat terms skip
+    * that job, so a warm query is the scatter job alone. Starts empty at
+    * every load. Bounded: cleared if it ever exceeds MaxDfCache distinct
+    * terms. */
   private val dfCache = scala.collection.concurrent.TrieMap.empty[String, Long]
   private val MaxDfCache = 1 << 20
 
@@ -48,13 +54,19 @@ final class SearchEngine private (
       Some(dfCache), scope, exactTotal)
   }
 
+  /** Each term's df, globally or within `scope`, as the engine's df
+    * lookup counts it from the serving partitions (0 = unknown; a scope
+    * without a roleId counts nothing). For checks against the
+    * dictionary tables; queries go through [[search]]. */
+  private[searchspark] def df(terms: Seq[String], scope: Option[String] = None): Map[String, Long] =
+    scope.fold(Option(-1))(idx.roleIds.get) match {
+      case Some(roleId) => SearchService.servingDf(serving, terms, roleId)
+      case None => terms.map(_ -> 0L).toMap
+    }
+
   /** Release everything this engine persisted: the serving partitions
-    * and the dictionary tables the df lookup reads. */
-  def close(): Unit = {
-    serving.unpersist()
-    idx.terms.unpersist()
-    idx.termsByRole.unpersist()
-  }
+    * (the only thing it persists). */
+  def close(): Unit = serving.unpersist()
 }
 
 object SearchEngine {
@@ -95,8 +107,6 @@ object SearchEngine {
       throw new IllegalArgumentException(
         s"shardSize $shardSize contradicts the postings' doc ranges: $built")
     }
-    idx.terms.cache()
-    idx.termsByRole.cache()
     new SearchEngine(spark, idx, shardSize, serving)
   }
 

@@ -2,6 +2,7 @@ package searchspark.query
 
 import scala.collection.mutable
 
+import searchspark.index.Segments
 import searchspark.model.TermPostings
 
 /** A doc as a hit returns it, plus the text its snippet is cut from. */
@@ -33,6 +34,16 @@ final class ServingPartition private (
   def rows(term: String): Array[TermPostings] = {
     val r = byTerm.get(term)
     if (r == null) ServingPartition.NoRows else r
+  }
+
+  /** The term's df within this partition's shards: all its postings when
+    * `roleId` < 0, else those of that role. 0 when the partition lacks it. */
+  def df(term: String, roleId: Int): Long = {
+    var n = 0L
+    rows(term).foreach(_.blocks.foreach { b =>
+      n += (if (roleId < 0) b.count else Segments.countRole(b, roleId))
+    })
+    n
   }
 
   /** The doc with this id, or null when this partition lacks it. */

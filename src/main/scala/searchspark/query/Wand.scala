@@ -121,7 +121,9 @@ object Wand {
   private type PartitionTop = (Long, Array[Hit])
 
   /** The query path: ONE Spark job and no Catalyst plan once the query's
-    * df values are cached (SearchEngine's dictionary cache). Each task
+    * df values are cached (SearchEngine's dictionary cache); a cold
+    * query adds the df lookup, one more plain job over the same
+    * partitions (SearchService.servingDf). Each task
     * looks up only the query's terms in its partition's term map, runs
     * [[wandShard]] per shard holding every term, folds the shards with
     * [[mergeShardTops]], and hydrates + snippets that partition's top k
@@ -134,19 +136,13 @@ object Wand {
                         dfCache: Option[scala.collection.concurrent.Map[String, Long]] = None,
                         scope: Option[String] = None,
                         exactTotal: Boolean = true): SearchResult = {
-    // scope-local stats flow through planTerms (unknown scope → n == 0 →
-    // "Nothing found" there); the roleIds lookup is still defensive: a
-    // scope present in statsByRole but missing from the role dictionary
-    // (corrupt stats.json) must answer empty, not throw
-    SearchService.planTerms(idx, query, scope, dfCache) match {
+    // scope-local stats and df flow through planTerms, which answers
+    // "Nothing found" for a scope without stats or without a roleId
+    SearchService.planTerms(idx, query, scope, dfCache, Some(serving)) match {
       case Left(err) => err
       case Right((surviving, dfMap, n, avgdl)) =>
         val k = offset + limit
-        val roleId = scope match {
-          case None => -1
-          case Some(r) => idx.roleIds.getOrElse(r,
-            return SearchResult(ok = false, 0, Nil, "Nothing found"))
-        }
+        val roleId = scope.fold(-1)(idx.roleIds)
         val idfByTerm = surviving.map(t => t -> Scoring.idf(dfMap(t), n)).toMap
         val termsAsc = surviving.sorted
         val byRarity = surviving.sortBy(t => (dfMap(t), t))

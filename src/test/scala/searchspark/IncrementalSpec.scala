@@ -155,6 +155,7 @@ class IncrementalSpec extends AnyFunSuite {
     val preIds = pre.terms.select("term", "termId").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(preIds.contains("qqzzyx") && pre.statsByRole.contains("auditor"))
+    IndexChecks.assertEngineDfIsDictionary(spark, root)
 
     // retract the solo doc, replace a turn, add a conversation
     val delta = Seq(solo.copy(text = ""),
@@ -163,6 +164,9 @@ class IncrementalSpec extends AnyFunSuite {
     val rep = Incremental.append(spark, root, ds(delta), partitions = 4)
     assert(rep.retracted == 1 && rep.replaced == 1 && rep.added > 0, s"$rep")
     IndexChecks.assertDictionaryIsRecompute(spark, root)
+    // the engine counts the retracted term as unknown, and nothing in the
+    // role whose last doc left
+    IndexChecks.assertEngineDfIsDictionary(spark, root, gone = Seq("qqzzyx"))
 
     val idx = BuildPipeline.loadRelational(spark, root)
     val ids = idx.terms.select("term", "termId").collect()
@@ -181,6 +185,7 @@ class IncrementalSpec extends AnyFunSuite {
     // the role comes back on a second append, which chains the generation
     Incremental.append(spark, root, ds(Seq(solo.copy(conv_id = "solo-conv-2"))), partitions = 4)
     IndexChecks.assertDictionaryIsRecompute(spark, root)
+    IndexChecks.assertEngineDfIsDictionary(spark, root)
     assert(BuildPipeline.loadRelational(spark, root).statsByRole.contains("auditor"))
     assert(snap(root, "docs_raw").props(Incremental.Generation) == "2")
   }

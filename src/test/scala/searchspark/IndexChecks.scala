@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions.{count, lit, sum}
 import org.scalatest.Assertions._
 
 import searchspark.index.{BuildPipeline, IceLite, IndexBuild}
+import searchspark.query.SearchEngine
 
 /** Checks shared by the append specs. */
 object IndexChecks {
@@ -31,6 +32,41 @@ object IndexChecks {
     val (stats, byRole) = IndexBuild.corpusStats(docsRaw, tfFull, idx.stats.totalTurns)
     assert(idx.stats == stats, s"stats ${idx.stats} != full recompute $stats")
     assert(idx.statsByRole == byRole, s"per-role stats ${idx.statsByRole} != full recompute $byRole")
+  }
+
+  /** The engine loaded from `root` counts the same df from its serving
+    * partitions as the dictionary tables hold: for every term of `terms`
+    * its df, and in every role (those of `roleIds`, a role without docs
+    * included) every term's df in `terms_by_role`, 0 where the table has
+    * no row. `gone` names terms that left the dictionary (df 0): the
+    * engine must count them 0, i.e. unknown, globally and in every role. */
+  def assertEngineDfIsDictionary(spark: SparkSession, root: String,
+                                 gone: Seq[String] = Nil): Unit = {
+    val engine = SearchEngine.load(spark, root)
+    try {
+      val idx = engine.idx
+      val df = idx.terms.select("term", "df").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(gone.forall(t => !df.contains(t)), s"fixture sanity: $gone must have left `terms`")
+      val probe = df.keys.toSeq ++ gone
+      def check(what: String, got: Map[String, Long], table: Map[String, Long]): Unit = {
+        val wrong = probe.filter(t => !got.get(t).contains(table.getOrElse(t, 0L)))
+        if (wrong.nonEmpty) fail(s"engine df != $what for ${wrong.size} terms, e.g. " +
+          wrong.take(5).map(t => s"$t: ${got.get(t)} vs ${table.getOrElse(t, 0L)}").mkString(", "))
+      }
+      check("`terms`", engine.df(probe), df)
+      val byRole = idx.termsByRole.select("role", "term", "df").collect()
+        .groupMap(_.getString(0))(r => r.getString(1) -> r.getLong(2)).view.mapValues(_.toMap).toMap
+      (idx.roleIds.keySet ++ byRole.keySet).foreach { role =>
+        check(s"`terms_by_role` in role $role", engine.df(probe, Some(role)), byRole.getOrElse(role, Map.empty))
+      }
+    } finally engine.close()
+  }
+
+  /** SQL executions the session has started, once the listener bus has
+    * delivered every event. */
+  def sqlExecutions(spark: SparkSession): Long = {
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sharedState.statusStore.executionsCount()
   }
 
   /** Jobs `body` submits, counted through a job group once the listener

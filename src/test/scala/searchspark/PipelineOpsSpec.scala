@@ -2,7 +2,7 @@ package searchspark
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import searchspark.ops.{EventOps, TextOps}
+import searchspark.ops.{EventOps, SimOps, TextOps}
 
 /** PII scrub + decontamination behavior on crafted fixtures (the
   * testdata corpus contains no PII, so the driver query only pins
@@ -55,6 +55,21 @@ class PipelineOpsSpec extends AnyFunSuite {
       (1L, 3L, 1L, 333333L), // 1·10⁶ div 3
       (2L, 1L, 0L, 0L),
       (3L, 0L, 0L, 0L)))
+  }
+
+  test("annBatchTopK names query vec_ids missing from the embeddings") {
+    import spark.implicits._
+    val emb = Seq((0L, Array(1f, 0f)), (1L, Array(0f, 1f))).toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](SimOps.annBatchTopK(emb, Seq(1L, 7L, 9L), 1))
+    assert(e.getMessage.contains("vec_ids 7,9 not found"), e.getMessage)
+  }
+
+  test("annBatchTopK names query vec_ids duplicated in the embeddings") {
+    import spark.implicits._
+    val emb = Seq((0L, Array(1f, 0f)), (1L, Array(0f, 1f)), (1L, Array(1f, 1f)), (2L, Array(1f, 2f)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](SimOps.annBatchTopK(emb, Seq(0L, 1L), 1))
+    assert(e.getMessage.contains("vec_ids 1 occur more than once"), e.getMessage)
   }
 
   test("sessionize: gap splits, tie order, integer sums, one exchange") {

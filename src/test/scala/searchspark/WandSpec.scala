@@ -73,6 +73,37 @@ class WandSpec extends AnyFunSuite {
     assert(missJobs == 1, s"warm query with an unknown term: $missJobs jobs")
   }
 
+  test("a cold query is two plain jobs and no SQL execution; a warm one is one job") {
+    val sc = spark.sparkContext
+    val fresh = SearchEngine(spark, idx, postings, shardSize = 512) // empty df cache
+    try {
+      val qs = QueryFixtures.deriveQueries(oracle)
+      Seq(qs.find(_.scope.isEmpty).get, qs.find(_.scope.nonEmpty).get).foreach { q =>
+        val execs = IndexChecks.sqlExecutions(spark)
+        var cold: searchspark.model.SearchResult = null
+        val coldJobs = IndexChecks.countJobs(sc) { cold = fresh.search(q.query, q.scope, q.offset, q.limit) }
+        assert(cold.ok, s"fixture sanity: ${q.id} must answer")
+        assert(coldJobs == 2, s"cold ${q.id} (scope ${q.scope}): $coldJobs jobs, want df lookup + scatter")
+        assert(IndexChecks.sqlExecutions(spark) == execs, s"cold ${q.id} started a SQL execution")
+        val warmJobs = IndexChecks.countJobs(sc) { fresh.search(q.query, q.scope, q.offset, q.limit) }
+        assert(warmJobs == 1, s"warm ${q.id} (scope ${q.scope}): $warmJobs jobs")
+      }
+    } finally fresh.close()
+  }
+
+  test("a scope with stats but no roleId answers Nothing found without a job") {
+    val role = idx.statsByRole.keys.min
+    val noRoleId = SearchEngine(spark, idx.copy(roleList = Seq("no-such-role")), postings,
+      shardSize = 512)
+    try {
+      assert(!noRoleId.idx.roleIds.contains(role) && idx.statsByRole.contains(role))
+      var r: searchspark.model.SearchResult = null
+      val jobs = IndexChecks.countJobs(spark.sparkContext) { r = noRoleId.search("w0001", Some(role)) }
+      assert(!r.ok && r.error == "Nothing found", s"$r")
+      assert(jobs == 0, s"$jobs jobs")
+    } finally noRoleId.close()
+  }
+
   test("scoped WAND (role filter in-scan, scope-local bounds) == oracle") {
     val spec = new RankIdentitySpec
     QueryFixtures.deriveQueries(oracle).filter(_.scope.nonEmpty).foreach { q =>
@@ -216,6 +247,13 @@ class WandSpec extends AnyFunSuite {
     assert(loaded.search("w0001 w0002").ok)
     loaded.search("w0001 w0002", scope = Some("user"))
     assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, "fixture sanity: the engine persists")
+    // the df lookup reads the serving partitions, so the dictionary
+    // tables stay uncached
+    val cached = spark.sharedState.cacheManager
+    Seq("terms" -> loaded.idx.terms, "terms_by_role" -> loaded.idx.termsByRole).foreach { case (t, df) =>
+      assert(cached.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty,
+        s"the engine cached $t")
+    }
     loaded.close()
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"RDDs still persisted after close(): " +
