@@ -20,8 +20,9 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    // tmpfs shuffle dir when available — single-host disk contention
-    // across local[n] tasks is a sandbox artifact (see BuildBench)
+    // tmpfs shuffle dir when available: on one host every local[n]
+    // task contends on ONE disk for shuffle files, which a cluster's
+    // executors, each with its own local disk, would not
     val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
     if (new java.io.File(localDir).getParentFile.isDirectory)
       builder.config("spark.local.dir", localDir)
@@ -59,8 +60,7 @@ object Bench {
     // The corpus is materialized BEFORE the timer — BASELINE.json's
     // metric is build throughput over an EXISTING transcripts table
     // (input_hint), and synthesis is the sandbox stand-in for that
-    // table, not part of the build. Same methodology as BuildBench
-    // (the scaling-study artifact); the timed region still includes
+    // table, not part of the build. The timed region still includes
     // the scan of the cached table (IndexBuild's own count + reads).
     val turns = TranscriptGen.corpus(spark, TranscriptGen.DefaultSeed,
       benchConvs.toLong, cpus.toInt * 2).cache()
@@ -107,8 +107,7 @@ object Bench {
     // materialization.
     (1 to 3).foreach(_ => queries.foreach(q => engine.search(q)))
 
-    // NOISE-GATED WINDOWS (same discipline as tools/run_scaling_gated.sh,
-    // which already gates the scaling study): this host shows multi-second
+    // NOISE-GATED WINDOWS: a shared host shows multi-second
     // windows where identical work slows 3-10x, and a single 120-sample
     // latency window has no defense — r4's driver artifact recorded p95
     // 459 ms against 110-129 in back-to-back manual runs because one noise
@@ -165,7 +164,7 @@ object Bench {
     val headQ = headTerms.mkString(" ")
     // warm BOTH total modes: the approx branch has its own code paths,
     // and timing it cold against a JIT-hot exact branch fabricates a
-    // gap (graft.HeadProbe shows the two within noise once both warm)
+    // gap
     engine.search(headQ)
     engine.search(headQ, exactTotal = false)
     def time(body: => Unit): Double = {
@@ -173,7 +172,7 @@ object Bench {
     }
     // interleaved reps + min per mode: host-noise windows span whole
     // seconds, so back-to-back blocks of one mode absorb different noise
-    // and fabricate mode gaps (HeadProbe pins the two within noise)
+    // and fabricate mode gaps
     val headSamples = (1 to 7).map { _ =>
       (time(engine.search(headQ)), time(engine.search(headQ, exactTotal = false)))
     }

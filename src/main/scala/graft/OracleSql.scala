@@ -381,12 +381,14 @@ object OracleSql {
          |SELECT id::BIGINT AS doc_id, min(rep)::BIGINT AS cluster_rep
          |FROM comp GROUP BY id ORDER BY doc_id""".stripMargin,
 
-    // tumbling-window rollup over events: integer epoch-micros
-    // bucketing (ts_us // window) so both engines land every event in
-    // the same bucket exactly
+    // tumbling-window rollup over events: integer epoch-micros floor
+    // (ts_us − ts_us mod⁺ window; `//` truncates toward zero, which would
+    // put a pre-1970 event in the window after it) so both engines land
+    // every event in the same bucket exactly
     "events_windowed" ->
       """WITH e AS (
-        |  SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS window_start_us,
+        |  SELECT epoch_us(ts) - (((epoch_us(ts) % 3600000000) + 3600000000) % 3600000000)
+        |           AS window_start_us,
         |         event_type, user_id, floor(value * 100)::BIGINT AS value_e2
         |  FROM events
         |)

@@ -5,9 +5,9 @@ import searchspark.gen.TranscriptGen
 import searchspark.index.BuildPipeline
 import searchspark.query.SearchEngine
 
-/** One-off: persisted (IceLite + parquet + checkpointed) build at 4x the
-  * scaling-bench corpus, then reopen from disk and query — the full
-  * cold-start story at ~2M turns. */
+/** One-off: persisted (IceLite + parquet + checkpointed) build of an
+  * 80,000-conversation corpus, then reopen from disk and query — the
+  * full cold-start story at ~2M turns. */
 object BigBuild {
   def main(args: Array[String]): Unit = {
     val convs = args.lift(0).map(_.toLong).getOrElse(80000L)

@@ -195,9 +195,8 @@ object BuildPipeline {
     try {
     stage("docs_raw") {
       val totalTurns = turns.count()
-      // Sort-on-write, one file per doc-range shard: a docId lookup (the
-      // parity path's page hydration, SearchService: docId isin(ids))
-      // prunes files and row groups via parquet min/max stats instead of
+      // Sort-on-write, one file per doc-range shard: a docId lookup
+      // (docId isin(ids)) prunes files and row groups via parquet min/max stats instead of
       // scanning every file (PlanGuardSpec pins it), and an append
       // rewrites only the shards it touches. The engine reads the whole
       // table once, at load, into its serving partitions.

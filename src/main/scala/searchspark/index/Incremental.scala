@@ -296,9 +296,8 @@ object Incremental {
   }
 
   /** `df` in as many files as `snap` has: every reader of the dictionary
-    * tables (the next append's merge, the parity path's df lookup,
-    * StatsService) scans them with one task per file, so a merge must
-    * not multiply them. */
+    * tables (the next append's merge, StatsService) scans them with
+    * one task per file, so a merge must not multiply them. */
   private def keepFileCount(snap: Snapshot, df: DataFrame): DataFrame =
     df.coalesce(math.max(1, snap.files.size))
 

@@ -28,8 +28,10 @@ object EventOps {
 
   /** Tumbling-window temporal rollup: per (window, event_type), the
     * event count, distinct-user count, and integer value sum. The
-    * window is pure integer arithmetic — `bucket = ts_us div windowUs`,
-    * start = bucket · windowUs — so Spark and DuckDB agree exactly
+    * window is pure integer arithmetic — start = ts_us − pmod(ts_us,
+    * windowUs), the floor, so a pre-1970 event lands in the window that
+    * contains it (truncating `div` would round it up toward the epoch)
+    * — so Spark and DuckDB agree exactly
     * (Spark's `window()` function and DuckDB's `time_bucket` would each
     * round through their own timestamp types; integer division of epoch
     * micros sidesteps both).
@@ -45,9 +47,10 @@ object EventOps {
       col("event_type"),
       col("user_id"),
       floor(col("value") * 100).cast("long").as("value_e2"))
-      // integer `div`, never double division: at epoch-micro magnitudes
-      // a double quotient can land on the wrong side of a bucket edge
-      .select((expr(s"ts_us div ${windowUs}L") * windowUs).as("window_start_us"),
+      // integer floor via pmod, never double division: at epoch-micro
+      // magnitudes a double quotient can land on the wrong side of a
+      // bucket edge
+      .select(expr(s"ts_us - pmod(ts_us, ${windowUs}L)").as("window_start_us"),
         col("event_type"), col("user_id"), col("value_e2"))
       .groupBy("window_start_us", "event_type")
       .agg(

@@ -1,8 +1,8 @@
 package searchspark.query
 
 /** The scoring contract (SURVEY.md §7.4) — single source of truth for
-  * the scalar oracle, the DataFrame parity path, the block-max WAND
-  * engine, and the block maxScore metadata written at build time.
+  * the scalar oracle, the block-max WAND engine, and the block maxScore
+  * metadata written at build time.
   *
   * BM25 with fixed k1=1.2, b=0.75:
   *   score(d, q) = Σ_{t ∈ q'} idf(t) · tf / (tf + k1·(1 − b + b·dl/avgdl))
@@ -30,7 +30,7 @@ object Scoring {
   /** The 0.85 prune in exact integer arithmetic (df·100 < 85·N), the
     * same form as the oracle SQL's `df * 100 < 85 * n` — a double
     * division could disagree with it exactly at the threshold. Single
-    * source of truth for the oracle, parity, and WAND paths. */
+    * source of truth for the oracle and WAND paths. */
   def survivesPrune(df: Long, n: Long): Boolean = df * 100 < 85 * n
 
   def idf(df: Long, n: Long): Double =
@@ -40,8 +40,8 @@ object Scoring {
     * E1 integers; a single-zone build stores tfE1 = 10·tf, and
     * (10·tf)/10.0 is EXACTLY tf in IEEE doubles). Note the dl term is
     * only scale-invariant up to the last ulp — fl((10S)/n) need not be
-    * 10·fl(S/n) — which is fine because EVERY scoring path (engine,
-    * parity, scalar oracle) computes in the same E1 units; rank identity
+    * 10·fl(S/n) — which is fine because BOTH scoring paths (engine,
+    * scalar oracle) compute in the same E1 units; rank identity
     * is between them, never against a token-unit reformulation. */
   val TfScaleE1 = 10
 

@@ -24,8 +24,7 @@ import searchspark.model.{SearchResult, TermPostings, Turn}
   * Role-scoped queries take the SAME path: blocks carry per-posting
   * roleIds, and pruning bounds are computed at query time from
   * (maxTfE1, minDl) + scope-local idf/avgdl, which is a valid upper
-  * bound under any stats (Scoring.blockBound). The parity path
-  * (SearchService) remains as the declarative cross-check.
+  * bound under any stats (Scoring.blockBound).
   *
   * `exactTotal=false` opts into estimated totals for head queries
   * (top-k stays exact; see Wand). */
@@ -50,8 +49,7 @@ final class SearchEngine private (
              offset: Int = 0, limit: Int = 20,
              exactTotal: Boolean = true): SearchResult = {
     if (dfCache.size > MaxDfCache) dfCache.clear()
-    Wand.searchPartitioned(idx, serving, query, offset, limit,
-      Some(dfCache), scope, exactTotal)
+    Wand.searchPartitioned(idx, serving, dfCache, query, scope, offset, limit, exactTotal)
   }
 
   /** Each term's df, globally or within `scope`, as the engine's df

@@ -17,10 +17,10 @@ import searchspark.analyze.Analyzer
   * reference NPEs (its `k` stays null, SearchingServiceImpl.java:152);
   * we return an empty snippet instead.
   *
-  * Pure function of (text, terms): the engine path calls it on the
+  * Pure function of (text, terms): the engine calls it on the
   * executors, over each partition's ≤(offset+limit) top-k docs only
-  * (Wand.partitionTop); the parity path calls it on the driver over the
-  * result page (the reference likewise snippets only the result page).
+  * (Wand.partitionTop); the reference likewise snippets only the result
+  * page.
   */
 object Snippets {
 

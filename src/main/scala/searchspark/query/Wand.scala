@@ -12,8 +12,8 @@ import searchspark.model.{Hit, PostingBlock, SearchResult, TermPostings}
   * (SearchingServiceImpl.java:181-213 iterated IN-list intersection +
   * :103-133 relevance CTEs), executed as per-shard scatter-gather:
   *
-  *  - driver: analyze + prune query terms (same planTerms as the parity
-  *    path — Q1 semantics); per-term idf under the CURRENT stats —
+  *  - driver: analyze + prune query terms (SearchService.planTerms —
+  *    Q1 semantics); per-term idf under the CURRENT stats —
   *    global, or scope-local for role-scoped queries (the reference's
   *    site filter, SearchingServiceImpl.java:52);
   *  - executors: for each doc-range shard, intersect the query terms'
@@ -48,7 +48,7 @@ import searchspark.model.{Hit, PostingBlock, SearchResult, TermPostings}
   *    docs ([[ServingPartition]]);
   *  - driver: merge per-partition tops, window, normalize relevance.
   *
-  * Scores are bit-identical to the oracle/parity path: per-term partials
+  * Scores are bit-identical to the scalar oracle: per-term partials
   * summed in ascending TERM order (intersection order ≠ summation
   * order). */
 object Wand {
@@ -132,13 +132,12 @@ object Wand {
     * The `collect` stays in this method: the benchmark's tracer names
     * the scatter phase after it. */
   def searchPartitioned(idx: BuiltIndex, serving: RDD[ServingPartition],
-                        query: String, offset: Int = 0, limit: Int = 20,
-                        dfCache: Option[scala.collection.concurrent.Map[String, Long]] = None,
-                        scope: Option[String] = None,
-                        exactTotal: Boolean = true): SearchResult = {
+                        dfCache: scala.collection.concurrent.Map[String, Long],
+                        query: String, scope: Option[String], offset: Int, limit: Int,
+                        exactTotal: Boolean): SearchResult = {
     // scope-local stats and df flow through planTerms, which answers
     // "Nothing found" for a scope without stats or without a roleId
-    SearchService.planTerms(idx, query, scope, dfCache, Some(serving)) match {
+    SearchService.planTerms(idx, serving, dfCache, query, scope) match {
       case Left(err) => err
       case Right((surviving, dfMap, n, avgdl)) =>
         val k = offset + limit

@@ -137,6 +137,19 @@ class PipelineOpsSpec extends AnyFunSuite {
       (hourUs, "view", 1L, 1L, 400L)))
   }
 
+  test("windowedCounts: a pre-1970 event lands in the window that contains it") {
+    import spark.implicits._
+    import java.sql.Timestamp
+    val H = 3600L * 1000L
+    val ev = Seq(
+      (1L, new Timestamp(-1L), 1L, "view", 1.0, "{}"), // 1 ms before the epoch
+      (2L, new Timestamp(-(H + 1L)), 2L, "view", 2.0, "{}")) // 1 h + 1 ms before
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val starts = EventOps.windowedCounts(ev).collect().map(r => (r.getLong(0), r.getLong(2)))
+    val hourUs = 3600L * 1000000L
+    assert(starts.toSeq == Seq((-2L * hourUs, 1L), (-hourUs, 1L)))
+  }
+
   private def fl2(x: Long): Long = 63L - java.lang.Long.numberOfLeadingZeros(x)
 
   test("unigramSurprisal = mean floored-log2 bits under the corpus unigram MLE") {

@@ -215,10 +215,9 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(p.contains("PushedFilters: [In(term, [w0001,w0002])]"),
       s"term filter must reach the parquet scan (row-group pruning):\n$p")
 
-    // A docId lookup (the parity path's page hydration, SearchService:
-    // docId isin(ids) over idx.docs) must prune on the persisted layout,
-    // not full-scan the texts (the engine path reads the docs once, at
-    // load, into its serving partitions instead): the
+    // A docId lookup (docId isin(ids) over idx.docs) must prune on the
+    // persisted layout, not full-scan the texts (the engine reads the
+    // docs once, at load, into its serving partitions instead): the
     // pipeline writes docs_raw range-partitioned + sorted by docId, so
     // the pushed In(docId, …) filter skips row groups via parquet
     // min/max stats. Pin BOTH halves: the pushdown reaches the scan,

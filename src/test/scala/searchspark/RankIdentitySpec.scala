@@ -3,10 +3,10 @@ package searchspark
 import org.scalatest.funsuite.AnyFunSuite
 
 import searchspark.gen.TranscriptGen
-import searchspark.index.IndexBuild
+import searchspark.index.{IndexBuild, PostingIndex}
 import searchspark.model.SearchResult
 import searchspark.oracle.ScalarOracle
-import searchspark.query.SearchService
+import searchspark.query.SearchEngine
 
 /** THE rank-identity gate (SURVEY.md §5.3, BASELINE.md row "query
   * correctness"): the Spark engine must return the oracle's docIDs AND
@@ -53,15 +53,15 @@ class RankIdentitySpec extends AnyFunSuite {
     assert(idx.terms.count() == oracle.termCount)
   }
 
-  test("parity path is rank-identical to the oracle on the query set") {
+  test("engine is rank-identical to the oracle on the query set (one default-size shard)") {
     val spark = TestSpark.spark
     val queries = QueryFixtures.deriveQueries(oracle)
     assert(queries.nonEmpty)
-    queries.foreach { q =>
+    val engine = SearchEngine(spark, idx, PostingIndex.build(spark, idx))
+    try queries.foreach { q =>
       val expect = oracle.search(q.query, q.scope, q.offset, q.limit)
-      val engine = SearchService.search(spark, idx, q.query, q.scope, q.offset, q.limit)
-      assertSame(q.id, engine, expect)
-    }
+      assertSame(q.id, engine.search(q.query, q.scope, q.offset, q.limit), expect)
+    } finally engine.close()
   }
 
   test("semantic branches hit what they should") {
