@@ -53,7 +53,9 @@ class RankIdentitySpec extends AnyFunSuite {
     assert(idx.terms.count() == oracle.termCount)
   }
 
-  test("engine is rank-identical to the oracle on the query set (one default-size shard)") {
+  // "Parity path": SearchEngine at its default shard size, which puts the
+  // ~2k-turn corpus in one shard.
+  test("parity path is rank-identical to the oracle on the query set") {
     val spark = TestSpark.spark
     val queries = QueryFixtures.deriveQueries(oracle)
     assert(queries.nonEmpty)
