@@ -21,14 +21,14 @@ import searchspark.model.{TermPostings, Turn, ZoneConfig}
   * skips every stage whose manifest record matches and whose output
   * table has a readable snapshot — so a killed build resumes from the
   * first missing stage and produces an index row-identical to a cold
-  * build (ResumeSpec proves it; with deterministic docIds/termIds the
-  * content doesn't depend on which run produced which stage).
+  * build (ResumeSpec proves it; with deterministic docIds the content
+  * doesn't depend on which run produced which stage).
   *
   * Stage graph:
   * {{{
   *   docs_raw   stable docId assignment over non-blank, deduped turns
   *   tf         analyzer projection + TF agg (carries role + dl)
-  *   terms      global dictionary (termId, df, cf)
+  *   terms      global dictionary (term, df, cf)
   *   terms_by_role  scope-local df
   *   stats      scalar stats JSON (n, avgdl, blanks, per-role, exact sums)
   *   postings   compressed segments, rows (shard, term, blocks)
@@ -211,7 +211,7 @@ object BuildPipeline {
       }
     }
     stage("tf") { commitTf(spark, root, catalog, zones, shardSize).totalRows }
-    stage("terms") { commitTerms(spark, root, catalog, partitions).totalRows }
+    stage("terms") { commitTerms(spark, root, catalog).totalRows }
     stage("terms_by_role") { commitTermsByRole(spark, root, catalog).totalRows }
     stage("stats") { commitStats(spark, root, catalog).n }
     stage("postings") { commitPostings(spark, root, catalog, shardSize).totalRows }
@@ -238,9 +238,6 @@ object BuildPipeline {
   private[index] def docLayout(shardSize: Int) = Some(IceLite.FileLayout("docId", shardSize))
   /** postings: one file per shard. */
   private[index] val postingsLayout = Some(IceLite.FileLayout("shard", 1))
-  /** terms: each file records its termId range (appends number new terms
-    * after the max without a scan). */
-  private[index] val termsLayout = Some(IceLite.FileLayout("termId"))
 
   /** Stage tf: the TF kernel over the committed docs_raw. */
   private[index] def commitTf(spark: SparkSession, root: String, catalog: TableCatalog,
@@ -252,13 +249,9 @@ object BuildPipeline {
 
   /** Stage terms: the global dictionary over the committed tf. */
   private[index] def commitTerms(spark: SparkSession, root: String, catalog: TableCatalog,
-                                 partitions: Int,
                                  props: Map[String, String] = Map.empty): IceLite.Snapshot =
-    CacheScope { scope =>
-      catalog.commit(spark,
-        IndexBuild.termDict(spark, catalog.read(spark, table(root, "tf")), partitions, scope),
-        table(root, "terms"), props = props, layout = termsLayout)
-    }
+    catalog.commit(spark, IndexBuild.termDict(catalog.read(spark, table(root, "tf"))),
+      table(root, "terms"), props = props)
 
   /** Stage terms_by_role: scope-local df over the committed tf. */
   private[index] def commitTermsByRole(spark: SparkSession, root: String, catalog: TableCatalog,
@@ -282,22 +275,10 @@ object BuildPipeline {
   /** Stage postings: every shard's segments from the committed tables. */
   private[index] def commitPostings(spark: SparkSession, root: String, catalog: TableCatalog,
                                     shardSize: Int,
-                                    props: Map[String, String] = Map.empty): IceLite.Snapshot = {
-    val idx = loadRelational(spark, root, catalog)
-    val maxDocId = catalog.currentSnapshot(table(root, "docs_raw"))
-      .flatMap(s => IceLite.maxKey(s.files)).getOrElse(PostingIndex.maxDocId(idx))
-    // record the per-build packed-key split next to the manifest
-    // (derived from the corpus' max docId — see PostingIndex): purely
-    // observational (the key never outlives the build job), but it
-    // makes "what layout did this build use" auditable after the fact
-    val (shardBits, termBits) = PostingIndex.splitFor(maxDocId / shardSize)
-    Files.write(Paths.get(root, "postings_meta.json"),
-      (s"""{"shardSize":$shardSize,"shardBits":$shardBits,""" +
-        s""""termBits":$termBits,"codec":"delta-varint-v2"}""")
-        .getBytes("UTF-8"))
-    catalog.commit(spark, PostingIndex.build(spark, idx, shardSize, Some(maxDocId)).toDF(),
+                                    props: Map[String, String] = Map.empty): IceLite.Snapshot =
+    catalog.commit(spark,
+      PostingIndex.build(spark, loadRelational(spark, root, catalog), shardSize).toDF(),
       table(root, "postings"), props = props, layout = postingsLayout)
-  }
 
   /** stats.json with the exact per-role sums (`sumDl`, `roleDl.<role>`)
     * an append updates by delta. With `appendRoles` the role dictionary

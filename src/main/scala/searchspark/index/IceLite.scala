@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * A snapshot is a FILE LIST, as in Iceberg: a commit may carry files of
   * the current snapshot over unchanged (`publish`'s `keep`) and add the
-  * files it writes. With a sharded [[IceLite.FileLayout]] each file holds one
+  * files it writes. With an [[IceLite.FileLayout]] each file holds one
   * doc-range shard and records its key range from the parquet footer,
   * so an append rewrites only the shards it touches and lists every
   * other file under its old path.
@@ -52,11 +52,11 @@ object IceLite extends TableCatalog {
   final case class FileEntry(path: String, bytes: Long, rows: Long,
                              keys: Option[KeyRange] = None)
 
-  /** How a commit lays out its files. Every file records its min/max of
-    * the Long or Int column `key`. With `shardSize > 0` every file also
-    * holds the rows of exactly one shard (`key / shardSize`), sorted by
-    * `key`, so an append can replace a shard's files and keep the rest. */
-  final case class FileLayout(key: String, shardSize: Long = 0)
+  /** How a commit lays out its files. Every file holds the rows of
+    * exactly one shard (`key / shardSize` of the Long or Int column
+    * `key`), sorted by `key`, and records its min/max of `key`, so an
+    * append can replace a shard's files and keep the rest. */
+  final case class FileLayout(key: String, shardSize: Long)
 
   /** `schema` is the rows' Spark schema as JSON (None: written before it
     * was recorded); reads pass it to the parquet reader, which then
@@ -185,7 +185,7 @@ object IceLite extends TableCatalog {
   private[index] def writeFiles(spark: SparkSession, df: DataFrame, dataDir: Path,
                                 partitions: Option[Int],
                                 layout: Option[FileLayout]): Seq[FileEntry] = {
-    layout.filter(_.shardSize > 0) match {
+    layout match {
       case Some(l) =>
         val shard = (col(l.key) / lit(l.shardSize)).cast("long")
         df.withColumn(ShardDir, shard)

@@ -43,13 +43,12 @@ import searchspark.model.Turn
   *  - `terms`, `terms_by_role` and the stats move by delta: per term and
   *    per (role, term), df/cf change by the rows added minus the rows
   *    removed among the touched docs; a term whose df reaches 0 is
-  *    dropped. Existing terms keep their termId; new terms are numbered
-  *    after the max, ranked among themselves. stats.json keeps exact
-  *    Long sums (docs and Σ dlE1 per role), so avgdl stays bit-identical
-  *    to a full recompute.
+  *    dropped. Both dictionaries are one full-outer merge of the old
+  *    table with the delta. stats.json keeps exact Long sums (docs and
+  *    Σ dlE1 per role), so avgdl stays bit-identical to a full recompute.
   *
-  * Posting rows carry no global value (no df, no termId), so a kept
-  * shard's rows cannot go stale. They stay SOUND under stat drift:
+  * Posting rows carry no global value (no df), so a kept shard's rows
+  * cannot go stale. They stay SOUND under stat drift:
   * blocks carry raw (maxTfE1, minDl) and Wand derives pruning bounds at
   * query time from the post-append idf/avgdl (Scoring.blockBound).
   *
@@ -84,6 +83,8 @@ object Incremental {
   private val Add = "add"
   private val Retract = "retract"
 
+  /** Apply `newTurns` to the index at `root`. `partitions` is not read:
+    * the append's work is sized by the shards it touches. */
   def append(spark: SparkSession, root: String, newTurns: Dataset[Turn],
              partitions: Int, shardSize: Int = 0): Report = {
     def table(name: String) = Paths.get(root, name).toString
@@ -111,7 +112,7 @@ object Incremental {
     val docsSnap0 = snapshot("docs_raw")
     val gen = docsSnap0.props.get(Generation).map(_.toLong).getOrElse(0L)
     step("rederive") {
-      if (!consistent(root, gen)) rederive(spark, root, zones, effShardSize, partitions, gen)
+      if (!consistent(root, gen)) rederive(spark, root, zones, effShardSize, gen)
     }
     val nextGen = Map(Generation -> (gen + 1).toString)
 
@@ -201,8 +202,7 @@ object Incremental {
 
         // The writes depend only on the resolved delta and its caches, so
         // they run side by side, each on its own thread (each is a handful
-        // of small stages); postings wait for the new tf files, termIds
-        // and role dictionary.
+        // of small stages); postings wait for the new tf files.
         // docs_raw is staged now and published LAST, as the append's
         // commit point, with the report (its own files included) in its props
         val (docsKeep, docsRepl) = split(docsSnap0.files, effShardSize)
@@ -232,29 +232,25 @@ object Incremental {
           commit("tf", union(tfOld.map(_.filter(dropOld)), Some(tfDelta)), tfKeep,
             BuildPipeline.docLayout(effShardSize))
         })
+        def plus(old: String, delta: String) =
+          coalesce(col(old), lit(0L)) + coalesce(col(delta), lit(0L))
         val termsSnap = fork(step("terms") {
           val termsSnap0 = snapshot("terms")
-          val termsOld = IceLite.readFiles(spark, termsSnap0, termsSnap0.files)
-          val maxTermId = maxOf(termsSnap0, termsOld, "termId")
-          val termDelta = dictDelta.groupBy("term").agg(sum("dDf").as("dDf"), sum("dCf").as("dCf"))
-          val kept = termsOld.join(termDelta, Seq("term"), "left")
-            .select(col("term"), col("termId"),
-              (col("df") + coalesce(col("dDf"), lit(0L))).as("df"),
-              (col("cf") + coalesce(col("dCf"), lit(0L))).as("cf"))
-          // new terms: numbered after the max, ranked among themselves
-          val added = termDelta.join(termsOld.select("term"), Seq("term"), "left_anti")
-            .select(col("term"),
-              (lit(maxTermId) + row_number().over(Window.orderBy("term"))).as("termId"),
-              col("dDf").as("df"), col("dCf").as("cf"))
-          commit("terms", keepFileCount(termsSnap0, kept.unionByName(added).filter(col("df") > 0)),
-            Nil, BuildPipeline.termsLayout)
+          // (term, df, cf) by name: the terms tables of roots written by
+          // earlier builds hold one more column, a numeric term id
+          val terms = IceLite.readFiles(spark, termsSnap0, termsSnap0.files)
+            .select("term", "df", "cf")
+            .join(dictDelta.groupBy("term").agg(sum("dDf").as("dDf"), sum("dCf").as("dCf")),
+              Seq("term"), "full_outer")
+            .select(col("term"), plus("df", "dDf").as("df"), plus("cf", "dCf").as("cf"))
+            .filter(col("df") > 0)
+          commit("terms", keepFileCount(termsSnap0, terms), Nil, None)
         })
         val tbrSnap = fork(step("terms_by_role") {
           val tbrSnap0 = snapshot("terms_by_role")
           val tbr = IceLite.readFiles(spark, tbrSnap0, tbrSnap0.files)
             .join(dictDelta.select("role", "term", "dDf"), Seq("role", "term"), "full_outer")
-            .select(col("role"), col("term"),
-              (coalesce(col("df"), lit(0L)) + coalesce(col("dDf"), lit(0L))).as("df"))
+            .select(col("role"), col("term"), plus("df", "dDf").as("df"))
             .filter(col("df") > 0)
           commit("terms_by_role", keepFileCount(tbrSnap0, tbr), Nil, None)
         })
@@ -264,13 +260,11 @@ object Incremental {
         val postKeep = split(postSnap0.files, 1L)._1
         try {
           val tfNew = tfSnap()
-          termsSnap()
           val postSnap = step("postings") {
             val tfTouched = IceLite.readFiles(spark, tfNew, tfNew.files.drop(tfKeep.size))
               .filter((col("docId") / effShardSize).cast("long").isin(touched.toSeq: _*))
             val idx = BuildPipeline.loadRelational(spark, root)
-            val rebuilt = PostingIndex.build(spark, idx.copy(tf = tfTouched), effShardSize,
-              Some(maxId + nAdded)).toDF()
+            val rebuilt = PostingIndex.build(spark, idx.copy(tf = tfTouched), effShardSize).toDF()
             commit("postings", rebuilt, postKeep, BuildPipeline.postingsLayout)
           }
 
@@ -333,10 +327,10 @@ object Incremental {
   /** Re-derive every table and the stats from docs_raw with the build's
     * own stage bodies, stamped with docs_raw's generation. */
   private def rederive(spark: SparkSession, root: String, zones: Option[searchspark.model.ZoneConfig],
-                       shardSize: Int, partitions: Int, gen: Long): Unit = {
+                       shardSize: Int, gen: Long): Unit = {
     val props = Map(Generation -> gen.toString)
     BuildPipeline.commitTf(spark, root, IceLite, zones, shardSize, props)
-    BuildPipeline.commitTerms(spark, root, IceLite, partitions, props)
+    BuildPipeline.commitTerms(spark, root, IceLite, props)
     BuildPipeline.commitTermsByRole(spark, root, IceLite, props)
     BuildPipeline.commitStats(spark, root, IceLite, appendRoles = true, extra = props)
     BuildPipeline.commitPostings(spark, root, IceLite, shardSize, props)

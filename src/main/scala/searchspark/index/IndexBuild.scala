@@ -27,7 +27,7 @@ final case class TfRow(docId: Long, role: String, dlE1: Long, term: String, tfE1
 final case class BuiltIndex(
     docs: DataFrame,        // docId, conv_id, turn_idx, role, tool, ts, text
     tf: DataFrame,          // docId, role, dlE1, term, tfE1 (uncompressed postings)
-    terms: DataFrame,       // term, termId, df, cf        (global dictionary)
+    terms: DataFrame,       // term, df, cf                (global dictionary)
     termsByRole: DataFrame, // role, term, df              (scope-local df)
     stats: CorpusStats,
     statsByRole: Map[String, (Long, Double)], // role -> (N, avgdlE1)
@@ -78,12 +78,12 @@ final case class BuiltIndex(
   *                                                     terms are a non-issue
   *                                                     because nothing is
   *                                                     grouped by term here)
-  *     → df per (role, term) and global               (partial agg over tf)
-  *     → terms dictionary with stable termId          (sort + zipWithIndex
-  *                                                     on the SMALL dict)
+  *     → df, cf per term and df per (role, term)      (partial aggs over tf;
+  *                                                     the dictionary is
+  *                                                     plain (term, df, cf))
   *
   * The only skew-sensitive step is the posting-SEGMENT build (collect a
-  * term's in-shard postings together, one packed-row exchange), which
+  * term's in-shard postings together, one (shard, term) exchange), which
   * Segments.scala bounds by sharding docId ranges — a term's group can
   * never exceed the shard size (SURVEY.md §7.5.2).
   */
@@ -223,19 +223,9 @@ object IndexBuild {
   }
 
   /** Stage: term dictionary — df = distinct docs (tf rows are unique per
-    * (docId, term)), cf = Σ tfE1 (E1 units); termId = rank in term sort
-    * order (stable across parallelism, same zipWithIndex as DocIds).
-    * Appends keep these ids and number new terms after the max
-    * (Incremental), so termId is the cold build's rank only until the
-    * first append. The ranks read a sort cached in `scope`. */
-  def termDict(spark: SparkSession, tf: DataFrame, partitions: Int,
-               scope: CacheScope): DataFrame = {
-    val termAgg = tf.groupBy("term")
-      .agg(count(lit(1)).as("df"), sum("tfE1").as("cf"))
-    ZipIndex.withRank(termAgg, Seq(col("term")),
-        math.max(1, partitions / 4), "termId", scope)
-      .select("term", "termId", "df", "cf")
-  }
+    * (docId, term)), cf = Σ tfE1 (E1 units). */
+  def termDict(tf: DataFrame): DataFrame =
+    tf.groupBy("term").agg(count(lit(1)).as("df"), sum("tfE1").as("cf"))
 
   /** Stage: scope-local df (reference: per-site lemma rows; per-role).
     * No join — role rides in the TF rows. */
@@ -274,7 +264,7 @@ object IndexBuild {
     // re-walking texts.
     val (docsRaw, keyMeta) = DocIds.assignWithMeta(spark, turnsCached, partitions, caches)
     val tf = caches.cache(tfFromDocs(docsRaw, zones))
-    val terms = termDict(spark, tf, partitions, caches)
+    val terms = termDict(tf)
     val byRoleDf = termsByRole(tf)
 
     val (stats, byRole) = corpusStats(keyMeta, tf, totalTurns)

@@ -9,10 +9,18 @@ import java.sql.Timestamp
   *    /root/reference/src/main/java/searchengine/model/Page.java:7-29) →
   *    [[Turn]]: one transcript turn, key `(conv_id, turn_idx)`.
   *  - reference `lemma(site_id, lemma, frequency)`
-  *    (model/Lemma.java:6-25) → [[TermStats]] global term dictionary.
+  *    (model/Lemma.java:6-25) → the `terms` table (term, df, cf): the
+  *    global term dictionary, keyed by the term itself (no lemma_id).
+  *    `df` = number of distinct documents containing the term (the
+  *    honest version of the reference's `lemma.frequency`, which could
+  *    double-count title+body, Link.java:201-207); `cf` = total corpus
+  *    frequency.
   *  - reference `index(page_id, lemma_id, rank)`
-  *    (model/IndexEntity.java:5-23) → [[Posting]] rows at build time,
-  *    compressed [[PostingBlock]]s at rest.
+  *    (model/IndexEntity.java:5-23) → the `tf` table (docId, role, dlE1,
+  *    term, tfE1) at build time, [[TermPostings]] of compressed
+  *    [[PostingBlock]]s at rest. The reference's rank is the zone-weighted
+  *    tf (Link.java:188-218); transcripts are single-zone unless a
+  *    [[ZoneConfig]] is given, so rank == tf (SURVEY.md §1.2).
   */
 final case class Turn(
     conv_id: String,
@@ -21,24 +29,6 @@ final case class Turn(
     text: String,
     tool: String,
     ts: Timestamp)
-
-/** A document = one turn with its stable dense id and doc length (token
-  * count after analysis). `dl` is what the reference never stored (its
-  * normalization was max-score based, SearchingServiceImpl.java:120-126);
-  * BM25 needs it. */
-final case class Doc(docId: Long, conv_id: String, turn_idx: Int, role: String, dl: Long)
-
-/** One posting: term t occurs tf times in document docId. The reference
-  * materialized this as one MySQL row per (page, lemma) with a
-  * zone-weighted rank (Link.java:188-218); transcripts are single-zone so
-  * rank == tf (weight 1.0, SURVEY.md §1.2). */
-final case class Posting(term: String, docId: Long, tf: Int)
-
-/** Term dictionary entry. `df` = number of distinct documents containing
-  * the term (the honest version of the reference's `lemma.frequency`,
-  * which could double-count title+body, Link.java:201-207); `cf` = total
-  * corpus frequency. */
-final case class TermStats(termId: Long, term: String, df: Long, cf: Long)
 
 /** Zone-weighted TF configuration (reference C5: per-(page,lemma) rank =
   * tf_in_tag × ratio with title 1.0 / body 0.8, the body call REPLACING
@@ -79,9 +69,9 @@ final case class PostingBlock(
 /** Posting list of one term within one doc-range shard. Shards are
   * docId ranges (docId / shardSize), so query-time intersection is
   * shard-local (scatter-gather top-k, no cross-shard shuffle). A row
-  * holds nothing global: df and termId live only in the `terms` table,
-  * so a shard an append does not touch keeps its rows unchanged and
-  * they can never contradict the dictionary. */
+  * holds nothing global: df lives only in the `terms` table, so a shard
+  * an append does not touch keeps its rows unchanged and they can never
+  * contradict the dictionary. */
 final case class TermPostings(
     shard: Int,
     term: String,

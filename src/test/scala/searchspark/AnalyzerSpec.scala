@@ -172,7 +172,8 @@ class AnalyzerSpec extends AnyFunSuite {
     // measured 173/178 = 0.972 — the residual failures are consonant
     // mutation (вижу → виж vs вид) and the documented -ал/-ел noun tax,
     // both genuinely lexicon-class; the floor pins the rules' real level
-    assert(acc >= 0.97, f"RU tail accuracy regressed: $acc%.3f < 0.97")
+    assert(totalForms == 178 && correct >= 173,
+      f"RU tail accuracy regressed: $correct/$totalForms = $acc%.3f < 173/178")
     // purity: no two held-out lexemes may collapse onto one stem
     val reps = perLexeme.map(_._2)
     assert(reps.distinct.size == reps.size,

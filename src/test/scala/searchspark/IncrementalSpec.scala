@@ -152,9 +152,8 @@ class IncrementalSpec extends AnyFunSuite {
     val base = TranscriptGen.localCorpus(42L, 20) :+ solo
     BuildPipeline.run(spark, ds(base), root, "gen:42:20+solo", partitions = 4, shardSize = 256)
     val pre = BuildPipeline.loadRelational(spark, root)
-    val preIds = pre.terms.select("term", "termId").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(preIds.contains("qqzzyx") && pre.statsByRole.contains("auditor"))
+    val preTerms = pre.terms.select("term").collect().map(_.getString(0)).toSet
+    assert(preTerms.contains("qqzzyx") && pre.statsByRole.contains("auditor"))
     IndexChecks.assertEngineDfIsDictionary(spark, root)
 
     // retract the solo doc, replace a turn, add a conversation
@@ -169,18 +168,13 @@ class IncrementalSpec extends AnyFunSuite {
     IndexChecks.assertEngineDfIsDictionary(spark, root, gone = Seq("qqzzyx"))
 
     val idx = BuildPipeline.loadRelational(spark, root)
-    val ids = idx.terms.select("term", "termId").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(!ids.contains("qqzzyx"), "a term whose df reaches 0 leaves the dictionary")
+    val terms = idx.terms.select("term").collect().map(_.getString(0)).toSet
+    assert(!terms.contains("qqzzyx"), "a term whose df reaches 0 leaves the dictionary")
     assert(idx.termsByRole.filter(org.apache.spark.sql.functions.col("role") === "auditor")
       .count() == 0)
     assert(!idx.statsByRole.contains("auditor"), "a role without docs has no stats")
     assert(idx.roleIds("auditor") == pre.roleIds("auditor"), "the role dictionary is append-only")
-    // existing terms keep their id; new ones follow the old max, by term
-    assert(ids.forall { case (t, id) => preIds.get(t).forall(_ == id) })
-    val fresh = ids.filter { case (t, _) => !preIds.contains(t) }.toSeq.sortBy(_._1)
-    assert(fresh.map(_._1).contains("aaaa"))
-    assert(fresh.map(_._2) == fresh.indices.map(_ + preIds.values.max + 1))
+    assert(!preTerms.contains("aaaa") && terms.contains("aaaa"), "a new term enters the dictionary")
 
     // the role comes back on a second append, which chains the generation
     Incremental.append(spark, root, ds(Seq(solo.copy(conv_id = "solo-conv-2"))), partitions = 4)
@@ -264,9 +258,11 @@ class IncrementalSpec extends AnyFunSuite {
 
   /** Jobs one append of this delta runs, as measured (local[4], AQE on:
     * every shuffle stage is a job of its own): the resolution, the stats
-    * collect, the five writes and their exchanges. The parent design ran
-    * 74 on the benchmark's deltas. */
-  private val JobsPerAppendCeiling = 28
+    * collect, the five writes and their exchanges. It was 28 while the
+    * terms merge numbered new terms (a left join, an anti join and a
+    * window); an earlier design ran 74 on the benchmark's deltas. Never
+    * raise it. */
+  private val JobsPerAppendCeiling = 23
 
   test("an append interrupted before its docs_raw commit is re-derived by the next one") {
     val root = Files.createTempDirectory("idx-crash").toString

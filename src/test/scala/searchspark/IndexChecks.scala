@@ -17,7 +17,8 @@ object IndexChecks {
 
   /** `terms` (term, df, cf), `terms_by_role` and stats.json at `root`
     * equal a full recompute from the root's docs_raw: n, the exact
-    * Double avgdl and per-role n/avgdl. termIds are unique. */
+    * Double avgdl and per-role n/avgdl. Terms are unique (the row
+    * comparison is by set and cannot see a duplicate). */
   def assertDictionaryIsRecompute(spark: SparkSession, root: String): Unit = {
     val docsRaw = IceLite.read(spark, Paths.get(root, "docs_raw").toString)
     val tfFull = IndexBuild.tfFromDocs(docsRaw)
@@ -25,8 +26,8 @@ object IndexChecks {
     val termsFull = tfFull.groupBy("term").agg(count(lit(1)).as("df"), sum("tfE1").as("cf"))
     assert(rows(idx.terms.select("term", "df", "cf")) == rows(termsFull),
       "incremental terms != full recompute")
-    assert(idx.terms.select("termId").distinct().count() == idx.terms.count(),
-      "termIds must be unique")
+    assert(idx.terms.select("term").distinct().count() == idx.terms.count(),
+      "terms are unique")
     assert(rows(idx.termsByRole.select("role", "term", "df")) ==
       rows(IndexBuild.termsByRole(tfFull)), "incremental terms_by_role != full recompute")
     val (stats, byRole) = IndexBuild.corpusStats(docsRaw, tfFull, idx.stats.totalTurns)

@@ -121,15 +121,15 @@ class PlanGuardSpec extends AnyFunSuite {
         s"per-doc TF must not shuffle:\n$tfExec")
       assert(tfExec.toString.contains("MapPartitions"),
         s"TF must be the typed kernel:\n$tfExec")
-      // segment build: exactly ONE shuffle (the packed-key repartition);
-      // the term-dictionary attach joins must broadcast
+      // segment build: exactly ONE shuffle (the (shard, term)
+      // repartition) and no join that shuffles
       val segExec = searchspark.index.PostingIndex
         .build(spark, idx, shardSize = 128).toDF()
         .queryExecution.executedPlan
       assert(segExec.collect { case e: ShuffleExchangeExec => e }.size == 1,
         s"segment build must shuffle exactly once:\n$segExec")
       assert(segExec.collect { case j: SortMergeJoinExec => j }.isEmpty,
-        s"dictionary attach must broadcast, not shuffle-join:\n$segExec")
+        s"segment build must not shuffle-join:\n$segExec")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
@@ -137,7 +137,7 @@ class PlanGuardSpec extends AnyFunSuite {
     // The round-4 build contract: texts are analyzed where they sit.
     // DocIds' two-pass assignment shuffles ~40-byte key rows and
     // 16-byte id routes; TF is narrow; the segment build shuffles
-    // packed numerics. Capture EVERY query executed during a full
+    // (shard, term) posting rows. Capture EVERY query executed during a full
     // build + segment materialization and assert no shuffle exchange
     // output carries the text column. (The zip-back's RDD partitionBy
     // moves (Int,(Long,Long)) pairs by construction — typed, no text.)

@@ -3,7 +3,7 @@ package searchspark
 import org.scalatest.funsuite.AnyFunSuite
 
 import searchspark.gen.TranscriptGen
-import searchspark.index.{BuildPipeline, IndexBuild, PostingIndex}
+import searchspark.index.{BuildPipeline, IndexBuild, PostingIndex, Segments}
 import searchspark.oracle.ScalarOracle
 import searchspark.query.{SearchEngine, Wand}
 
@@ -35,6 +35,17 @@ class WandSpec extends AnyFunSuite {
     // total postings across segments == tf row count
     val totalPostings = postings.collect().map(_.blocks.map(_.count).sum.toLong).sum
     assert(totalPostings == idx.tf.count())
+  }
+
+  test("the posting encode ignores the dictionary") {
+    def decoded(p: org.apache.spark.sql.Dataset[searchspark.model.TermPostings]) =
+      p.collect().map { tp =>
+        val (d, t, l, r) = Segments.decodeAll(tp.blocks)
+        (tp.shard, tp.term, d.toSeq, t.toSeq, l.toSeq, r.toSeq)
+      }.sortBy(x => (x._1, x._2)).toSeq
+    val full = decoded(PostingIndex.build(spark, idx))
+    assert(full.nonEmpty)
+    assert(decoded(PostingIndex.build(spark, idx.copy(terms = idx.terms.limit(0)))) == full)
   }
 
   test("WAND is rank-identical to the oracle on the query set (unscoped)") {

@@ -5,76 +5,50 @@ import org.scalatest.funsuite.AnyFunSuite
 import searchspark.TestSpark
 
 
-/** The packed posting key's shard/termId bit split is derived per build
-  * from the corpus' actual max shard id (round-4 VERDICT #5): the old
-  * fixed 23/40 split failed CLOSED (raise_error) once docId/shardSize
-  * crossed 2^23 — ~3.4·10^10 docs at the default shardSize, short of
-  * the 10^12-turn design point. These tests pin the split math and
-  * build an index over a synthetic high-docId fixture the old split
-  * would have aborted on. */
+/** Shard ids are docId / shardSize as an Int. These tests build postings
+  * over synthetic high-docId fixtures: a shard id far past the old
+  * packed-key layout's 2^23 limit encodes, and one past Int range fails
+  * the build loudly instead of wrapping into a foreign shard. */
 class ShardSplitSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  test("splitFor: minimal bits for the shard, remainder to termId") {
-    assert(PostingIndex.splitFor(0L) == (1, 62))
-    assert(PostingIndex.splitFor(1L) == (1, 62))
-    assert(PostingIndex.splitFor(2L) == (2, 61))
-    assert(PostingIndex.splitFor((1L << 23) - 1) == (23, 40))
-    assert(PostingIndex.splitFor(1L << 23) == (24, 39)) // old split's abort point
-    // 10^12 docs at cluster shardSize 2^20
-    assert(PostingIndex.splitFor(1000000000000L >> 20) == (20, 43))
-    // degenerate: 10^12 docs at the 4096 test shardSize still fits
-    assert(PostingIndex.splitFor(1000000000000L / 4096) == (28, 35))
+  private def index(tf: Seq[(Long, String, Long, String, Int)]): BuiltIndex = {
+    import spark.implicits._
+    BuiltIndex(
+      docs = spark.emptyDataFrame,
+      tf = tf.toDF("docId", "role", "dlE1", "term", "tfE1"),
+      terms = spark.emptyDataFrame,
+      termsByRole = spark.emptyDataFrame,
+      stats = CorpusStats(tf.map(_._1).distinct.size, 1.0, tf.size, 0),
+      statsByRole = Map("user" -> (tf.map(_._1).distinct.size.toLong, 1.0)),
+      roleList = Seq("user"))
   }
 
-  test("termId overflow of the DERIVED split still fails closed") {
-    import spark.implicits._
-    // docId ~2^44 at shardSize 16 → shard needs 41 bits, leaving 22 for
-    // termId; a termId of 2^22 must abort loudly (raise_error), never
-    // silently corrupt a packed key.
-    val bigDoc = 1L << 44
-    val tf = Seq((bigDoc, "user", 10L, "alpha", 1))
-      .toDF("docId", "role", "dlE1", "term", "tfE1")
-    val terms = Seq(("alpha", 1L << 22, 1L, 1L))
-      .toDF("term", "termId", "df", "cf")
-    val idx = BuiltIndex(
-      docs = spark.emptyDataFrame, tf = tf, terms = terms,
-      termsByRole = spark.emptyDataFrame,
-      stats = CorpusStats(1, 1.0, 1, 0),
-      statsByRole = Map("user" -> (1L, 1.0)),
-      roleList = Seq("user"))
-    assert(PostingIndex.shardSplit(idx, 16) == (41, 22))
+  test("shard id beyond Int range fails closed") {
+    // docId 2^44 at shardSize 16 → shard 2^40: an Int cast would wrap it
+    // to shard 0; the build must abort naming the docId and shardSize
+    val idx = index(Seq((1L << 44, "user", 10L, "alpha", 10)))
     val e = intercept[Exception] {
       PostingIndex.build(spark, idx, shardSize = 16).collect()
     }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("posting key overflow")),
-      s"expected the raise_error overflow guard, got: ${msgs(e).mkString(" | ")}")
+    assert(msgs(e).exists(m => m.contains("shard id out of Int range") &&
+        m.contains(s"docId=${1L << 44}") && m.contains("shardSize=16")),
+      s"expected the shard-range guard, got: ${msgs(e).mkString(" | ")}")
   }
 
   test("high-docId build the 23/40 split would have rejected") {
-    import spark.implicits._
     // docId 10^10 at shardSize 16 → shard 6.25·10^8 ≫ 2^23: the old
-    // fixed split raise_error'd here; the derived split (30/33) encodes.
-    val tf = Seq(
+    // fixed packed-key split raise_error'd here
+    val idx = index(Seq(
       (5000000000L, "user", 40L, "alpha", 10),
       (5000000000L, "user", 40L, "beta", 7),
       (5000000016L, "user", 30L, "alpha", 3),
-      (9999999999L, "user", 25L, "alpha", 20))
-      .toDF("docId", "role", "dlE1", "term", "tfE1")
-    val terms = Seq(("alpha", 0L, 3L, 33L), ("beta", 1L, 1L, 7L))
-      .toDF("term", "termId", "df", "cf")
-    val idx = BuiltIndex(
-      docs = spark.emptyDataFrame, tf = tf, terms = terms,
-      termsByRole = spark.emptyDataFrame,
-      stats = CorpusStats(3, 31.67, 3, 0),
-      statsByRole = Map("user" -> (3L, 31.67)),
-      roleList = Seq("user"))
-    assert(PostingIndex.shardSplit(idx, 16) == (30, 33))
+      (9999999999L, "user", 25L, "alpha", 20)))
     val postings = PostingIndex.build(spark, idx, shardSize = 16).collect()
-    // shard = docId / shardSize survives the pack/unpack round trip
+    // shard = docId / shardSize
     val byTermShard = postings.map(p => (p.term, p.shard) -> p).toMap
     assert(byTermShard.keySet == Set(
       ("alpha", (5000000000L / 16).toInt), ("alpha", (5000000016L / 16).toInt),
