@@ -158,7 +158,7 @@ object Bench {
 
     // worst-case head query (max-df stems, huge conjunctive candidate
     // set): exact total vs opt-in estimated total
-    val headTerms = idx.terms.orderBy(org.apache.spark.sql.functions.desc("df"))
+    val headTerms = IndexBuild.termDict(idx.tf).orderBy(org.apache.spark.sql.functions.desc("df"))
       .filter(org.apache.spark.sql.functions.col("term").rlike("^w\\d{4}"))
       .limit(2).collect().map(_.getString(0))
     val headQ = headTerms.mkString(" ")

@@ -14,7 +14,7 @@ import searchspark.index.{BuildPipeline, IndexBuild}
   *     --root /path/to/index [--transcripts /path/to/parquet | --convs N] \
   *     [--partitions P] [--shard-size S] [--append]
   *
-  * Cold runs build all 7 stages; re-runs resume from the checkpoint
+  * Cold runs build all 4 stages; re-runs resume from the checkpoint
   * manifest; `--append` routes through the incremental path instead
   * (indexPage analog).
   */

@@ -51,7 +51,7 @@ object Main {
     val engine = searchspark.query.SearchEngine.fromTurns(spark, turns, partitions = 8)
     val idx = engine.idx
     println(s"[index] docs=${idx.stats.n} skippedBlank=${idx.stats.skippedBlank} " +
-      s"terms=${idx.terms.count()} avgdl=${f"${idx.stats.avgdl / searchspark.query.Scoring.TfScaleE1}%.2f"}") // display in token units (stats are E1)
+      s"terms=${IndexBuild.termDict(idx.tf).count()} avgdl=${f"${idx.stats.avgdl / searchspark.query.Scoring.TfScaleE1}%.2f"}") // display in token units (stats are E1)
 
     val r = engine.search(query, scope, offset, limit)
     if (!r.ok) println(s"""{"result":false,"error":"${r.error}"}""")

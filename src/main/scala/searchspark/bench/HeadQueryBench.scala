@@ -33,7 +33,7 @@ object HeadQueryBench {
     val idx = engine.idx // one build, shared with the engine
 
     // worst case: the two highest-df content stems → huge candidate set
-    val headTerms = idx.terms.filter(col("term").rlike("^w\\d{4}"))
+    val headTerms = IndexBuild.termDict(idx.tf).filter(col("term").rlike("^w\\d{4}"))
       .orderBy(desc("df")).limit(2).collect().map(_.getString(0))
     val q = headTerms.mkString(" ")
 

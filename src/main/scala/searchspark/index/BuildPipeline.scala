@@ -1,12 +1,10 @@
 package searchspark.index
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 import searchspark.model.{TermPostings, Turn, ZoneConfig}
 
@@ -28,11 +26,15 @@ import searchspark.model.{TermPostings, Turn, ZoneConfig}
   * {{{
   *   docs_raw   stable docId assignment over non-blank, deduped turns
   *   tf         analyzer projection + TF agg (carries role + dl)
-  *   terms      global dictionary (term, df, cf)
-  *   terms_by_role  scope-local df
   *   stats      scalar stats JSON (n, avgdl, blanks, per-role, exact sums)
   *   postings   compressed segments, rows (shard, term, blocks)
   * }}}
+  *
+  * No term dictionary is stored: the postings are the one source of df
+  * (SearchService.servingDf counts it per query; IndexBuild.termDict
+  * derives it from tf for a full listing). A root written when the
+  * build still kept `terms` / `terms_by_role` tables loads and appends
+  * unchanged; those tables are ignored, not deleted.
   *
   * docs_raw, tf and postings are written one file per doc-range shard
   * (IceLite.FileLayout), so Incremental.append rewrites the files of the
@@ -114,8 +116,6 @@ object BuildPipeline {
     else Some(mapper.readValue(p.toFile, classOf[BuildStatus]))
   }
 
-  /** Run (or resume) the build into `root`. `failAfter` injects a crash
-    * after the named stage commits — the resume-test hook. */
   /** Encode/decode the zone config for manifest params (shared with
     * Incremental, which must analyze deltas under the build's config). */
   def zonesParam(zones: Option[ZoneConfig]): String =
@@ -146,12 +146,16 @@ object BuildPipeline {
     else if (s.startsWith("[")) mapper.readValue(s, rolesRef)
     else s.split(",").toSeq.filter(_.nonEmpty) // legacy format
 
+  /** Run (or resume) the build into `root`. `failAfter` injects a crash
+    * after the named stage commits — the resume-test hook. A
+    * non-positive `shardSize` fails before any stage runs. */
   def run(spark: SparkSession, turns: Dataset[Turn], root: String,
           inputId: String, partitions: Int,
           shardSize: Int = PostingIndex.DefaultShardSize,
           failAfter: Option[String] = None,
           zones: Option[ZoneConfig] = None,
           catalog: TableCatalog = IceLite): BuildReport = {
+    require(shardSize > 0, s"shardSize must be positive, got $shardSize")
     val params = Map("partitions" -> partitions.toString,
       "shardSize" -> shardSize.toString, "codec" -> "delta-varint-v2",
       "zones" -> zonesParam(zones))
@@ -211,8 +215,6 @@ object BuildPipeline {
       }
     }
     stage("tf") { commitTf(spark, root, catalog, zones, shardSize).totalRows }
-    stage("terms") { commitTerms(spark, root, catalog).totalRows }
-    stage("terms_by_role") { commitTermsByRole(spark, root, catalog).totalRows }
     stage("stats") { commitStats(spark, root, catalog).n }
     stage("postings") { commitPostings(spark, root, catalog, shardSize).totalRows }
 
@@ -246,18 +248,6 @@ object BuildPipeline {
     catalog.commit(spark,
       IndexBuild.tfFromDocs(catalog.read(spark, table(root, "docs_raw")), zones),
       table(root, "tf"), props = props, layout = docLayout(shardSize))
-
-  /** Stage terms: the global dictionary over the committed tf. */
-  private[index] def commitTerms(spark: SparkSession, root: String, catalog: TableCatalog,
-                                 props: Map[String, String] = Map.empty): IceLite.Snapshot =
-    catalog.commit(spark, IndexBuild.termDict(catalog.read(spark, table(root, "tf"))),
-      table(root, "terms"), props = props)
-
-  /** Stage terms_by_role: scope-local df over the committed tf. */
-  private[index] def commitTermsByRole(spark: SparkSession, root: String, catalog: TableCatalog,
-                                       props: Map[String, String] = Map.empty): IceLite.Snapshot =
-    catalog.commit(spark, IndexBuild.termsByRole(catalog.read(spark, table(root, "tf"))),
-      table(root, "terms_by_role"), props = props)
 
   /** Stage stats: exact sums over the committed docs_raw and tf. A cold
     * build lists its roles sorted; with `appendRoles` the roles already
@@ -339,8 +329,6 @@ object BuildPipeline {
     BuiltIndex(
       catalog.read(spark, table("docs_raw")), // docs == docs_raw (dl lives in tf)
       catalog.read(spark, table("tf")),
-      catalog.read(spark, table("terms")),
-      catalog.read(spark, table("terms_by_role")),
       stats, byRole,
       roleList = statsMap.get("roles").map(decodeRoles).getOrElse(Nil))
   }

@@ -30,7 +30,6 @@ trait TableCatalog {
   def commit(spark: SparkSession, df: DataFrame, table: String,
              operation: String = "overwrite",
              props: Map[String, String] = Map.empty,
-             partitions: Option[Int] = None,
              layout: Option[IceLite.FileLayout] = None): IceLite.Snapshot
   def read(spark: SparkSession, table: String,
            snapshotId: Option[Long] = None): DataFrame
@@ -76,7 +75,6 @@ object DirCatalog extends TableCatalog {
   override def commit(spark: SparkSession, df: DataFrame, table: String,
                       operation: String = "overwrite",
                       props: Map[String, String] = Map.empty,
-                      partitions: Option[Int] = None,
                       layout: Option[IceLite.FileLayout] = None): IceLite.Snapshot = {
     val parent = currentSnapshot(table)
     Files.createDirectories(Paths.get(table))
@@ -92,7 +90,7 @@ object DirCatalog extends TableCatalog {
     val dataDir = Paths.get(table, s"snap-$id")
     // debris from a crashed writer (no record committed)
     if (Files.exists(dataDir)) IceLite.deleteTree(dataDir)
-    val files = IceLite.writeFiles(spark, df, dataDir, partitions, layout)
+    val files = IceLite.writeFiles(spark, df, dataDir, layout)
     val snap = IceLite.Snapshot(id, parent.map(_.snapshotId).getOrElse(-1L),
       operation, files.map(_.rows).sum, files, props, Some(df.schema.json))
     val tmp = Paths.get(table, s"snap-$id.json.tmp")

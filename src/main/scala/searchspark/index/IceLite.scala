@@ -92,9 +92,8 @@ object IceLite extends TableCatalog {
   override def commit(spark: SparkSession, df: DataFrame, table: String,
                       operation: String = "overwrite",
                       props: Map[String, String] = Map.empty,
-                      partitions: Option[Int] = None,
                       layout: Option[FileLayout] = None): Snapshot =
-    publish(stage(spark, df, table, partitions, layout), operation, props)
+    publish(stage(spark, df, table, layout), operation, props)
 
   /** Data files written for a table's next snapshot; invisible to readers
     * until [[publish]]ed. */
@@ -105,7 +104,7 @@ object IceLite extends TableCatalog {
     * [[commit]]; a caller that wants the written files' sizes in the
     * snapshot props publishes them itself). */
   def stage(spark: SparkSession, df: DataFrame, table: String,
-            partitions: Option[Int] = None, layout: Option[FileLayout] = None): Staged = {
+            layout: Option[FileLayout] = None): Staged = {
     // next id = max existing v*.json + 1, NOT parent+1: a crash between
     // the v<id>.json rename and the current-pointer rename leaves a
     // committed-but-unreferenced v<id>.json; parent+1 would collide with
@@ -129,7 +128,7 @@ object IceLite extends TableCatalog {
     // safe to clear and rewrite
     if (Files.exists(dataDir) && !Files.exists(metaDir(table).resolve(s"v$snapshotId.json")))
       deleteTree(dataDir)
-    Staged(table, snapshotId, writeFiles(spark, df, dataDir, partitions, layout), df.schema.json)
+    Staged(table, snapshotId, writeFiles(spark, df, dataDir, layout), df.schema.json)
   }
 
   /** Make staged files the table's current snapshot, together with
@@ -183,7 +182,6 @@ object IceLite extends TableCatalog {
     * still writes one empty file, so a snapshot always has a readable
     * schema. Shared with [[DirCatalog]]. */
   private[index] def writeFiles(spark: SparkSession, df: DataFrame, dataDir: Path,
-                                partitions: Option[Int],
                                 layout: Option[FileLayout]): Seq[FileEntry] = {
     layout match {
       case Some(l) =>
@@ -192,9 +190,7 @@ object IceLite extends TableCatalog {
           .repartition(col(ShardDir))
           .sortWithinPartitions(col(ShardDir), col(l.key))
           .write.partitionBy(ShardDir).mode("errorifexists").parquet(dataDir.toString)
-      case None =>
-        partitions.map(df.repartition(_)).getOrElse(df)
-          .write.mode("errorifexists").parquet(dataDir.toString)
+      case None => df.write.mode("errorifexists").parquet(dataDir.toString)
     }
     val written = footerEntries(spark, dataDir, layout.map(_.key))
     if (written.nonEmpty) written

@@ -87,15 +87,13 @@ final class IcebergCatalog(catalogName: String,
   override def commit(spark: SparkSession, df: DataFrame, table: String,
                       operation: String = "overwrite",
                       props: Map[String, String] = Map.empty,
-                      partitions: Option[Int] = None,
                       layout: Option[IceLite.FileLayout] = None): IceLite.Snapshot = {
     val id = ident(table)
     val ns = id.split('.').dropRight(1).mkString(".")
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $ns")
-    val out = partitions.map(df.repartition(_)).getOrElse(df)
     if (operation == "append" && spark.catalog.tableExists(id))
-      out.writeTo(id).append()
-    else out.writeTo(id).createOrReplace()
+      df.writeTo(id).append()
+    else df.writeTo(id).createOrReplace()
     if (props.nonEmpty) spark.sql(propsSql(id, props))
     currentSnapshot(table).getOrElse(throw new IllegalStateException(
       s"commit to $id produced no readable snapshot"))

@@ -40,12 +40,13 @@ import searchspark.model.Turn
   *    only; its snapshot lists every other file under its old path
   *    (IceLite `keep`). Only the touched shards' posting segments are
   *    rebuilt, from their new tf files (SURVEY.md §2.4 C9);
-  *  - `terms`, `terms_by_role` and the stats move by delta: per term and
-  *    per (role, term), df/cf change by the rows added minus the rows
-  *    removed among the touched docs; a term whose df reaches 0 is
-  *    dropped. Both dictionaries are one full-outer merge of the old
-  *    table with the delta. stats.json keeps exact Long sums (docs and
-  *    Σ dlE1 per role), so avgdl stays bit-identical to a full recompute.
+  *  - the stats move by delta: stats.json keeps exact Long sums (docs
+  *    and Σ dlE1 per role), changed by the docs and tf rows added minus
+  *    those removed among the touched docs, so avgdl stays bit-identical
+  *    to a full recompute.
+  *
+  * No term dictionary is kept: df is the postings' own count. The
+  * `terms` / `terms_by_role` tables of older roots are left unread.
   *
   * Posting rows carry no global value (no df), so a kept shard's rows
   * cannot go stale. They stay SOUND under stat drift:
@@ -189,15 +190,6 @@ object Incremental {
         val tfSnap0 = snapshot("tf")
         val (tfKeep, tfRepl) = split(tfSnap0.files, effShardSize)
         val tfOld = read(tfSnap0, tfRepl)
-        // dictionary delta: +1 / +tfE1 per added row, -1 / -tfE1 per
-        // removed row, per (role, term)
-        val signed = union(
-          Some(tfDelta.select(col("role"), col("term"), lit(1L).as("d"),
-            col("tfE1").cast("long").as("c"))),
-          tfOld.map(_.filter(!dropOld).select(col("role"), col("term"), lit(-1L).as("d"),
-            (-col("tfE1")).cast("long").as("c"))))
-        val dictDelta = scope.cache(signed.groupBy("role", "term")
-          .agg(sum("d").as("dDf"), sum("c").as("dCf")))
         val totalTurns = docsSnap0.props.get("totalTurns").map(_.toLong).getOrElse(0L) + nAdded
 
         // The writes depend only on the resolved delta and its caches, so
@@ -212,10 +204,14 @@ object Incremental {
             table("docs_raw"), layout = BuildPipeline.docLayout(effShardSize))
         })
 
-        // stats: exact per-role sums moved by the delta. This first read of
-        // the delta caches materializes them before the writes share them.
+        // stats: exact per-role sums moved by the delta; Σ dlE1 by +tfE1 per
+        // added tf row and -tfE1 per removed one. This first read of the
+        // delta's tf materializes its cache before the tf write shares it.
         step("stats") {
-          val ddl = dictDelta.groupBy("role").agg(sum("dCf")).collect()
+          val ddl = union(
+            Some(tfDelta.select(col("role"), col("tfE1").cast("long").as("c"))),
+            tfOld.map(_.filter(!dropOld).select(col("role"), (-col("tfE1")).cast("long").as("c"))))
+            .groupBy("role").agg(sum("c")).collect()
             .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
           val old = BuildPipeline.statsSums(BuildPipeline.readStats(root).get).get
           val sums = (old.keySet ++ dn.keySet ++ ddl.keySet).map { r =>
@@ -232,28 +228,6 @@ object Incremental {
           commit("tf", union(tfOld.map(_.filter(dropOld)), Some(tfDelta)), tfKeep,
             BuildPipeline.docLayout(effShardSize))
         })
-        def plus(old: String, delta: String) =
-          coalesce(col(old), lit(0L)) + coalesce(col(delta), lit(0L))
-        val termsSnap = fork(step("terms") {
-          val termsSnap0 = snapshot("terms")
-          // (term, df, cf) by name: the terms tables of roots written by
-          // earlier builds hold one more column, a numeric term id
-          val terms = IceLite.readFiles(spark, termsSnap0, termsSnap0.files)
-            .select("term", "df", "cf")
-            .join(dictDelta.groupBy("term").agg(sum("dDf").as("dDf"), sum("dCf").as("dCf")),
-              Seq("term"), "full_outer")
-            .select(col("term"), plus("df", "dDf").as("df"), plus("cf", "dCf").as("cf"))
-            .filter(col("df") > 0)
-          commit("terms", keepFileCount(termsSnap0, terms), Nil, None)
-        })
-        val tbrSnap = fork(step("terms_by_role") {
-          val tbrSnap0 = snapshot("terms_by_role")
-          val tbr = IceLite.readFiles(spark, tbrSnap0, tbrSnap0.files)
-            .join(dictDelta.select("role", "term", "dDf"), Seq("role", "term"), "full_outer")
-            .select(col("role"), col("term"), plus("df", "dDf").as("df"))
-            .filter(col("df") > 0)
-          commit("terms_by_role", keepFileCount(tbrSnap0, tbr), Nil, None)
-        })
         // postings: rebuild the touched shards from their new tf files
         val postSnap0 = snapshot("postings")
         // one file per shard (the build's layout, or a re-derive's)
@@ -269,8 +243,8 @@ object Incremental {
           }
 
           val docs = staged()
-          val written = tfNew.files.drop(tfKeep.size) ++ termsSnap().files ++ tbrSnap().files ++
-            postSnap.files.drop(postKeep.size) ++ docs.files
+          val written = tfNew.files.drop(tfKeep.size) ++ postSnap.files.drop(postKeep.size) ++
+            docs.files
           val done = Report(nReplaced, nAdded, touched.size,
             postKeep.flatMap(_.keys).flatMap(k => k.lo to k.hi).distinct.size, nRetracted,
             filesKept = tfKeep.size + postKeep.size + docsKeep.size,
@@ -282,18 +256,12 @@ object Incremental {
         } catch {
           case e: Throwable =>
             // let every branch finish before the caches are released
-            Seq(tfSnap, termsSnap, tbrSnap, staged).foreach(f => scala.util.Try(f()))
+            Seq(tfSnap, staged).foreach(f => scala.util.Try(f()))
             throw e
         }
       }
     }
   }
-
-  /** `df` in as many files as `snap` has: every reader of the dictionary
-    * tables (the next append's merge, StatsService) scans them with
-    * one task per file, so a merge must not multiply them. */
-  private def keepFileCount(snap: Snapshot, df: DataFrame): DataFrame =
-    df.coalesce(math.max(1, snap.files.size))
 
   /** The largest key of a table, from its file entries when they record
     * it (else one agg; -1 when empty). */
@@ -319,7 +287,7 @@ object Incremental {
   private def consistent(root: String, gen: Long): Boolean = {
     def genOf(props: Map[String, String]) = props.get(Generation).map(_.toLong).getOrElse(0L)
     val stats = BuildPipeline.readStats(root).getOrElse(Map.empty)
-    Seq("tf", "terms", "terms_by_role", "postings").forall(t =>
+    Seq("tf", "postings").forall(t =>
       IceLite.currentSnapshot(Paths.get(root, t).toString).exists(s => genOf(s.props) == gen)) &&
       genOf(stats) == gen && BuildPipeline.statsSums(stats).isDefined
   }
@@ -330,8 +298,6 @@ object Incremental {
                        shardSize: Int, gen: Long): Unit = {
     val props = Map(Generation -> gen.toString)
     BuildPipeline.commitTf(spark, root, IceLite, zones, shardSize, props)
-    BuildPipeline.commitTerms(spark, root, IceLite, props)
-    BuildPipeline.commitTermsByRole(spark, root, IceLite, props)
     BuildPipeline.commitStats(spark, root, IceLite, appendRoles = true, extra = props)
     BuildPipeline.commitPostings(spark, root, IceLite, shardSize, props)
   }

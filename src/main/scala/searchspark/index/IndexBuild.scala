@@ -23,12 +23,11 @@ final case class TfRow(docId: Long, role: String, dlE1: Long, term: String, tfE1
 
 /** The built index, as DataFrames (persist via IceLite, or cache for
   * tests). Replaces the reference's page/lemma/`index` MySQL tables
-  * (SURVEY.md §1.1) with columnar, partition-friendly layouts. */
+  * (SURVEY.md §1.1) with columnar, partition-friendly layouts. No term
+  * dictionary is stored (see [[IndexBuild.termDict]]). */
 final case class BuiltIndex(
     docs: DataFrame,        // docId, conv_id, turn_idx, role, tool, ts, text
     tf: DataFrame,          // docId, role, dlE1, term, tfE1 (uncompressed postings)
-    terms: DataFrame,       // term, df, cf                (global dictionary)
-    termsByRole: DataFrame, // role, term, df              (scope-local df)
     stats: CorpusStats,
     statsByRole: Map[String, (Long, Double)], // role -> (N, avgdlE1)
     roleList: Seq[String] = Nil, // APPEND-ONLY role dictionary order
@@ -46,10 +45,10 @@ final case class BuiltIndex(
      else statsByRole.keys.toSeq.sorted).zipWithIndex.toMap
 
   def cache(): BuiltIndex = {
-    docs.cache(); tf.cache(); terms.cache(); termsByRole.cache(); this
+    docs.cache(); tf.cache(); this
   }
   def unpersist(): Unit = {
-    docs.unpersist(); tf.unpersist(); terms.unpersist(); termsByRole.unpersist()
+    docs.unpersist(); tf.unpersist()
     caches.release()
   }
 }
@@ -78,9 +77,10 @@ final case class BuiltIndex(
   *                                                     terms are a non-issue
   *                                                     because nothing is
   *                                                     grouped by term here)
-  *     → df, cf per term and df per (role, term)      (partial aggs over tf;
-  *                                                     the dictionary is
-  *                                                     plain (term, df, cf))
+  *
+  * No dictionary is built or stored: a query counts its terms' df from
+  * the postings (SearchService.servingDf), and `termDict` /
+  * `termsByRole` below derive df over tf for the rare full listing.
   *
   * The only skew-sensitive step is the posting-SEGMENT build (collect a
   * term's in-shard postings together, one (shard, term) exchange), which
@@ -105,8 +105,8 @@ object IndexBuild {
     * dl join back that re-ran the aggregation lineage — at corpus
     * scale the TF shuffle was the build's largest exchange; here it is
     * gone entirely (measured at 131k turns / 5.5M tf rows, local[32]:
-    * 3.8 s → sub-second, and the downstream dict/segment shuffles now
-    * read narrow finished rows). A pure-Catalyst narrow form was tried
+    * 3.8 s → sub-second, and the downstream segment shuffle now
+    * reads narrow finished rows). A pure-Catalyst narrow form was tried
     * first and reverted: higher-order aggregate/filter lambdas are
     * interpreted, not codegen'd (4x slower) — the kernel is the same
     * primitive-loop pattern as SimOps' similarity kernels.
@@ -222,13 +222,14 @@ object IndexBuild {
       .select("docId", "role", "dlE1", "term", "tfE1")
   }
 
-  /** Stage: term dictionary — df = distinct docs (tf rows are unique per
-    * (docId, term)), cf = Σ tfE1 (E1 units). */
+  /** df over tf, as (term, df): df = distinct docs (tf rows are unique
+    * per (docId, term)). The one definition of df outside the query
+    * path; a full scan of tf's term column. */
   def termDict(tf: DataFrame): DataFrame =
-    tf.groupBy("term").agg(count(lit(1)).as("df"), sum("tfE1").as("cf"))
+    tf.groupBy("term").agg(count(lit(1)).as("df"))
 
-  /** Stage: scope-local df (reference: per-site lemma rows; per-role).
-    * No join — role rides in the TF rows. */
+  /** Scope-local df over tf, as (role, term, df) (reference: per-site
+    * lemma rows; per-role). No join — role rides in the TF rows. */
   def termsByRole(tf: DataFrame): DataFrame =
     tf.groupBy("role", "term").agg(count(lit(1)).as("df"))
 
@@ -237,7 +238,7 @@ object IndexBuild {
   def build(spark: SparkSession, turns: Dataset[Turn], partitions: Int,
             zones: Option[ZoneConfig] = None): BuiltIndex = {
     // Cache discipline is what makes the build scale with cores: without
-    // it every downstream job (TF shuffle, dl join, dict, stats,
+    // it every downstream job (TF shuffle, dl join, stats,
     // segments) re-runs the whole upstream lineage — source scan +
     // range shuffle + sort — serially re-paying fixed costs that drown
     // the parallel speedup (measured: 0.36 scaling efficiency uncached
@@ -264,12 +265,10 @@ object IndexBuild {
     // re-walking texts.
     val (docsRaw, keyMeta) = DocIds.assignWithMeta(spark, turnsCached, partitions, caches)
     val tf = caches.cache(tfFromDocs(docsRaw, zones))
-    val terms = termDict(tf)
-    val byRoleDf = termsByRole(tf)
 
     val (stats, byRole) = corpusStats(keyMeta, tf, totalTurns)
     if (!inputIsTableScan) turnsCached.unpersist()
-    BuiltIndex(docsRaw, tf, terms, byRoleDf, stats, byRole,
+    BuiltIndex(docsRaw, tf, stats, byRole,
       roleList = byRole.keys.toSeq.sorted, caches = caches)
   }
 

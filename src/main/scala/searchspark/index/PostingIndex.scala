@@ -26,7 +26,7 @@ final case class PostingRow(shard: Int, term: String, docId: Long, meta: Long, d
   *
   * At 10^12 turns: shardSize ~2^20 → ~10^6 shards; per-(shard,term)
   * encode groups stay ≤ 2^20 entries. The encode reads the tf rows only
-  * (never the dictionary) and emits (shard, term, blocks) rows; the
+  * and emits (shard, term, blocks) rows, the index's one store of df; the
   * postings table is written one file per shard (BuildPipeline), so an
   * append replaces the files of the shards it touches.
   */
@@ -41,6 +41,7 @@ object PostingIndex {
   def build(spark: SparkSession, idx: BuiltIndex,
             shardSize: Int = DefaultShardSize): Dataset[TermPostings] = {
     import spark.implicits._
+    require(shardSize > 0, s"shardSize must be positive, got $shardSize")
     // role-dictionary guard (round-2 ADVICE, high): a role present in
     // the corpus but absent from the dictionary must fail the build
     // LOUDLY, never encode under a foreign roleId (scoped queries would

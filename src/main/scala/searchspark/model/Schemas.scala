@@ -9,12 +9,13 @@ import java.sql.Timestamp
   *    /root/reference/src/main/java/searchengine/model/Page.java:7-29) →
   *    [[Turn]]: one transcript turn, key `(conv_id, turn_idx)`.
   *  - reference `lemma(site_id, lemma, frequency)`
-  *    (model/Lemma.java:6-25) → the `terms` table (term, df, cf): the
-  *    global term dictionary, keyed by the term itself (no lemma_id).
-  *    `df` = number of distinct documents containing the term (the
-  *    honest version of the reference's `lemma.frequency`, which could
-  *    double-count title+body, Link.java:201-207); `cf` = total corpus
-  *    frequency.
+  *    (model/Lemma.java:6-25) → no table: a term's df is counted from
+  *    its postings (the serving partitions at query time;
+  *    IndexBuild.termDict / termsByRole over tf for a full listing),
+  *    keyed by the term itself (no lemma_id). `df` = number of distinct
+  *    documents containing the term (the honest version of the
+  *    reference's `lemma.frequency`, which could double-count
+  *    title+body, Link.java:201-207).
   *  - reference `index(page_id, lemma_id, rank)`
   *    (model/IndexEntity.java:5-23) → the `tf` table (docId, role, dlE1,
   *    term, tfE1) at build time, [[TermPostings]] of compressed
@@ -69,9 +70,9 @@ final case class PostingBlock(
 /** Posting list of one term within one doc-range shard. Shards are
   * docId ranges (docId / shardSize), so query-time intersection is
   * shard-local (scatter-gather top-k, no cross-shard shuffle). A row
-  * holds nothing global: df lives only in the `terms` table, so a shard
-  * an append does not touch keeps its rows unchanged and they can never
-  * contradict the dictionary. */
+  * holds nothing global: a term's df is the sum of its rows' posting
+  * counts over all shards, so a shard an append does not touch keeps
+  * its rows unchanged and they can never go stale. */
 final case class TermPostings(
     shard: Int,
     term: String,

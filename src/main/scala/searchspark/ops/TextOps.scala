@@ -515,10 +515,10 @@ object TextOps {
     * scan. */
   def unigramSurprisal(docs: DataFrame): DataFrame = {
     val tfs = tfCached(docs)
-    val cf = tfs.groupBy("term").agg(sum("tf").as("cf"))
-    val total = cf.agg(sum("cf").as("n_total"))
-    val bits = cf.crossJoin(broadcast(total))
-      .select(col("term"), floorLog2(expr("n_total div cf")).as("bits"))
+    val freq = tfs.groupBy("term").agg(sum("tf").as("n_term"))
+    val total = freq.agg(sum("n_term").as("n_total"))
+    val bits = freq.crossJoin(broadcast(total))
+      .select(col("term"), floorLog2(expr("n_total div n_term")).as("bits"))
     val perDoc = tfs.join(bits, Seq("term"))
       .groupBy("doc_id")
       .agg(sum(col("tf") * col("bits")).as("wsum"), sum("tf").as("dl"))

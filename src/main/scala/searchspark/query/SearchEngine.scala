@@ -18,8 +18,8 @@ import searchspark.model.{SearchResult, TermPostings, Turn}
   * scores its shards, and hydrates and snippets its own top k; the
   * driver only merges, windows and normalizes relevance. A cold query
   * (a term not yet in the df cache) runs one more plain job over the
-  * same partitions to count df; the engine neither caches nor reads the
-  * `terms` / `terms_by_role` tables.
+  * same partitions to count df; the postings are the index's only store
+  * of df.
   *
   * Role-scoped queries take the SAME path: blocks carry per-posting
   * roleIds, and pruning bounds are computed at query time from
@@ -37,8 +37,8 @@ final class SearchEngine private (
   /** Driver-side term→df dictionary cache: the index is an immutable
     * snapshot, so df per term never changes for the lifetime of this
     * facade. A term missing here is counted from the serving partitions'
-    * postings (SearchService.servingDf: one plain job, no Catalyst plan,
-    * no `terms` table), so a cold query is two jobs; repeat terms skip
+    * postings (SearchService.servingDf: one plain job, no Catalyst
+    * plan), so a cold query is two jobs; repeat terms skip
     * that job, so a warm query is the scatter job alone. Starts empty at
     * every load. Bounded: cleared if it ever exceeds MaxDfCache distinct
     * terms. */
@@ -54,8 +54,8 @@ final class SearchEngine private (
 
   /** Each term's df, globally or within `scope`, as the engine's df
     * lookup counts it from the serving partitions (0 = unknown; a scope
-    * without a roleId counts nothing). For checks against the
-    * dictionary tables; queries go through [[search]]. */
+    * without a roleId counts nothing). For checks against a df
+    * recomputed from tf; queries go through [[search]]. */
   private[searchspark] def df(terms: Seq[String], scope: Option[String] = None): Map[String, Long] =
     scope.fold(Option(-1))(idx.roleIds.get) match {
       case Some(roleId) => SearchService.servingDf(serving, terms, roleId)

@@ -15,7 +15,7 @@ import searchspark.model.SearchResult
   * Scale notes: the only per-query driver data are the query-term stats
   * (|q| rows). A term's df is counted from the engine's serving
   * partitions ([[servingDf]]: |q| longs per partition, no Catalyst
-  * plan), so no query reads the `terms` / `terms_by_role` tables.
+  * plan); the index stores no term dictionary.
   */
 object SearchService {
 

@@ -2,13 +2,14 @@ package searchspark.stats
 
 import org.apache.spark.sql.functions._
 
-import searchspark.index.{BuildPipeline, BuiltIndex}
+import searchspark.index.{BuildPipeline, BuiltIndex, IndexBuild}
 
 /** Statistics rollup — port of the reference's `GET /api/statistics`
   * (/root/reference/src/main/java/searchengine/services/StatisticsServiceImpl.java:34-75):
   * per scope (site ↔ role) the page count (code=200 ↔ non-blank),
-  * lemma count, and status info; plus a totals row. One small agg job
-  * over the already-built docs/terms tables — the reference recomputes
+  * lemma count, and status info; plus a totals row. Lemma counts are
+  * two aggregates over tf's (role, term) columns (no dictionary table
+  * is stored; a rollup is a rare admin call) — the reference recomputes
   * per-site counts with one JPA query per site per metric. */
 object StatsService {
 
@@ -24,13 +25,13 @@ object StatsService {
   }
 
   def collect(idx: BuiltIndex): Statistics = {
-    val perRoleTerms = idx.termsByRole.groupBy("role")
+    val perRoleTerms = IndexBuild.termsByRole(idx.tf).groupBy("role")
       .agg(count(lit(1)).as("n_terms")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val scopes = idx.statsByRole.toSeq.sortBy(_._1).map { case (role, (n, avgdl)) =>
       ScopeStats(role, n, perRoleTerms.getOrElse(role, 0L), avgdl)
     }
-    Statistics(idx.stats.n, idx.terms.count(), idx.stats.skippedBlank,
+    Statistics(idx.stats.n, IndexBuild.termDict(idx.tf).count(), idx.stats.skippedBlank,
       idx.stats.avgdl, scopes)
   }
 

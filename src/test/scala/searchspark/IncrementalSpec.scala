@@ -152,9 +152,15 @@ class IncrementalSpec extends AnyFunSuite {
     val base = TranscriptGen.localCorpus(42L, 20) :+ solo
     BuildPipeline.run(spark, ds(base), root, "gen:42:20+solo", partitions = 4, shardSize = 256)
     val pre = BuildPipeline.loadRelational(spark, root)
-    val preTerms = pre.terms.select("term").collect().map(_.getString(0)).toSet
-    assert(preTerms.contains("qqzzyx") && pre.statsByRole.contains("auditor"))
-    IndexChecks.assertEngineDfIsDictionary(spark, root)
+    val probe = Seq("qqzzyx", "aaaa")
+    // df as the engine loaded from `root` counts it, globally or in a role
+    def engineDf(terms: Seq[String], scope: Option[String] = None) = {
+      val engine = SearchEngine.load(spark, root)
+      try engine.df(terms, scope) finally engine.close()
+    }
+    val preDf = engineDf(probe)
+    assert(preDf("qqzzyx") > 0 && pre.statsByRole.contains("auditor"))
+    IndexChecks.assertEngineDfIsRecompute(spark, root)
 
     // retract the solo doc, replace a turn, add a conversation
     val delta = Seq(solo.copy(text = ""),
@@ -165,21 +171,21 @@ class IncrementalSpec extends AnyFunSuite {
     IndexChecks.assertDictionaryIsRecompute(spark, root)
     // the engine counts the retracted term as unknown, and nothing in the
     // role whose last doc left
-    IndexChecks.assertEngineDfIsDictionary(spark, root, gone = Seq("qqzzyx"))
+    IndexChecks.assertEngineDfIsRecompute(spark, root, gone = Seq("qqzzyx"))
 
     val idx = BuildPipeline.loadRelational(spark, root)
-    val terms = idx.terms.select("term").collect().map(_.getString(0)).toSet
-    assert(!terms.contains("qqzzyx"), "a term whose df reaches 0 leaves the dictionary")
-    assert(idx.termsByRole.filter(org.apache.spark.sql.functions.col("role") === "auditor")
-      .count() == 0)
+    val df = engineDf(probe)
+    assert(df("qqzzyx") == 0, "a term whose df reaches 0 leaves the index")
+    val allTerms = IndexBuild.termDict(idx.tf).collect().map(_.getString(0)).toSeq ++ probe
+    assert(engineDf(allTerms, Some("auditor")).values.forall(_ == 0))
     assert(!idx.statsByRole.contains("auditor"), "a role without docs has no stats")
     assert(idx.roleIds("auditor") == pre.roleIds("auditor"), "the role dictionary is append-only")
-    assert(!preTerms.contains("aaaa") && terms.contains("aaaa"), "a new term enters the dictionary")
+    assert(preDf("aaaa") == 0 && df("aaaa") > 0, "a new term enters the index")
 
     // the role comes back on a second append, which chains the generation
     Incremental.append(spark, root, ds(Seq(solo.copy(conv_id = "solo-conv-2"))), partitions = 4)
     IndexChecks.assertDictionaryIsRecompute(spark, root)
-    IndexChecks.assertEngineDfIsDictionary(spark, root)
+    IndexChecks.assertEngineDfIsRecompute(spark, root)
     assert(BuildPipeline.loadRelational(spark, root).statsByRole.contains("auditor"))
     assert(snap(root, "docs_raw").props(Incremental.Generation) == "2")
   }
@@ -190,7 +196,7 @@ class IncrementalSpec extends AnyFunSuite {
     val base = TranscriptGen.localCorpus(42L, 30)
     BuildPipeline.run(spark, ds(base), root, "gen:42:30", partitions = 4, shardSize = 256)
     val before = Seq("docs_raw", "tf", "postings").map(t => t -> snap(root, t)).toMap
-    val oldTerms = BuildPipeline.loadRelational(spark, root).terms
+    val oldTerms = IndexBuild.termDict(BuildPipeline.loadRelational(spark, root).tf)
       .select("term").collect().map(_.getString(0))
 
     // base.head holds docId 0 (shard 0); new conversations land at the end
@@ -199,14 +205,15 @@ class IncrementalSpec extends AnyFunSuite {
     Incremental.append(spark, root, ds(delta), partitions = 4, shardSize = 256)
     assert(oldTerms.forall("00" < _), "the probe term must sort before every existing term")
 
-    // no persisted posting field can contradict the terms table: rows
-    // hold (shard, term, blocks) only, and per term the postings hold
-    // exactly df docs
+    // no persisted posting field can go stale: rows hold (shard, term,
+    // blocks) only, and per term the postings hold exactly df docs of a
+    // tf recompute from docs_raw
     val postings = BuildPipeline.loadPostings(spark, root)
     assert(postings.schema.fieldNames.toSeq == Seq("shard", "term", "blocks"))
     val docsPerTerm = postings.collect().groupMapReduce(_.term)(_.blocks.map(_.count.toLong).sum)(_ + _)
-    val df = BuildPipeline.loadRelational(spark, root).terms.select("term", "df").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val df = IndexBuild.termDict(IndexBuild.tfFromDocs(
+        IceLite.read(spark, Paths.get(root, "docs_raw").toString)))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(docsPerTerm == df)
     assert(df.contains("00"))
 
@@ -234,7 +241,7 @@ class IncrementalSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("idx-report").toString
     val base = TranscriptGen.localCorpus(42L, 30)
     BuildPipeline.run(spark, ds(base), root, "gen:42:30", partitions = 4, shardSize = 256)
-    val tables = Seq("docs_raw", "tf", "terms", "terms_by_role", "postings")
+    val tables = Seq("docs_raw", "tf", "postings")
     val before = tables.map(t => t -> snap(root, t).files.map(_.path).toSet).toMap
     val delta = ds(Seq(base.head.copy(text = "replaced wording w0001"), base(3).copy(text = " ")) ++
       (810L until 812L).flatMap(TranscriptGen.conversation(42L, _)))
@@ -246,7 +253,7 @@ class IncrementalSpec extends AnyFunSuite {
 
     val props = snap(root, "docs_raw").props
     assert(rep.props.forall { case (k, v) => props.get(k).contains(v) }, s"$props vs $rep")
-    assert(Seq("resolve", "tf", "terms", "terms_by_role", "stats", "postings", "docs_raw")
+    assert(Seq("resolve", "tf", "stats", "postings", "docs_raw")
       .forall(s => props.contains(s"append.ms.$s")))
     val newFiles = tables.flatMap(t => snap(root, t).files.filterNot(f => before(t)(f.path)))
     assert(rep.filesWritten == newFiles.size)
@@ -258,11 +265,12 @@ class IncrementalSpec extends AnyFunSuite {
 
   /** Jobs one append of this delta runs, as measured (local[4], AQE on:
     * every shuffle stage is a job of its own): the resolution, the stats
-    * collect, the five writes and their exchanges. It was 28 while the
-    * terms merge numbered new terms (a left join, an anti join and a
-    * window); an earlier design ran 74 on the benchmark's deltas. Never
-    * raise it. */
-  private val JobsPerAppendCeiling = 23
+    * collect, the three writes and their exchanges. It was 23 while the
+    * append also merged the `terms` and `terms_by_role` tables, and 28
+    * while the terms merge numbered new terms (a left join, an anti join
+    * and a window); an earlier design ran 74 on the benchmark's deltas.
+    * Never raise it. */
+  private val JobsPerAppendCeiling = 16
 
   test("an append interrupted before its docs_raw commit is re-derived by the next one") {
     val root = Files.createTempDirectory("idx-crash").toString

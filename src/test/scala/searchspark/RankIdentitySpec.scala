@@ -7,6 +7,7 @@ import searchspark.index.{IndexBuild, PostingIndex}
 import searchspark.model.SearchResult
 import searchspark.oracle.ScalarOracle
 import searchspark.query.SearchEngine
+import searchspark.stats.StatsService
 
 /** THE rank-identity gate (SURVEY.md §5.3, BASELINE.md row "query
   * correctness"): the Spark engine must return the oracle's docIDs AND
@@ -50,7 +51,7 @@ class RankIdentitySpec extends AnyFunSuite {
     assert(idx.stats.n == oracle.docCount)
     assert(idx.stats.skippedBlank == oracle.skippedBlank)
     assert(idx.stats.avgdl == oracle.avgdlGlobal)
-    assert(idx.terms.count() == oracle.termCount)
+    assert(StatsService.collect(idx).totalTerms == oracle.termCount)
   }
 
   // "Parity path": SearchEngine at its default shard size, which puts the

@@ -35,7 +35,7 @@ class ResumeSpec extends AnyFunSuite {
     val resumed = Files.createTempDirectory("idx-resume").toString
 
     val r1 = BuildPipeline.run(spark, corpus, cold, "gen:42:" + convs, partitions = 4)
-    assert(r1.ranStages.size == 6 && r1.skippedStages.isEmpty)
+    assert(r1.ranStages.size == 4 && r1.skippedStages.isEmpty)
 
     // killed build: crashes after the tf stage commits
     intercept[BuildPipeline.InjectedFailure] {
@@ -43,14 +43,14 @@ class ResumeSpec extends AnyFunSuite {
         partitions = 4, failAfter = Some("tf"))
     }
     val m = BuildPipeline.readManifest(resumed).get
-    assert(m.stages.contains("tf") && !m.stages.contains("terms"))
+    assert(m.stages.contains("tf") && !m.stages.contains("stats"))
 
     // resume: earlier stages skipped, rest run
     val r2 = BuildPipeline.run(spark, corpus, resumed, "gen:42:" + convs, partitions = 4)
     assert(r2.skippedStages == Seq("docs_raw", "tf"))
-    assert(r2.ranStages == Seq("terms", "terms_by_role", "stats", "postings"))
+    assert(r2.ranStages == Seq("stats", "postings"))
 
-    Seq("docs_raw", "tf", "terms", "terms_by_role", "postings").foreach { t =>
+    Seq("docs_raw", "tf", "postings").foreach { t =>
       assert(tableRows(cold, t) == tableRows(resumed, t), s"table $t differs")
     }
   }
@@ -68,11 +68,11 @@ class ResumeSpec extends AnyFunSuite {
     BuildPipeline.run(spark, corpus, viaIce, "gen:42:" + convs, partitions = 4)
     val r = BuildPipeline.run(spark, corpus, viaDir, "gen:42:" + convs,
       partitions = 4, catalog = DirCatalog)
-    assert(r.ranStages.size == 6 && r.skippedStages.isEmpty)
+    assert(r.ranStages.size == 4 && r.skippedStages.isEmpty)
     def dirRows(name: String): Seq[String] =
       DirCatalog.read(spark, Paths.get(viaDir, name).toString)
         .toJSON.collect().sorted.toSeq
-    Seq("docs_raw", "tf", "terms", "terms_by_role", "postings").foreach { t =>
+    Seq("docs_raw", "tf", "postings").foreach { t =>
       assert(dirRows(t) == tableRows(viaIce, t),
         s"table $t must be byte-identical across catalogs")
     }
@@ -82,7 +82,7 @@ class ResumeSpec extends AnyFunSuite {
     // resume: a re-run through DirCatalog skips every stage
     val r2 = BuildPipeline.run(spark, corpus, viaDir, "gen:42:" + convs,
       partitions = 4, catalog = DirCatalog)
-    assert(r2.ranStages.isEmpty && r2.skippedStages.size == 6)
+    assert(r2.ranStages.isEmpty && r2.skippedStages.size == 4)
     // and the DirCatalog-persisted index loads + answers like the IceLite one
     val idxDir = BuildPipeline.loadRelational(spark, viaDir, catalog = DirCatalog)
     val idxIce = BuildPipeline.loadRelational(spark, viaIce)
@@ -99,7 +99,7 @@ class ResumeSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("idx-noop").toString
     BuildPipeline.run(spark, corpus, root, "gen:42:" + convs, partitions = 4)
     val r = BuildPipeline.run(spark, corpus, root, "gen:42:" + convs, partitions = 4)
-    assert(r.ranStages.isEmpty && r.skippedStages.size == 6)
+    assert(r.ranStages.isEmpty && r.skippedStages.size == 4)
   }
 
   test("changed params invalidate checkpoints (full rebuild)") {
@@ -107,15 +107,14 @@ class ResumeSpec extends AnyFunSuite {
     BuildPipeline.run(spark, corpus, root, "gen:42:" + convs, partitions = 4)
     val r = BuildPipeline.run(spark, corpus, root, "gen:42:" + convs,
       partitions = 4, shardSize = 128)
-    assert(r.ranStages.size == 6)
+    assert(r.ranStages.size == 4)
   }
 
   test("per-stage lineage records rows + elapsed + fingerprint") {
     val root = Files.createTempDirectory("idx-lineage").toString
     BuildPipeline.run(spark, corpus, root, "gen:42:" + convs, partitions = 4)
     val m = BuildPipeline.readManifest(root).get
-    assert(m.stages.keySet == Set("docs_raw", "tf", "terms",
-      "terms_by_role", "stats", "postings"))
+    assert(m.stages.keySet == Set("docs_raw", "tf", "stats", "postings"))
     m.stages.values.foreach { s =>
       assert(s.status == "done" && s.rows > 0 && s.fingerprint.nonEmpty)
     }

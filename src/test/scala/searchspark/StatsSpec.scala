@@ -60,6 +60,35 @@ class StatsSpec extends AnyFunSuite {
     assert(!failedStats.indexed)
   }
 
+  test("statistics rollup after an append equals a cold build of the final turns") {
+    import spark.implicits._
+    import searchspark.index.{BuildPipeline, Incremental}
+    import searchspark.model.Turn
+    val root = Files.createTempDirectory("idx-stats-append").toString
+    // one doc holds the only "auditor" role and the only "qqzzyx" term
+    val solo = Turn("solo-conv", 0, "auditor", "qqzzyx audits w0001 tables", null,
+      new java.sql.Timestamp(1700000000000L))
+    val base = turns :+ solo
+    BuildPipeline.run(spark, spark.createDataset(base), root, "stats:append", partitions = 3,
+      shardSize = 256)
+    // retract the solo doc (its term and its role empty), replace a turn,
+    // add a conversation
+    val delta = Seq(solo.copy(text = ""), base.head.copy(text = "aaaa replaced wording w0002")) ++
+      TranscriptGen.conversation(42L, 900L)
+    Incremental.append(spark, root, spark.createDataset(delta), partitions = 3)
+
+    val keys = delta.map(t => (t.conv_id, t.turn_idx)).toSet
+    val finalTurns = base.filterNot(t => keys((t.conv_id, t.turn_idx))) ++ delta
+    val got = StatsService.collect(BuildPipeline.loadRelational(spark, root))
+    val want = StatsService.collect(IndexBuild.build(spark, spark.createDataset(finalTurns),
+      partitions = 3))
+    assert(got.totalDocs == want.totalDocs && got.totalTerms == want.totalTerms)
+    assert(got.totalTerms == new ScalarOracle(finalTurns).termCount)
+    assert(got.scopes.map(s => (s.scope, s.docs, s.terms)) ==
+      want.scopes.map(s => (s.scope, s.docs, s.terms)))
+    assert(!got.scopes.exists(_.scope == "auditor"), "a role without docs has no scope row")
+  }
+
   test("IceLite: overwrite commits are snapshot-isolated + time travel works") {
     import spark.implicits._
     val t = Files.createTempDirectory("icelite").toString

@@ -50,7 +50,7 @@ class StreamIngestSpec extends AnyFunSuite {
     val tfFull = IndexBuild.tfFromDocs(docsRaw)
     assert(tfIncr.exceptAll(tfFull).count() == 0 && tfFull.exceptAll(tfIncr).count() == 0)
     IndexChecks.assertDictionaryIsRecompute(spark, root)
-    IndexChecks.assertEngineDfIsDictionary(spark, root)
+    IndexChecks.assertEngineDfIsRecompute(spark, root)
 
     // postings decode-identical to a from-scratch segment build
     val idx = BuildPipeline.loadRelational(spark, root)

@@ -3,7 +3,7 @@ package searchspark
 import org.scalatest.funsuite.AnyFunSuite
 
 import searchspark.gen.TranscriptGen
-import searchspark.index.{BuildPipeline, IndexBuild, PostingIndex, Segments}
+import searchspark.index.{BuildPipeline, IndexBuild, PostingIndex}
 import searchspark.oracle.ScalarOracle
 import searchspark.query.{SearchEngine, Wand}
 
@@ -35,17 +35,6 @@ class WandSpec extends AnyFunSuite {
     // total postings across segments == tf row count
     val totalPostings = postings.collect().map(_.blocks.map(_.count).sum.toLong).sum
     assert(totalPostings == idx.tf.count())
-  }
-
-  test("the posting encode ignores the dictionary") {
-    def decoded(p: org.apache.spark.sql.Dataset[searchspark.model.TermPostings]) =
-      p.collect().map { tp =>
-        val (d, t, l, r) = Segments.decodeAll(tp.blocks)
-        (tp.shard, tp.term, d.toSeq, t.toSeq, l.toSeq, r.toSeq)
-      }.sortBy(x => (x._1, x._2)).toSeq
-    val full = decoded(PostingIndex.build(spark, idx))
-    assert(full.nonEmpty)
-    assert(decoded(PostingIndex.build(spark, idx.copy(terms = idx.terms.limit(0)))) == full)
   }
 
   test("WAND is rank-identical to the oracle on the query set (unscoped)") {
@@ -254,17 +243,10 @@ class WandSpec extends AnyFunSuite {
     val before = sc.getPersistentRDDs.keySet
     val loaded = SearchEngine.load(spark, root)
     assert(loaded.shardSize == 256, "load takes the shard size from the build manifest")
-    // cold queries fill the engine's dictionary caches, scoped and not
+    // cold queries fill the engine's df caches, scoped and not
     assert(loaded.search("w0001 w0002").ok)
     loaded.search("w0001 w0002", scope = Some("user"))
     assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, "fixture sanity: the engine persists")
-    // the df lookup reads the serving partitions, so the dictionary
-    // tables stay uncached
-    val cached = spark.sharedState.cacheManager
-    Seq("terms" -> loaded.idx.terms, "terms_by_role" -> loaded.idx.termsByRole).foreach { case (t, df) =>
-      assert(cached.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty,
-        s"the engine cached $t")
-    }
     loaded.close()
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"RDDs still persisted after close(): " +

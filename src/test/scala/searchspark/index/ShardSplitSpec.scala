@@ -18,8 +18,6 @@ class ShardSplitSpec extends AnyFunSuite {
     BuiltIndex(
       docs = spark.emptyDataFrame,
       tf = tf.toDF("docId", "role", "dlE1", "term", "tfE1"),
-      terms = spark.emptyDataFrame,
-      termsByRole = spark.emptyDataFrame,
       stats = CorpusStats(tf.map(_._1).distinct.size, 1.0, tf.size, 0),
       statsByRole = Map("user" -> (tf.map(_._1).distinct.size.toLong, 1.0)),
       roleList = Seq("user"))
@@ -37,6 +35,21 @@ class ShardSplitSpec extends AnyFunSuite {
     assert(msgs(e).exists(m => m.contains("shard id out of Int range") &&
         m.contains(s"docId=${1L << 44}") && m.contains("shardSize=16")),
       s"expected the shard-range guard, got: ${msgs(e).mkString(" | ")}")
+  }
+
+  test("a non-positive shardSize fails before any stage runs") {
+    import spark.implicits._
+    val turns = spark.createDataset(searchspark.gen.TranscriptGen.localCorpus(42L, 2))
+    Seq(-4, 0).foreach { size =>
+      val root = java.nio.file.Files.createTempDirectory("idx-shard").toString
+      val e = intercept[IllegalArgumentException] {
+        BuildPipeline.run(spark, turns, root, "gen:42:2", partitions = 2, shardSize = size)
+      }
+      assert(e.getMessage.contains(size.toString), e.getMessage)
+      assert(IceLite.currentSnapshot(java.nio.file.Paths.get(root, "docs_raw").toString).isEmpty,
+        s"shardSize $size: a docs_raw snapshot was written")
+      intercept[IllegalArgumentException](PostingIndex.build(spark, index(Nil), shardSize = size))
+    }
   }
 
   test("high-docId build the 23/40 split would have rejected") {
