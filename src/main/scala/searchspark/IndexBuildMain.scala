@@ -14,9 +14,9 @@ import searchspark.index.{BuildPipeline, IndexBuild}
   *     --root /path/to/index [--transcripts /path/to/parquet | --convs N] \
   *     [--partitions P] [--shard-size S] [--append]
   *
-  * Cold runs build all 4 stages; re-runs resume from the checkpoint
-  * manifest; `--append` routes through the incremental path instead
-  * (indexPage analog).
+  * Cold runs build both stages (docs_raw, postings); re-runs resume
+  * from the checkpoint manifest; `--append` routes through the
+  * incremental path instead (indexPage analog).
   */
 object IndexBuildMain {
   def main(args: Array[String]): Unit = {

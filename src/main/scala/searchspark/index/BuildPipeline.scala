@@ -25,22 +25,27 @@ import searchspark.model.{TermPostings, Turn, ZoneConfig}
   * Stage graph:
   * {{{
   *   docs_raw   stable docId assignment over non-blank, deduped turns
-  *   tf         analyzer projection + TF agg (carries role + dl)
-  *   stats      scalar stats JSON (n, avgdl, blanks, per-role, exact sums)
-  *   postings   compressed segments, rows (shard, term, blocks)
+  *   postings   docs_raw analyzed once (the TF kernel, cached for the
+  *              stage): stats.json (n, avgdl, blanks, per-role, exact
+  *              sums) from its sums, then the compressed segments, rows
+  *              (shard, term, blocks)
   * }}}
   *
-  * No term dictionary is stored: the postings are the one source of df
-  * (SearchService.servingDf counts it per query; IndexBuild.termDict
-  * derives it from tf for a full listing). A root written when the
-  * build still kept `terms` / `terms_by_role` tables loads and appends
-  * unchanged; those tables are ignored, not deleted.
+  * At rest the index is docs_raw, postings and stats.json. The tf rows
+  * are not stored: the postings hold exactly their fields, and a loaded
+  * root's `BuiltIndex.tf` re-derives them from docs_raw for the rare
+  * rollup reader. No term dictionary is stored either: the postings are
+  * the one source of df (SearchService.servingDf counts it per query;
+  * IndexBuild.termDict derives it from tf for a full listing). A root
+  * written while the build still kept `tf`, `terms` or `terms_by_role`
+  * tables loads and appends unchanged; those tables are ignored, not
+  * deleted.
   *
-  * docs_raw, tf and postings are written one file per doc-range shard
+  * docs_raw and postings are written one file per doc-range shard
   * (IceLite.FileLayout), so Incremental.append rewrites the files of the
-  * shards it touches and keeps every other file. The stage bodies are
-  * shared with Incremental, which re-derives the tables from docs_raw
-  * when it finds them out of step.
+  * shards it touches and keeps every other file. The postings stage body
+  * is shared with Incremental, which re-derives the postings and the
+  * stats from docs_raw when it finds them out of step.
   */
 object BuildPipeline {
 
@@ -214,9 +219,7 @@ object BuildPipeline {
           layout = docLayout(shardSize)).totalRows
       }
     }
-    stage("tf") { commitTf(spark, root, catalog, zones, shardSize).totalRows }
-    stage("stats") { commitStats(spark, root, catalog).n }
-    stage("postings") { commitPostings(spark, root, catalog, shardSize).totalRows }
+    stage("postings") { commitPostings(spark, root, catalog, zones, shardSize).totalRows }
 
     } catch {
       case e: Throwable =>
@@ -236,54 +239,55 @@ object BuildPipeline {
 
   private def table(root: String, name: String) = Paths.get(root, name).toString
 
-  /** docs_raw and tf: one file per doc-range shard, keyed by docId. */
+  /** docs_raw: one file per doc-range shard, keyed by docId. */
   private[index] def docLayout(shardSize: Int) = Some(IceLite.FileLayout("docId", shardSize))
   /** postings: one file per shard. */
   private[index] val postingsLayout = Some(IceLite.FileLayout("shard", 1))
 
-  /** Stage tf: the TF kernel over the committed docs_raw. */
-  private[index] def commitTf(spark: SparkSession, root: String, catalog: TableCatalog,
-                              zones: Option[ZoneConfig], shardSize: Int,
-                              props: Map[String, String] = Map.empty): IceLite.Snapshot =
-    catalog.commit(spark,
-      IndexBuild.tfFromDocs(catalog.read(spark, table(root, "docs_raw")), zones),
-      table(root, "tf"), props = props, layout = docLayout(shardSize))
-
-  /** Stage stats: exact sums over the committed docs_raw and tf. A cold
-    * build lists its roles sorted; with `appendRoles` the roles already
-    * in stats.json keep their position (see [[writeStats]]). */
-  private[index] def commitStats(spark: SparkSession, root: String, catalog: TableCatalog,
-                                 appendRoles: Boolean = false,
-                                 extra: Map[String, String] = Map.empty): CorpusStats = {
-    val totalTurns = catalog.currentSnapshot(table(root, "docs_raw"))
-      .flatMap(_.props.get("totalTurns")).map(_.toLong).getOrElse(0L)
-    val sums = IndexBuild.corpusSums(catalog.read(spark, table(root, "docs_raw")),
-      catalog.read(spark, table(root, "tf")))
-    writeStats(root, sums, totalTurns, appendRoles, extra)
-  }
-
-  /** Stage postings: every shard's segments from the committed tables. */
+  /** Stage postings: analyze the committed docs_raw once into a frame
+    * cached for this call, write stats.json from its exact sums, then
+    * encode and commit every shard's segments from it. A cold build
+    * lists its roles sorted; with `appendRoles` the roles already in
+    * stats.json keep their position (see [[roleList]]). */
   private[index] def commitPostings(spark: SparkSession, root: String, catalog: TableCatalog,
-                                    shardSize: Int,
+                                    zones: Option[ZoneConfig], shardSize: Int,
+                                    appendRoles: Boolean = false,
                                     props: Map[String, String] = Map.empty): IceLite.Snapshot =
-    catalog.commit(spark,
-      PostingIndex.build(spark, loadRelational(spark, root, catalog), shardSize).toDF(),
-      table(root, "postings"), props = props, layout = postingsLayout)
+    CacheScope { scope =>
+      val docs = catalog.read(spark, table(root, "docs_raw"))
+      val tf = scope.cache(IndexBuild.tfFromDocs(docs, zones))
+      val totalTurns = catalog.currentSnapshot(table(root, "docs_raw"))
+        .flatMap(_.props.get("totalTurns")).map(_.toLong).getOrElse(0L)
+      val sums = IndexBuild.corpusSums(docs, tf)
+      val roles = roleList(if (appendRoles) readRoles(root) else Nil,
+        sums.collect { case (r, d) if d.n > 0 => r })
+      writeStats(root, sums, totalTurns, roles, props)
+      catalog.commit(spark,
+        PostingIndex.encode(spark, tf, roles.zipWithIndex.toMap, shardSize).toDF(),
+        table(root, "postings"), props = props, layout = postingsLayout)
+    }
+
+  /** The role dictionary once the roles `live` have docs. It is
+    * APPEND-ONLY: the roles of `old` keep their position (posting blocks
+    * encode roleIds as positions and kept shards are never re-encoded);
+    * new roles go at the end, sorted among themselves; a role with no
+    * docs left stays listed. */
+  private[index] def roleList(old: Seq[String], live: Iterable[String]): Seq[String] =
+    old ++ (live.toSet -- old).toSeq.sorted
+
+  /** The role dictionary stats.json lists (empty when there is none). */
+  private[index] def readRoles(root: String): Seq[String] =
+    readStats(root).flatMap(_.get("roles")).map(decodeRoles).getOrElse(Nil)
 
   /** stats.json with the exact per-role sums (`sumDl`, `roleDl.<role>`)
-    * an append updates by delta. With `appendRoles` the role dictionary
-    * is APPEND-ONLY: roles already listed keep their position (posting
-    * blocks encode roleIds as positions and kept shards are never
-    * re-encoded); new roles go at the end, sorted among themselves; a
-    * role with no docs left stays listed. */
+    * an append updates by delta, and the role dictionary `roles` (see
+    * [[roleList]]). */
   private[index] def writeStats(root: String, sums: Map[String, DocSums], totalTurns: Long,
-                                appendRoles: Boolean,
+                                roles: Seq[String],
                                 extra: Map[String, String] = Map.empty): CorpusStats = {
     val (stats, byRole) = IndexBuild.statsFromSums(sums, totalTurns)
-    val oldRoles =
-      if (!appendRoles) Nil
-      else readStats(root).flatMap(_.get("roles")).map(decodeRoles).getOrElse(Nil)
-    val roles = oldRoles ++ (byRole.keySet -- oldRoles).toSeq.sorted
+    require(byRole.keySet.subsetOf(roles.toSet),
+      s"roles ${(byRole.keySet -- roles).toSeq.sorted.mkString(", ")} have docs but no roleId")
     val payload = Map(
       "n" -> stats.n.toString, "avgdl" -> stats.avgdl.toString,
       "totalTurns" -> stats.totalTurns.toString,
@@ -314,7 +318,14 @@ object BuildPipeline {
       role -> DocSums(v.split(":")(0).toLong, stats(s"roleDl.$role").toLong)
     })
 
-  /** Load the relational index tables from a build root. */
+  /** The zone config the build at `root` recorded in its manifest. */
+  def manifestZones(root: String): Option[ZoneConfig] =
+    readManifest(root).flatMap(_.params.get("zones")).flatMap(parseZones)
+
+  /** Load the relational index from a build root: docs_raw and the
+    * stats. `tf` is a lazy view, the TF kernel over docs_raw under the
+    * manifest's zones; nothing on the search, load or append path reads
+    * it. */
   def loadRelational(spark: SparkSession, root: String,
                      catalog: TableCatalog = IceLite): BuiltIndex = {
     def table(name: String) = Paths.get(root, name).toString
@@ -326,10 +337,8 @@ object BuildPipeline {
       val Array(n, a) = v.split(":")
       k.stripPrefix("role.") -> (n.toLong, a.toDouble)
     }
-    BuiltIndex(
-      catalog.read(spark, table("docs_raw")), // docs == docs_raw (dl lives in tf)
-      catalog.read(spark, table("tf")),
-      stats, byRole,
+    val docs = catalog.read(spark, table("docs_raw"))
+    BuiltIndex(docs, IndexBuild.tfFromDocs(docs, manifestZones(root)), stats, byRole,
       roleList = statsMap.get("roles").map(decodeRoles).getOrElse(Nil))
   }
 

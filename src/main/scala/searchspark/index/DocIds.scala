@@ -56,8 +56,9 @@ final case class KeyWin(conv_id: String, turn_idx: Int, role: String,
   * each evaluate the input plan once and must see identical partition
   * layouts; plans containing their own exchanges (e.g. join outputs)
   * can legally re-coalesce between evaluations under AQE — such callers
-  * use [[assignViaRangeExchange]] instead (Incremental ranks its fresh
-  * keys with a window over the resolved delta).
+  * need a single range exchange over the full rows instead (the tests'
+  * Oracles.assignViaRangeExchange; Incremental ranks its fresh keys
+  * with a window over the resolved delta).
   * The zip walk verifies every routed address resolves and fails loudly
   * on a violation rather than mis-assigning.
   *
@@ -325,30 +326,5 @@ object DocIds {
       }
     }
     spark.createDataset(rows).toDF()
-  }
-
-  /** The single-exchange fused form (round-3's design): key-dedup fused
-    * into ZipIndex's range shuffle — ONE wide exchange of the full rows.
-    * Kept as the independent cross-check form StabilitySpec pins the zip
-    * path against. */
-  def assignViaRangeExchange(spark: SparkSession, turns: Dataset[Turn],
-                             partitions: Int, scope: CacheScope): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val sortedDedup = turns.toDF()
-      .filter(col("text").isNotNull && trim(col("text")) =!= "")
-      .select(col("conv_id"), col("turn_idx"),
-        struct(col("ts"), col("role"), col("tool"), col("text")).as("__v"))
-      .repartitionByRange(partitions, col("conv_id"), col("turn_idx"))
-      .sortWithinPartitions(col("conv_id"), col("turn_idx"), col("__v").desc)
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("conv_id", "turn_idx").orderBy(col("__v").desc)))
-      .filter(col("__rn") === 1)
-      .select(col("conv_id"), col("turn_idx"),
-        coalesce(col("__v.role"), lit("")).as("role"),
-        col("__v.tool").as("tool"), col("__v.ts").as("ts"),
-        col("__v.text").as("text"))
-    ZipIndex.rankOverSorted(sortedDedup, "docId", scope)
-      .select("docId", "conv_id", "turn_idx", "role", "tool", "ts", "text")
   }
 }

@@ -5,12 +5,12 @@ import java.nio.file.Paths
 import scala.collection.immutable.TreeSet
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import searchspark.index.IceLite.{FileEntry, Snapshot}
-import searchspark.model.Turn
+import searchspark.model.{TermPostings, Turn, ZoneConfig}
 
 /** Incremental (re)index — the batch analog of the reference's
   * `POST /api/indexPage` (IndexingServiceImpl.java:129-157): a known
@@ -26,7 +26,7 @@ import searchspark.model.Turn
   *    semantics for new pages; documented deviation from the cold
   *    build's global-rank ids, invisible to scoring);
   *  - a delta row that BLANKS an existing key's text RETRACTS that doc
-  *    (removed from docs_raw/tf, its shard rebuilt without it) — the
+  *    (removed from docs_raw, its shard rebuilt without it) — the
   *    failed-refetch delete analog; blanks for unknown keys stay
   *    ignored. Counted in [[Report.retracted]].
   *
@@ -35,18 +35,25 @@ import searchspark.model.Turn
   *  - the batch is resolved ONCE against docs_raw's keys into one cached
   *    frame (kind, docId, payload); one aggregate over it gives the
   *    counts, the touched shards and the touched docIds;
-  *  - docs_raw, tf and postings are stored one file per doc-range shard
+  *  - docs_raw and postings are stored one file per doc-range shard
   *    (BuildPipeline), so each gets new files for the touched shards
   *    only; its snapshot lists every other file under its old path
-  *    (IceLite `keep`). Only the touched shards' posting segments are
-  *    rebuilt, from their new tf files (SURVEY.md §2.4 C9);
+  *    (IceLite `keep`);
+  *  - only the delta's text is analyzed. A touched shard's new posting
+  *    rows are its old postings file decoded (PostingIndex.decode),
+  *    minus the replaced and retracted docs, plus the delta's tf rows,
+  *    re-encoded by the build's kernel (SURVEY.md §2.4 C9);
   *  - the stats move by delta: stats.json keeps exact Long sums (docs
   *    and Σ dlE1 per role), changed by the docs and tf rows added minus
-  *    those removed among the touched docs, so avgdl stays bit-identical
-  *    to a full recompute.
+  *    the decoded rows of the docs removed, so avgdl stays bit-identical
+  *    to a full recompute;
+  *  - the role dictionary is fixed on the driver from the resolution
+  *    (old roles keep their ids, new ones follow, sorted), so docs_raw,
+  *    stats and postings are written side by side.
   *
   * No term dictionary is kept: df is the postings' own count. The
-  * `terms` / `terms_by_role` tables of older roots are left unread.
+  * `tf`, `terms` and `terms_by_role` tables of older roots are left
+  * unread.
   *
   * Posting rows carry no global value (no df), so a kept shard's rows
   * cannot go stale. They stay SOUND under stat drift:
@@ -55,25 +62,28 @@ import searchspark.model.Turn
   *
   * Crash safety: every table an append writes and stats.json carry the
   * append's `generation`; docs_raw is committed LAST and is the truth.
-  * An append that finds a table or the stats at another generation than
-  * docs_raw (a crashed append, or a root written before the sums were
-  * kept) first re-derives them all from docs_raw — the build's own
-  * stage bodies — and then applies its batch.
+  * An append that finds the postings or the stats at another generation
+  * than docs_raw (a crashed append, or a root written before the sums
+  * were kept) first re-derives both from docs_raw — the build's own
+  * postings stage body — and then applies its batch.
   */
 object Incremental {
 
-  /** What one append did. Written into the docs_raw snapshot props. */
-  final case class Report(replaced: Long, added: Long, shardsRebuilt: Long,
-                          shardsReused: Long, retracted: Long = 0L,
+  /** What one append did. Written into the docs_raw snapshot props.
+    * `shards` are the ids of the touched (rebuilt) shards, ascending. */
+  final case class Report(replaced: Long, added: Long, shards: Seq[Long],
+                          retracted: Long = 0L, shardsReused: Long = 0L,
                           filesKept: Long = 0L, filesWritten: Long = 0L,
                           bytesWritten: Long = 0L,
                           stepMs: Map[String, Long] = Map.empty) {
+    def shardsRebuilt: Long = shards.size.toLong
     def props: Map[String, String] = Map(
       "append.replaced" -> replaced, "append.added" -> added,
       "append.retracted" -> retracted, "append.shardsRebuilt" -> shardsRebuilt,
       "append.shardsReused" -> shardsReused, "append.filesKept" -> filesKept,
       "append.filesWritten" -> filesWritten, "append.bytesWritten" -> bytesWritten)
       .map { case (k, v) => k -> v.toString } ++
+      Map("append.shards" -> shards.mkString(",")) ++
       stepMs.map { case (step, ms) => s"append.ms.$step" -> ms.toString }
   }
 
@@ -96,8 +106,7 @@ object Incremental {
     // silently mis-shards the rebuilt segments and duplicates kept ones
     // — caught by StreamIngestSpec); an explicit argument is only
     // accepted when it agrees
-    val zones = BuildPipeline.readManifest(root).flatMap(_.params.get("zones"))
-      .flatMap(BuildPipeline.parseZones)
+    val zones = BuildPipeline.manifestZones(root)
     val manifestShard = BuildPipeline.manifestShardSize(root)
     require(shardSize <= 0 || manifestShard.forall(_ == shardSize),
       s"shardSize $shardSize contradicts the build manifest ($manifestShard)")
@@ -156,7 +165,7 @@ object Incremental {
       }
       def counted(k: String) = groups.filter(_.getString(0) == k).map(_.getLong(4)).sum
       val (nReplaced, nAdded, nRetracted) = (counted(Replace), counted(Add), counted(Retract))
-      if (groups.isEmpty) Report(0, 0, 0, 0)
+      if (groups.isEmpty) Report(0, 0, Nil)
       else {
         val touched = TreeSet(groups.map(_.getLong(1)): _*)
         // docs whose old rows leave: replaced and retracted ones
@@ -183,20 +192,30 @@ object Incremental {
           IceLite.publish(IceLite.stage(spark, df, table(name), layout = layout),
             "append", nextGen, keep)
 
+        // the role dictionary after the append, fixed before any write:
+        // old roles keep their ids, the delta's new ones follow, sorted
+        val roles = BuildPipeline.roleList(BuildPipeline.readRoles(root),
+          groups.filter(_.getString(0) != Retract).map(_.getString(2)))
         val newDocs = resolved.filter(col("kind") =!= Retract)
           .select("docId", "conv_id", "turn_idx", "role", "tool", "ts", "text")
-        // the delta's TF: the only text analyzed
-        val tfDelta = scope.cache(IndexBuild.tfFromDocs(newDocs, zones))
-        val tfSnap0 = snapshot("tf")
-        val (tfKeep, tfRepl) = split(tfSnap0.files, effShardSize)
-        val tfOld = read(tfSnap0, tfRepl)
+        // the delta's TF: the only text analyzed. The stats and the
+        // postings each analyze it, and each decodes the touched shards'
+        // old postings: caching either costs more Spark jobs (a cache is
+        // materialized by a job of its own, once per concurrent reader)
+        // than the few small reads it saves
+        val tfDelta = IndexBuild.tfFromDocs(newDocs, zones)
+        val postSnap0 = snapshot("postings")
+        // one file per shard (the build's layout, or a re-derive's)
+        val (postKeep, postRepl) = split(postSnap0.files, 1L)
+        val tfOld = read(postSnap0, postRepl).map(old => PostingIndex.decode(
+          old.as[TermPostings](Encoders.product[TermPostings]), roles))
         val totalTurns = docsSnap0.props.get("totalTurns").map(_.toLong).getOrElse(0L) + nAdded
 
-        // The writes depend only on the resolved delta and its caches, so
-        // they run side by side, each on its own thread (each is a handful
-        // of small stages); postings wait for the new tf files.
-        // docs_raw is staged now and published LAST, as the append's
-        // commit point, with the report (its own files included) in its props
+        // The writes depend only on the resolved delta, so they run side
+        // by side, each on its own thread (each is a handful of small
+        // stages). docs_raw is staged now and published LAST, as the
+        // append's commit point, with the report (its own files included)
+        // in its props
         val (docsKeep, docsRepl) = split(docsSnap0.files, effShardSize)
         val staged = fork(step("docs_raw") {
           IceLite.stage(spark,
@@ -205,9 +224,8 @@ object Incremental {
         })
 
         // stats: exact per-role sums moved by the delta; Σ dlE1 by +tfE1 per
-        // added tf row and -tfE1 per removed one. This first read of the
-        // delta's tf materializes its cache before the tf write shares it.
-        step("stats") {
+        // added tf row and -tfE1 per removed one
+        val statsDone = fork(step("stats") {
           val ddl = union(
             Some(tfDelta.select(col("role"), col("tfE1").cast("long").as("c"))),
             tfOld.map(_.filter(!dropOld).select(col("role"), (-col("tfE1")).cast("long").as("c"))))
@@ -220,34 +238,24 @@ object Incremental {
           }.toMap
           // totalTurns grows only by genuinely NEW docs: counting a delta's
           // raw rows would drift it upward on every idempotent replay
-          BuildPipeline.writeStats(root, sums, totalTurns, appendRoles = true, extra = nextGen)
-        }
-
-        // tf: the touched shards' rows without the old docs, plus the delta's
-        val tfSnap = fork(step("tf") {
-          commit("tf", union(tfOld.map(_.filter(dropOld)), Some(tfDelta)), tfKeep,
-            BuildPipeline.docLayout(effShardSize))
+          BuildPipeline.writeStats(root, sums, totalTurns, roles, extra = nextGen)
         })
-        // postings: rebuild the touched shards from their new tf files
-        val postSnap0 = snapshot("postings")
-        // one file per shard (the build's layout, or a re-derive's)
-        val postKeep = split(postSnap0.files, 1L)._1
-        try {
-          val tfNew = tfSnap()
-          val postSnap = step("postings") {
-            val tfTouched = IceLite.readFiles(spark, tfNew, tfNew.files.drop(tfKeep.size))
-              .filter((col("docId") / effShardSize).cast("long").isin(touched.toSeq: _*))
-            val idx = BuildPipeline.loadRelational(spark, root)
-            val rebuilt = PostingIndex.build(spark, idx.copy(tf = tfTouched), effShardSize).toDF()
-            commit("postings", rebuilt, postKeep, BuildPipeline.postingsLayout)
-          }
 
+        try {
+          // postings: each touched shard's old rows without the old docs,
+          // plus the delta's rows, re-encoded
+          val postSnap = step("postings") {
+            val rows = union(tfOld.map(_.filter(dropOld)), Some(tfDelta))
+            commit("postings",
+              PostingIndex.encode(spark, rows, roles.zipWithIndex.toMap, effShardSize).toDF(),
+              postKeep, BuildPipeline.postingsLayout)
+          }
+          statsDone()
           val docs = staged()
-          val written = tfNew.files.drop(tfKeep.size) ++ postSnap.files.drop(postKeep.size) ++
-            docs.files
-          val done = Report(nReplaced, nAdded, touched.size,
-            postKeep.flatMap(_.keys).flatMap(k => k.lo to k.hi).distinct.size, nRetracted,
-            filesKept = tfKeep.size + postKeep.size + docsKeep.size,
+          val written = postSnap.files.drop(postKeep.size) ++ docs.files
+          val done = Report(nReplaced, nAdded, touched.toSeq, nRetracted,
+            shardsReused = postKeep.flatMap(_.keys).flatMap(k => k.lo to k.hi).distinct.size,
+            filesKept = postKeep.size + docsKeep.size,
             filesWritten = written.size, bytesWritten = written.map(_.bytes).sum,
             stepMs = stepMs.synchronized(stepMs.toMap))
           IceLite.publish(docs, "append",
@@ -256,7 +264,7 @@ object Incremental {
         } catch {
           case e: Throwable =>
             // let every branch finish before the caches are released
-            Seq(tfSnap, staged).foreach(f => scala.util.Try(f()))
+            Seq(statsDone, staged).foreach(f => scala.util.Try(f()))
             throw e
         }
       }
@@ -282,23 +290,19 @@ object Incremental {
     () => { t.join(); result.fold(e => throw e, identity) }
   }
 
-  /** Every table and stats.json reflect docs_raw's generation, and the
+  /** The postings and stats.json reflect docs_raw's generation, and the
     * stats hold the exact sums the delta moves. */
   private def consistent(root: String, gen: Long): Boolean = {
     def genOf(props: Map[String, String]) = props.get(Generation).map(_.toLong).getOrElse(0L)
     val stats = BuildPipeline.readStats(root).getOrElse(Map.empty)
-    Seq("tf", "postings").forall(t =>
-      IceLite.currentSnapshot(Paths.get(root, t).toString).exists(s => genOf(s.props) == gen)) &&
+    IceLite.currentSnapshot(Paths.get(root, "postings").toString).exists(s => genOf(s.props) == gen) &&
       genOf(stats) == gen && BuildPipeline.statsSums(stats).isDefined
   }
 
-  /** Re-derive every table and the stats from docs_raw with the build's
-    * own stage bodies, stamped with docs_raw's generation. */
-  private def rederive(spark: SparkSession, root: String, zones: Option[searchspark.model.ZoneConfig],
-                       shardSize: Int, gen: Long): Unit = {
-    val props = Map(Generation -> gen.toString)
-    BuildPipeline.commitTf(spark, root, IceLite, zones, shardSize, props)
-    BuildPipeline.commitStats(spark, root, IceLite, appendRoles = true, extra = props)
-    BuildPipeline.commitPostings(spark, root, IceLite, shardSize, props)
-  }
+  /** Re-derive the postings and the stats from docs_raw with the build's
+    * own stage body, stamped with docs_raw's generation. */
+  private def rederive(spark: SparkSession, root: String, zones: Option[ZoneConfig],
+                       shardSize: Int, gen: Long): Unit =
+    BuildPipeline.commitPostings(spark, root, IceLite, zones, shardSize, appendRoles = true,
+      props = Map(Generation -> gen.toString))
 }

@@ -17,14 +17,20 @@ final case class CorpusStats(n: Long, avgdl: Double, totalTurns: Long, skippedBl
 /** Exact sums over one role's docs: doc count and Σ dlE1. */
 final case class DocSums(n: Long, sumDl: Long)
 
-/** One uncompressed posting row as emitted by the TF kernel (field
-  * order IS the tf table's column order). */
+/** One uncompressed posting row as emitted by the TF kernel and by
+  * PostingIndex.decode (field order IS the tf frame's column order). */
 final case class TfRow(docId: Long, role: String, dlE1: Long, term: String, tfE1: Int)
 
-/** The built index, as DataFrames (persist via IceLite, or cache for
-  * tests). Replaces the reference's page/lemma/`index` MySQL tables
+/** The built index, as DataFrames (persist via BuildPipeline, or cache
+  * for tests). Replaces the reference's page/lemma/`index` MySQL tables
   * (SURVEY.md §1.1) with columnar, partition-friendly layouts. No term
-  * dictionary is stored (see [[IndexBuild.termDict]]). */
+  * dictionary is stored (see [[IndexBuild.termDict]]).
+  *
+  * `tf` is the uncompressed posting rows. The in-memory build caches
+  * them, for the posting build; a root loaded by
+  * BuildPipeline.loadRelational has no stored tf, and its `tf` is a
+  * derived view (the TF kernel over docs_raw) that only rollup readers
+  * (StatsService, Main's `terms=` line, graft.Bench) ever run. */
 final case class BuiltIndex(
     docs: DataFrame,        // docId, conv_id, turn_idx, role, tool, ts, text
     tf: DataFrame,          // docId, role, dlE1, term, tfE1 (uncompressed postings)
@@ -82,6 +88,10 @@ final case class BuiltIndex(
   * the postings (SearchService.servingDf), and `termDict` /
   * `termsByRole` below derive df over tf for the rare full listing.
   *
+  * This object also holds the kernels the persisted build
+  * (BuildPipeline) and the append (Incremental) share: `tfFromDocs`
+  * and the exact per-role sums behind the stats.
+  *
   * The only skew-sensitive step is the posting-SEGMENT build (collect a
   * term's in-shard postings together, one (shard, term) exchange), which
   * Segments.scala bounds by sharding docId ranges — a term's group can
@@ -99,9 +109,9 @@ object IndexBuild {
     * per doc in one in-memory map, emitting finished
     * (docId, role, dlE1, term, tfE1) rows narrowly.
     *
-    * The declarative groupBy form it replaces
-    * ([[tfFromDocsDeclarative]], kept as this kernel's cross-check in
-    * StabilitySpec) paid one shuffle over EVERY (doc, term) row plus a
+    * The declarative groupBy form it replaces (kept in the tests as
+    * this kernel's cross-check oracle, Oracles.tfFromDocsDeclarative)
+    * paid one shuffle over EVERY (doc, term) row plus a
     * dl join back that re-ran the aggregation lineage — at corpus
     * scale the TF shuffle was the build's largest exchange; here it is
     * gone entirely (measured at 131k turns / 5.5M tf rows, local[32]:
@@ -181,47 +191,6 @@ object IndexBuild {
       .toDF("docId", "role", "dlE1", "term", "tfE1")
   }
 
-  /** The declarative (Catalyst groupBy + dl-join) TF form the kernel
-    * above replaced — kept ONLY as the independent cross-check oracle
-    * (StabilitySpec asserts kernel == declarative row-for-row, zoned
-    * and unzoned). Not on any production path. */
-  def tfFromDocsDeclarative(docsRaw: DataFrame, zones: Option[ZoneConfig] = None): DataFrame = {
-    val tok = col("tok")
-    val tf0 = zones match {
-      case None =>
-        docsRaw
-          .select(col("docId"), col("role"), explode(Analyzer.tokensCol(col("text"))).as("tok"))
-          .filter(length(tok) > 1 || tok.isInCollection(Analyzer.KeepShort.toSeq.sorted))
-          .filter(!tok.isInCollection(Analyzer.Stopwords.toIndexedSeq))
-          .select(col("docId"), col("role"), Analyzer.lemmaCol(tok).as("term"))
-          .groupBy(col("docId"), col("role"), col("term"))
-          .agg((count(lit(1)) * Scoring.TfScaleE1).cast("int").as("tfE1"))
-      case Some(z) =>
-        docsRaw
-          .select(col("docId"), col("role"),
-            posexplode(Analyzer.tokensCol(col("text"))).as(Seq("pos", "tok")))
-          .filter(length(tok) > 1 || tok.isInCollection(Analyzer.KeepShort.toSeq.sorted))
-          .filter(!tok.isInCollection(Analyzer.Stopwords.toIndexedSeq))
-          .select(col("docId"), col("role"),
-            (col("pos") < z.titleTokens).as("isTitle"),
-            Analyzer.lemmaCol(tok).as("term"))
-          .groupBy(col("docId"), col("role"), col("term"))
-          .agg(sum(when(col("isTitle"), 1L).otherwise(0L)).as("tfT"),
-            sum(when(col("isTitle"), 0L).otherwise(1L)).as("tfB"))
-          .select(col("docId"), col("role"), col("term"),
-            when(col("tfB") > 0, col("tfB") * z.bodyWeightE1)
-              .otherwise(col("tfT") * z.titleWeightE1).cast("int").as("tfE1"))
-    }
-    // dlE1 = Σ tfE1 per doc, joined back onto the SKINNY tf rows (never
-    // the texts table): at bench scale the dl side auto-broadcasts; at
-    // cluster scale it's a shuffle join of two narrow tables. (A narrow
-    // per-row dl recompute was tried and reverted: higher-order filter()
-    // lambdas are interpreted, not codegen'd — it made TF 4x slower.)
-    val dl = tf0.groupBy("docId").agg(sum("tfE1").as("dlE1"))
-    tf0.join(dl, Seq("docId"))
-      .select("docId", "role", "dlE1", "term", "tfE1")
-  }
-
   /** df over tf, as (term, df): df = distinct docs (tf rows are unique
     * per (docId, term)). The one definition of df outside the query
     * path; a full scan of tf's term column. */
@@ -281,8 +250,8 @@ object IndexBuild {
     * and are counted via docMeta). `docMeta` is any one-row-per-doc
     * frame with a normalized `role` column — the build passes the
     * NARROW cached winner table so this job never touches text bytes;
-    * the pipeline's stats stage passes the persisted docs_raw (parquet
-    * column pruning reads role only). */
+    * the pipeline's postings stage passes the persisted docs_raw
+    * (parquet column pruning reads role only). */
   def corpusStats(docMeta: DataFrame, tf: DataFrame, totalTurns: Long)
     : (CorpusStats, Map[String, (Long, Double)]) =
     statsFromSums(corpusSums(docMeta, tf), totalTurns)

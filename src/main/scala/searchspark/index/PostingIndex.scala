@@ -1,6 +1,6 @@
 package searchspark.index
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import searchspark.model.TermPostings
@@ -26,9 +26,12 @@ final case class PostingRow(shard: Int, term: String, docId: Long, meta: Long, d
   *
   * At 10^12 turns: shardSize ~2^20 → ~10^6 shards; per-(shard,term)
   * encode groups stay ≤ 2^20 entries. The encode reads the tf rows only
-  * and emits (shard, term, blocks) rows, the index's one store of df; the
-  * postings table is written one file per shard (BuildPipeline), so an
-  * append replaces the files of the shards it touches.
+  * and emits (shard, term, blocks) rows. The postings are the index's
+  * one stored copy of the tf rows and its one store of df: `decode`
+  * gives the rows back, which is how an append rebuilds a touched shard
+  * (its old rows minus the replaced docs plus the delta's, re-encoded).
+  * The postings table is written one file per shard (BuildPipeline), so
+  * an append replaces the files of the shards it touches.
   */
 object PostingIndex {
 
@@ -36,17 +39,17 @@ object PostingIndex {
     * pick ~2^20 (see class doc). */
   val DefaultShardSize = 4096
 
-  /** Build compressed posting segments from the tf rows: one exchange
-    * on (shard, term), whose group size is bounded by shardSize. */
+  /** Build compressed posting segments from the index's tf rows (see
+    * [[encode]]), after checking that every role with stats has a
+    * roleId. */
   def build(spark: SparkSession, idx: BuiltIndex,
             shardSize: Int = DefaultShardSize): Dataset[TermPostings] = {
-    import spark.implicits._
     require(shardSize > 0, s"shardSize must be positive, got $shardSize")
     // role-dictionary guard (round-2 ADVICE, high): a role present in
     // the corpus but absent from the dictionary must fail the build
     // LOUDLY, never encode under a foreign roleId (scoped queries would
     // silently return foreign docs). statsByRole's keys are derived
-    // from the same tf table (corpusStats at build; role.* entries of
+    // from the same tf rows (corpusStats at build; role.* entries of
     // stats.json on load), so this driver-side set difference is a free,
     // pre-shuffle check that names every offending role.
     val missing = idx.statsByRole.keySet -- idx.roleIds.keySet
@@ -54,13 +57,22 @@ object PostingIndex {
       throw new IllegalStateException(
         s"roles ${missing.toSeq.sorted.map(r => s"'$r'").mkString(", ")} are " +
           "absent from the role dictionary — stats.json roles and the tf " +
-          "table disagree; refusing to encode them under foreign roleIds")
+          "rows disagree; refusing to encode them under foreign roleIds")
+    encode(spark, idx.tf, idx.roleIds, shardSize)
+  }
+
+  /** Encode tf rows (docId, role, dlE1, term, tfE1) into posting
+    * segments, each role under its id in `roleIds`: one exchange on
+    * (shard, term), whose group size is bounded by shardSize. */
+  def encode(spark: SparkSession, tf: DataFrame, roleIds: Map[String, Int],
+             shardSize: Int): Dataset[TermPostings] = {
+    import spark.implicits._
+    require(shardSize > 0, s"shardSize must be positive, got $shardSize")
     // role → compact id as a literal CASE (roles are low-cardinality;
     // avoids a join); blocks carry per-posting roleIds for scoped scans.
-    // Base case is the -1 SENTINEL, not id 0: unreachable after the
-    // guard above, but if the stats themselves are inconsistent with tf
-    // the encoder below still fails closed instead of mis-encoding.
-    val roleIdCol = idx.roleIds.toSeq.sortBy(_._1).foldLeft(lit(-1)) {
+    // Base case is the -1 SENTINEL, not id 0: a role without an id
+    // fails the encoder below instead of encoding under a foreign id.
+    val roleIdCol = roleIds.toSeq.sortBy(_._1).foldLeft(lit(-1)) {
       case (acc, (r, id)) => when(col("role") === r, lit(id)).otherwise(acc)
     }
     // a shard id is an Int: a docId past that range fails the build
@@ -78,7 +90,7 @@ object PostingIndex {
     // group clustering all happen on binary rows with codegen, and rows
     // become objects exactly once, inside the encode kernel. Group size
     // stays bounded by shardSize, so the run buffer is bounded too.
-    idx.tf // carries role+dlE1 — no docs join needed
+    tf // carries role+dlE1 — no docs join needed
       .select(shardCol.as("shard"), col("term"), col("docId"),
         shiftleft(col("tfE1").cast("long"), 32)
           .bitwiseOR(roleIdCol.cast("long").bitwiseAND(lit(0xffffffffL))).as("meta"),
@@ -118,5 +130,26 @@ object PostingIndex {
           }
         }
       }
+  }
+
+  /** The inverse of [[encode]]: the tf rows (docId, role, dlE1, term,
+    * tfE1) that posting segments hold, each roleId mapped back to its
+    * role through `roles` (the role dictionary the rows were encoded
+    * under). A roleId outside it fails loudly. */
+  def decode(postings: Dataset[TermPostings], roles: Seq[String]): DataFrame = {
+    import postings.sparkSession.implicits._
+    val byId = roles.toArray
+    postings.flatMap { tp =>
+      tp.blocks.iterator.flatMap { b =>
+        val (docs, tfs, dls, roleIds) = Segments.decodeBlock(b)
+        docs.indices.iterator.map { i =>
+          val id = roleIds(i)
+          if (id < 0 || id >= byId.length)
+            throw new IllegalStateException(s"doc ${docs(i)} (shard ${tp.shard}) carries " +
+              s"roleId $id, outside the role dictionary of ${byId.length} roles")
+          TfRow(docs(i), byId(id), dls(i), tp.term, tfs(i))
+        }
+      }
+    }.toDF()
   }
 }

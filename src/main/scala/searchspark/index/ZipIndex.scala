@@ -1,6 +1,6 @@
 package searchspark.index
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Columnar dense-rank assignment (the zipWithIndex pattern without
@@ -25,24 +25,15 @@ import org.apache.spark.sql.functions._
   */
 object ZipIndex {
 
-  /** Returns df + a dense `name` rank column ordered by `sortCols`.
-    * The sorted intermediate is cached in `scope`: the ranks are only
-    * valid over that cached layout, so release the scope after the
-    * result has been materialized (written, collected or cached). */
-  def withRank(df: DataFrame, sortCols: Seq[Column], partitions: Int,
-               name: String, scope: CacheScope): DataFrame =
-    rankOverSorted(
-      df.repartitionByRange(partitions, sortCols: _*)
-        .sortWithinPartitions(sortCols: _*),
-      name, scope)
-
-  /** The rank-assignment half of [[withRank]] for callers that already
-    * hold a range-partitioned, within-partition-sorted DataFrame (e.g.
-    * DocIds fuses its key-dedup into the same range shuffle). The
-    * contract is exactly withRank's post-shuffle state: equal sort keys
-    * in one partition, partitions ordered by key range, rows sorted
-    * within each partition — rank = prefix-sum(partition counts) +
-    * in-partition index is the global rank under that contract. */
+  /** Returns `presorted` + a dense `name` rank column, for a
+    * range-partitioned, within-partition-sorted DataFrame (DocIds fuses
+    * its key-dedup into the same range shuffle): equal sort keys in one
+    * partition, partitions ordered by key range, rows sorted within each
+    * partition — rank = prefix-sum(partition counts) + in-partition
+    * index is the global rank under that contract. The sorted input is
+    * cached in `scope`: the ranks are only valid over that cached
+    * layout, so release the scope after the result has been
+    * materialized (written, collected or cached). */
   def rankOverSorted(presorted: DataFrame, name: String, scope: CacheScope): DataFrame = {
     val sorted = scope.cache(presorted.withColumn("__pid", spark_partition_id()))
     val counts = sorted.groupBy("__pid").count().collect()

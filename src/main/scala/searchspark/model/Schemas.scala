@@ -11,15 +11,19 @@ import java.sql.Timestamp
   *  - reference `lemma(site_id, lemma, frequency)`
   *    (model/Lemma.java:6-25) → no table: a term's df is counted from
   *    its postings (the serving partitions at query time;
-  *    IndexBuild.termDict / termsByRole over tf for a full listing),
+  *    IndexBuild.termDict / termsByRole over tf rows re-derived from the
+  *    docs for a full listing),
   *    keyed by the term itself (no lemma_id). `df` = number of distinct
   *    documents containing the term (the honest version of the
   *    reference's `lemma.frequency`, which could double-count
   *    title+body, Link.java:201-207).
   *  - reference `index(page_id, lemma_id, rank)`
-  *    (model/IndexEntity.java:5-23) → the `tf` table (docId, role, dlE1,
-  *    term, tfE1) at build time, [[TermPostings]] of compressed
-  *    [[PostingBlock]]s at rest. The reference's rank is the zone-weighted
+  *    (model/IndexEntity.java:5-23) → tf rows (docId, role, dlE1, term,
+  *    tfE1), computed from the docs at build time and stored only as
+  *    [[TermPostings]] of compressed [[PostingBlock]]s, which hold every
+  *    field of a tf row (PostingIndex.decode gives them back). The
+  *    reference stores its posting list once, and so does the index. The
+  *    reference's rank is the zone-weighted
   *    tf (Link.java:188-218); transcripts are single-zone unless a
   *    [[ZoneConfig]] is given, so rank == tf (SURVEY.md §1.2).
   */

@@ -9,9 +9,10 @@ import searchspark.index._
 import searchspark.model.Turn
 import searchspark.query.SearchEngine
 
-/** C9 incremental (re)index: delta TF + shard-local segment rebuild +
-  * union merge must equal a full recompute from the same updated
-  * docs_raw (identical docIds ⇒ directly comparable tables). */
+/** C9 incremental (re)index: the touched shards' decoded postings minus
+  * the replaced docs plus the delta's TF, re-encoded, must equal a full
+  * recompute from the same updated docs_raw (identical docIds ⇒
+  * directly comparable postings). */
 class IncrementalSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -38,11 +39,7 @@ class IncrementalSpec extends AnyFunSuite {
     assert(rep.shardsReused > 0, "expected untouched shards to be reused")
 
     // full recompute from the SAME updated docs_raw (same ids)
-    val docsRaw = IceLite.read(spark, Paths.get(root, "docs_raw").toString)
-    val tfFull = IndexBuild.tfFromDocs(docsRaw)
-    val tfIncr = IceLite.read(spark, Paths.get(root, "tf").toString)
-    assert(tfIncr.exceptAll(tfFull).count() == 0 && tfFull.exceptAll(tfIncr).count() == 0,
-      "incremental tf != full recompute")
+    IndexChecks.assertPostingsAreRecompute(spark, root)
     IndexChecks.assertDictionaryIsRecompute(spark, root)
 
     // postings: decoded content must match a from-scratch segment build
@@ -86,10 +83,10 @@ class IncrementalSpec extends AnyFunSuite {
     assert(rep.retracted == 1, s"exactly the victim retracts: $rep")
     assert(rep.replaced == 0)
 
-    // gone from docs_raw, tf, and the rebuilt segments
+    // gone from docs_raw and the rebuilt segments
     val idx = BuildPipeline.loadRelational(spark, root)
     assert(idx.docs.filter(org.apache.spark.sql.functions.col("docId") === victimId).count() == 0)
-    assert(idx.tf.filter(org.apache.spark.sql.functions.col("docId") === victimId).count() == 0)
+    IndexChecks.assertPostingsAreRecompute(spark, root)
     assert(idx.stats.n == preN + rep.added - 1)
     val postings = BuildPipeline.loadPostings(spark, root)
     val decodedIds = postings.collect().flatMap(tp => Segments.decodeAll(tp.blocks)._1).toSet
@@ -195,7 +192,7 @@ class IncrementalSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("idx-stale").toString
     val base = TranscriptGen.localCorpus(42L, 30)
     BuildPipeline.run(spark, ds(base), root, "gen:42:30", partitions = 4, shardSize = 256)
-    val before = Seq("docs_raw", "tf", "postings").map(t => t -> snap(root, t)).toMap
+    val before = Seq("docs_raw", "postings").map(t => t -> snap(root, t)).toMap
     val oldTerms = IndexBuild.termDict(BuildPipeline.loadRelational(spark, root).tf)
       .select("term").collect().map(_.getString(0))
 
@@ -223,7 +220,7 @@ class IncrementalSpec extends AnyFunSuite {
     val touched = BuildPipeline.loadRelational(spark, root).docs
       .join(ds(delta).toDF().select("conv_id", "turn_idx"), Seq("conv_id", "turn_idx"))
       .select((col("docId") / shardSize).cast("long")).collect().map(_.getLong(0)).toSet
-    Seq("docs_raw" -> shardSize, "tf" -> shardSize, "postings" -> 1L).foreach { case (t, per) =>
+    Seq("docs_raw" -> shardSize, "postings" -> 1L).foreach { case (t, per) =>
       val now = snap(root, t).files.map(_.path).toSet
       val (hit, kept) = before(t).files.partition { f =>
         val k = f.keys.get
@@ -241,10 +238,21 @@ class IncrementalSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("idx-report").toString
     val base = TranscriptGen.localCorpus(42L, 30)
     BuildPipeline.run(spark, ds(base), root, "gen:42:30", partitions = 4, shardSize = 256)
-    val tables = Seq("docs_raw", "tf", "postings")
+    val tables = Seq("docs_raw", "postings")
     val before = tables.map(t => t -> snap(root, t).files.map(_.path).toSet).toMap
-    val delta = ds(Seq(base.head.copy(text = "replaced wording w0001"), base(3).copy(text = " ")) ++
-      (810L until 812L).flatMap(TranscriptGen.conversation(42L, _)))
+    val turns = Seq(base.head.copy(text = "replaced wording w0001"), base(3).copy(text = " ")) ++
+      (810L until 812L).flatMap(TranscriptGen.conversation(42L, _))
+    val delta = ds(turns)
+    // the shards the delta's docIds fall in: its existing keys' shards,
+    // and those of the new (non-blank) keys' docIds, numbered after the
+    // current max
+    val pre = BuildPipeline.loadRelational(spark, root).docs
+      .select("conv_id", "turn_idx", "docId").collect()
+      .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+    val fresh = turns.filter(t => t.text != null && t.text.trim.nonEmpty)
+      .map(t => (t.conv_id, t.turn_idx)).distinct.count(!pre.contains(_))
+    val deltaIds = turns.flatMap(t => pre.get((t.conv_id, t.turn_idx))) ++
+      (pre.values.max + 1 to pre.values.max + fresh)
     var rep: Incremental.Report = null
     val jobs = IndexChecks.countJobs(spark.sparkContext) {
       rep = Incremental.append(spark, root, delta, partitions = 4)
@@ -253,40 +261,40 @@ class IncrementalSpec extends AnyFunSuite {
 
     val props = snap(root, "docs_raw").props
     assert(rep.props.forall { case (k, v) => props.get(k).contains(v) }, s"$props vs $rep")
-    assert(Seq("resolve", "tf", "stats", "postings", "docs_raw")
+    assert(Seq("resolve", "stats", "postings", "docs_raw")
       .forall(s => props.contains(s"append.ms.$s")))
+    assert(rep.shards == deltaIds.map(_ / 256).distinct.sorted, s"touched shards ${rep.shards}")
+    assert(props("append.shards") == rep.shards.mkString(","))
     val newFiles = tables.flatMap(t => snap(root, t).files.filterNot(f => before(t)(f.path)))
     assert(rep.filesWritten == newFiles.size)
     assert(rep.bytesWritten == newFiles.map(_.bytes).sum)
-    assert(rep.filesKept == Seq("docs_raw", "tf", "postings")
+    assert(rep.filesKept == tables
       .map(t => snap(root, t).files.count(f => before(t)(f.path))).sum)
     assert(rep.filesKept > 0 && rep.shardsReused > 0)
   }
 
   /** Jobs one append of this delta runs, as measured (local[4], AQE on:
     * every shuffle stage is a job of its own): the resolution, the stats
-    * collect, the three writes and their exchanges. It was 23 while the
-    * append also merged the `terms` and `terms_by_role` tables, and 28
-    * while the terms merge numbered new terms (a left join, an anti join
-    * and a window); an earlier design ran 74 on the benchmark's deltas.
-    * Never raise it. */
-  private val JobsPerAppendCeiling = 16
+    * collect, the docs_raw and postings writes and their exchanges. It
+    * was 16 while the append also wrote a `tf` table and rebuilt the
+    * postings from it, 23 while it also merged the `terms` and
+    * `terms_by_role` tables, and 28 while the terms merge numbered new
+    * terms (a left join, an anti join and a window); an earlier design
+    * ran 74 on the benchmark's deltas. Never raise it. */
+  private val JobsPerAppendCeiling = 13
 
   test("an append interrupted before its docs_raw commit is re-derived by the next one") {
     val root = Files.createTempDirectory("idx-crash").toString
     val base = TranscriptGen.localCorpus(42L, 20)
     BuildPipeline.run(spark, ds(base), root, "gen:42:20", partitions = 4, shardSize = 256)
-    // what an append that died after its tf commit leaves: tf one
-    // generation ahead of docs_raw (and, here, missing rows)
-    val tfTable = Paths.get(root, "tf").toString
-    IceLite.commit(spark, IceLite.read(spark, tfTable).limit(10), tfTable,
+    // what an append that died after its postings commit leaves: postings
+    // one generation ahead of docs_raw (and, here, missing rows)
+    val postTable = Paths.get(root, "postings").toString
+    IceLite.commit(spark, IceLite.read(spark, postTable).limit(10), postTable,
       props = Map(Incremental.Generation -> "1"))
     Incremental.append(spark, root, ds(TranscriptGen.conversation(42L, 820L)), partitions = 4)
 
-    val docsRaw = IceLite.read(spark, Paths.get(root, "docs_raw").toString)
-    val tfFull = IndexBuild.tfFromDocs(docsRaw)
-    val tfIncr = IceLite.read(spark, tfTable)
-    assert(tfIncr.exceptAll(tfFull).count() == 0 && tfFull.exceptAll(tfIncr).count() == 0)
+    IndexChecks.assertPostingsAreRecompute(spark, root)
     IndexChecks.assertDictionaryIsRecompute(spark, root)
     val all = base ++ TranscriptGen.conversation(42L, 820L)
     assert(BuildPipeline.loadRelational(spark, root).stats.n ==
@@ -300,6 +308,38 @@ class IncrementalSpec extends AnyFunSuite {
       assert(got.hits.map(h => (h.conv_id, h.turn_idx, h.score)) ==
         want.hits.map(h => (h.conv_id, h.turn_idx, h.score)))
     } finally engine.close()
+  }
+
+  test("a fresh root holds no tf; a root written with a tf table loads, searches and appends, leaving it untouched") {
+    val root = Files.createTempDirectory("idx-legacy").toString
+    val base = TranscriptGen.localCorpus(42L, 20)
+    BuildPipeline.run(spark, ds(base), root, "gen:42:20", partitions = 4, shardSize = 256)
+    def entries = {
+      val s = Files.list(Paths.get(root))
+      try s.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).toSet finally s.close()
+    }
+    val fresh = Set("docs_raw", "postings", "stats.json", "build_manifest.json", "build_status.json")
+    assert(entries == fresh)
+
+    // the tf table an older build wrote beside the same tables
+    val tfTable = Paths.get(root, "tf").toString
+    IceLite.commit(spark, IndexBuild.tfFromDocs(IceLite.read(spark, Paths.get(root, "docs_raw").toString)),
+      tfTable, props = Map(Incremental.Generation -> "0"), layout = Some(IceLite.FileLayout("docId", 256)))
+    val tfBefore = snap(root, "tf")
+    val engine = SearchEngine.load(spark, root)
+    try assert(engine.search("w0001 w0002").ok) finally engine.close()
+    val delta = base.head.copy(text = "legacy root wording w0001") +: TranscriptGen.conversation(42L, 840L)
+    val rep = Incremental.append(spark, root, ds(delta), partitions = 4)
+    assert(rep.replaced == 1 && rep.added > 0)
+    IndexChecks.assertPostingsAreRecompute(spark, root)
+    val after = SearchEngine.load(spark, root)
+    try {
+      val r = after.search("legacy wording")
+      assert(r.ok && r.hits.map(h => (h.conv_id, h.turn_idx)) == Seq((base.head.conv_id, base.head.turn_idx)))
+    } finally after.close()
+    assert(snap(root, "tf") == tfBefore, "the append must not touch an old root's tf")
+    assert(tfBefore.files.forall(f => Files.exists(Paths.get(f.path))))
+    assert(entries == fresh + "tf")
   }
 
   test("a build and an append leave no cached RDD behind") {

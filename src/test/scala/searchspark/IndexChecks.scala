@@ -6,21 +6,46 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 import org.scalatest.Assertions._
 
-import searchspark.index.{BuildPipeline, IceLite, IndexBuild}
+import searchspark.index.{BuildPipeline, IceLite, IndexBuild, PostingIndex, Segments}
 import searchspark.query.SearchEngine
 
 /** Checks shared by the append specs. */
 object IndexChecks {
 
   /** stats.json at `root` equals a full recompute from the root's
-    * docs_raw: n, the exact Double avgdl and per-role n/avgdl. */
+    * docs_raw under the manifest's zones: n, the exact Double avgdl and
+    * per-role n/avgdl. */
   def assertDictionaryIsRecompute(spark: SparkSession, root: String): Unit = {
     val docsRaw = IceLite.read(spark, Paths.get(root, "docs_raw").toString)
-    val tfFull = IndexBuild.tfFromDocs(docsRaw)
+    val tfFull = IndexBuild.tfFromDocs(docsRaw, BuildPipeline.manifestZones(root))
     val idx = BuildPipeline.loadRelational(spark, root)
     val (stats, byRole) = IndexBuild.corpusStats(docsRaw, tfFull, idx.stats.totalTurns)
     assert(idx.stats == stats, s"stats ${idx.stats} != full recompute $stats")
     assert(idx.statsByRole == byRole, s"per-role stats ${idx.statsByRole} != full recompute $byRole")
+  }
+
+  /** Every posting stored at `root`, decoded, equals a tf recompute from
+    * the root's docs_raw under the manifest's zones, each roleId read
+    * through the stats.json role list. Compared as a sorted multiset of
+    * (docId, role, dlE1, term, tfE1), so a missing, extra, duplicated or
+    * stale posting fails; each posting must also sit in its docId's
+    * shard. */
+  def assertPostingsAreRecompute(spark: SparkSession, root: String): Unit = {
+    val roles = BuildPipeline.loadRelational(spark, root).roleList
+    val shardSize = BuildPipeline.manifestShardSize(root).getOrElse(PostingIndex.DefaultShardSize)
+    val stored = BuildPipeline.loadPostings(spark, root).collect().toSeq.flatMap { tp =>
+      val (d, t, l, r) = Segments.decodeAll(tp.blocks)
+      d.indices.map { i =>
+        assert(d(i) / shardSize == tp.shard, s"doc ${d(i)} stored in shard ${tp.shard}")
+        (d(i), roles(r(i)), l(i), tp.term, t(i))
+      }
+    }
+    val want = IndexBuild.tfFromDocs(IceLite.read(spark, Paths.get(root, "docs_raw").toString),
+        BuildPipeline.manifestZones(root))
+      .collect().toSeq.map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3), r.getInt(4)))
+    val (got, exp) = (stored.sorted, want.sorted)
+    if (got != exp) fail(s"decoded postings != tf recompute: ${got.diff(exp).take(5)} stored " +
+      s"but not recomputed, ${exp.diff(got).take(5)} recomputed but not stored")
   }
 
   /** The engine loaded from `root` counts the same df from its serving

@@ -30,29 +30,35 @@ class ResumeSpec extends AnyFunSuite {
       .toJSON.collect().sorted.toSeq
   }
 
-  test("cold build == kill-after-tf + resume, row-identical tables") {
+  test("cold build == kill-after-docs_raw + resume, row-identical tables") {
     val cold = Files.createTempDirectory("idx-cold").toString
     val resumed = Files.createTempDirectory("idx-resume").toString
 
     val r1 = BuildPipeline.run(spark, corpus, cold, "gen:42:" + convs, partitions = 4)
-    assert(r1.ranStages.size == 4 && r1.skippedStages.isEmpty)
+    assert(r1.ranStages == Seq("docs_raw", "postings") && r1.skippedStages.isEmpty)
 
-    // killed build: crashes after the tf stage commits
+    // killed build: crashes after the docs_raw stage commits
     intercept[BuildPipeline.InjectedFailure] {
       BuildPipeline.run(spark, corpus, resumed, "gen:42:" + convs,
-        partitions = 4, failAfter = Some("tf"))
+        partitions = 4, failAfter = Some("docs_raw"))
     }
     val m = BuildPipeline.readManifest(resumed).get
-    assert(m.stages.contains("tf") && !m.stages.contains("stats"))
+    assert(m.stages.contains("docs_raw") && !m.stages.contains("postings"))
+    assert(!Files.exists(java.nio.file.Paths.get(resumed, "stats.json")))
 
     // resume: earlier stages skipped, rest run
     val r2 = BuildPipeline.run(spark, corpus, resumed, "gen:42:" + convs, partitions = 4)
-    assert(r2.skippedStages == Seq("docs_raw", "tf"))
-    assert(r2.ranStages == Seq("stats", "postings"))
+    assert(r2.skippedStages == Seq("docs_raw"))
+    assert(r2.ranStages == Seq("postings"))
 
-    Seq("docs_raw", "tf", "postings").foreach { t =>
+    Seq("docs_raw", "postings").foreach { t =>
       assert(tableRows(cold, t) == tableRows(resumed, t), s"table $t differs")
     }
+    def stats(root: String) = {
+      val idx = BuildPipeline.loadRelational(spark, root)
+      (idx.stats, idx.statsByRole, idx.roleList)
+    }
+    assert(stats(cold) == stats(resumed), "stats.json differs")
   }
 
   test("catalog seam: DirCatalog build is byte-identical to IceLite + resumable") {
@@ -68,11 +74,11 @@ class ResumeSpec extends AnyFunSuite {
     BuildPipeline.run(spark, corpus, viaIce, "gen:42:" + convs, partitions = 4)
     val r = BuildPipeline.run(spark, corpus, viaDir, "gen:42:" + convs,
       partitions = 4, catalog = DirCatalog)
-    assert(r.ranStages.size == 4 && r.skippedStages.isEmpty)
+    assert(r.ranStages.size == 2 && r.skippedStages.isEmpty)
     def dirRows(name: String): Seq[String] =
       DirCatalog.read(spark, Paths.get(viaDir, name).toString)
         .toJSON.collect().sorted.toSeq
-    Seq("docs_raw", "tf", "postings").foreach { t =>
+    Seq("docs_raw", "postings").foreach { t =>
       assert(dirRows(t) == tableRows(viaIce, t),
         s"table $t must be byte-identical across catalogs")
     }
@@ -82,7 +88,7 @@ class ResumeSpec extends AnyFunSuite {
     // resume: a re-run through DirCatalog skips every stage
     val r2 = BuildPipeline.run(spark, corpus, viaDir, "gen:42:" + convs,
       partitions = 4, catalog = DirCatalog)
-    assert(r2.ranStages.isEmpty && r2.skippedStages.size == 4)
+    assert(r2.ranStages.isEmpty && r2.skippedStages.size == 2)
     // and the DirCatalog-persisted index loads + answers like the IceLite one
     val idxDir = BuildPipeline.loadRelational(spark, viaDir, catalog = DirCatalog)
     val idxIce = BuildPipeline.loadRelational(spark, viaIce)
@@ -99,7 +105,7 @@ class ResumeSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("idx-noop").toString
     BuildPipeline.run(spark, corpus, root, "gen:42:" + convs, partitions = 4)
     val r = BuildPipeline.run(spark, corpus, root, "gen:42:" + convs, partitions = 4)
-    assert(r.ranStages.isEmpty && r.skippedStages.size == 4)
+    assert(r.ranStages.isEmpty && r.skippedStages.size == 2)
   }
 
   test("changed params invalidate checkpoints (full rebuild)") {
@@ -107,20 +113,20 @@ class ResumeSpec extends AnyFunSuite {
     BuildPipeline.run(spark, corpus, root, "gen:42:" + convs, partitions = 4)
     val r = BuildPipeline.run(spark, corpus, root, "gen:42:" + convs,
       partitions = 4, shardSize = 128)
-    assert(r.ranStages.size == 4)
+    assert(r.ranStages.size == 2)
   }
 
   test("per-stage lineage records rows + elapsed + fingerprint") {
     val root = Files.createTempDirectory("idx-lineage").toString
     BuildPipeline.run(spark, corpus, root, "gen:42:" + convs, partitions = 4)
     val m = BuildPipeline.readManifest(root).get
-    assert(m.stages.keySet == Set("docs_raw", "tf", "stats", "postings"))
+    assert(m.stages.keySet == Set("docs_raw", "postings"))
     m.stages.values.foreach { s =>
       assert(s.status == "done" && s.rows > 0 && s.fingerprint.nonEmpty)
     }
     // IceLite per-file lineage exists and sums to table rows
     val snap = searchspark.index.IceLite.currentSnapshot(
-      java.nio.file.Paths.get(root, "tf").toString).get
+      java.nio.file.Paths.get(root, "postings").toString).get
     assert(snap.files.nonEmpty)
     assert(snap.files.map(_.rows).sum == snap.totalRows)
   }

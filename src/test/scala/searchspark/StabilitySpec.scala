@@ -3,7 +3,7 @@ package searchspark
 import org.scalatest.funsuite.AnyFunSuite
 
 import searchspark.gen.TranscriptGen
-import searchspark.index.{CacheScope, DocIds, IndexBuild, PostingIndex}
+import searchspark.index.{CacheScope, DocIds, IndexBuild, Oracles, PostingIndex}
 
 /** Pipeline invariants (FIXTURES.md §5 / SURVEY.md §5.5-5.6):
   * parallelism-invariant ids, per-turn text equality, skew bounds. */
@@ -69,8 +69,8 @@ class StabilitySpec extends AnyFunSuite {
     val fused = CacheScope(s => rowsOf(DocIds.assign(spark, dsDup, partitions = 3, s)))
     // ... must agree with BOTH independent forms: the single-exchange
     // fused window form and the groupBy-max spec form
-    val viaExchange = CacheScope(s => rowsOf(DocIds.assignViaRangeExchange(spark, dsDup, 3, s)))
-    val unfused = CacheScope(s => rowsOf(searchspark.index.ZipIndex.withRank(
+    val viaExchange = CacheScope(s => rowsOf(Oracles.assignViaRangeExchange(spark, dsDup, 3, s)))
+    val unfused = CacheScope(s => rowsOf(Oracles.withRank(
       DocIds.dedupIndexable(dsDup.toDF()),
       Seq(col("conv_id"), col("turn_idx")), 3, "docId", s)))
     assert(fused == unfused)
@@ -100,10 +100,10 @@ class StabilitySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3), r.getInt(4)))
       .sortBy(t => (t._1, t._4)).toSeq
     assert(rowsOf(IndexBuild.tfFromDocs(docsRaw)) ==
-      rowsOf(IndexBuild.tfFromDocsDeclarative(docsRaw)))
+      rowsOf(Oracles.tfFromDocsDeclarative(docsRaw)))
     val z = Some(ZoneConfig(titleTokens = 5))
     assert(rowsOf(IndexBuild.tfFromDocs(docsRaw, z)) ==
-      rowsOf(IndexBuild.tfFromDocsDeclarative(docsRaw, z)))
+      rowsOf(Oracles.tfFromDocsDeclarative(docsRaw, z)))
     scope.release()
   }
 

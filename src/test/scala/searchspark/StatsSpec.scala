@@ -34,16 +34,16 @@ class StatsSpec extends AnyFunSuite {
     import searchspark.index.BuildPipeline
     val root = Files.createTempDirectory("idx-status").toString
     val ds = spark.createDataset(turns)
-    // fault-injected crash after the tf stage: the persisted status must
+    // fault-injected crash after the docs_raw stage: the persisted status must
     // say so, with the stage and the error, long after this JVM's state
     // is gone — that is what the reference's FAILED+last_error site row
     // gives a monitoring user
     intercept[BuildPipeline.InjectedFailure] {
       BuildPipeline.run(spark, ds, root, "stats:v1", partitions = 3,
-        failAfter = Some("tf"))
+        failAfter = Some("docs_raw"))
     }
     val failed = BuildPipeline.readBuildStatus(root).get
-    assert(failed.status == "failed" && failed.stage == "tf")
+    assert(failed.status == "failed" && failed.stage == "docs_raw")
     assert(failed.error.contains("injected failure"))
     assert(failed.statusTimeMs > 0 && failed.elapsedMs >= 0)
 

@@ -47,16 +47,11 @@ class ZoneSpec extends AnyFunSuite {
     val delta = (600L until 602L).flatMap(TranscriptGen.conversation(42L, _))
     searchspark.index.Incremental.append(spark, root,
       spark.createDataset(delta), partitions = 4)
-    // the merged tf must equal a full ZONED recompute — if the append
-    // had analyzed the delta unzoned, delta rows would carry plain
-    // 10x-count tfE1 instead of the weighted values
-    val docsRaw = searchspark.index.IceLite.read(spark,
-      java.nio.file.Paths.get(root, "docs_raw").toString)
-    val tfIncr = searchspark.index.IceLite.read(spark,
-      java.nio.file.Paths.get(root, "tf").toString)
-    val tfFull = searchspark.index.IndexBuild.tfFromDocs(docsRaw, zones)
-    assert(tfIncr.exceptAll(tfFull).count() == 0 && tfFull.exceptAll(tfIncr).count() == 0,
-      "zoned incremental tf != zoned full recompute")
+    // the merged postings must equal a full ZONED recompute — if the
+    // append had analyzed the delta unzoned, delta postings would carry
+    // plain 10x-count tfE1 instead of the weighted values
+    assert(searchspark.index.BuildPipeline.manifestZones(root) == zones)
+    IndexChecks.assertPostingsAreRecompute(spark, root)
   }
 
   test("zone weighting flips a ranking the unzoned build breaks by docId") {
