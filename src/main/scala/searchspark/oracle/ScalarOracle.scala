@@ -82,6 +82,8 @@ final class ScalarOracle(turns: Seq[Turn], zones: Option[ZoneConfig] = None) {
   // --- search (SearchingServiceImpl.java:47-67 pipeline) ---------------
   def search(query: String, scope: Option[String] = None,
              offset: Int = 0, limit: Int = 20): SearchResult = {
+    require(offset >= 0, s"offset must be non-negative, got $offset")
+    require(limit >= 0, s"limit must be non-negative, got $limit")
     if (query == null || query.trim.isEmpty)
       return SearchResult(ok = false, 0, Nil, "Empty search query")
 
@@ -131,7 +133,7 @@ final class ScalarOracle(turns: Seq[Turn], zones: Option[ZoneConfig] = None) {
     val total = scored.size.toLong
     val ranked = scored.sortBy { case (d, s) => (-s, d) }
     val maxScore = ranked.head._2
-    val page = ranked.slice(offset, offset + limit)
+    val page = ranked.drop(offset).take(limit)
     val hits = page.map { case (d, s) =>
       val t = docs(d.toInt)
       Hit(d, t.conv_id, t.turn_idx, t.role, s, s / maxScore,

@@ -19,7 +19,11 @@ import searchspark.model.{SearchResult, TermPostings, Turn}
   * driver only merges, windows and normalizes relevance. A cold query
   * (a term not yet in the df cache) runs one more plain job over the
   * same partitions to count df; the postings are the index's only store
-  * of df.
+  * of df. Both jobs are `SparkContext.runJob` calls on the persisted
+  * serving RDD with named task classes, not `map` / `collect` with
+  * lambdas: a query builds no RDD, and Spark's ClosureCleaner, which
+  * reads a lambda's declaring class with ASM on every job, has nothing
+  * to scan (Wand.searchPartitioned).
   *
   * Role-scoped queries take the SAME path: blocks carry per-posting
   * roleIds, and pruning bounds are computed at query time from
@@ -45,9 +49,14 @@ final class SearchEngine private (
   private val dfCache = scala.collection.concurrent.TrieMap.empty[String, Long]
   private val MaxDfCache = 1 << 20
 
+  /** One page of `query`'s hits, `limit` of them from rank `offset`.
+    * A negative `offset` or `limit` is rejected, naming the value; an
+    * `offset` past the last hit answers an empty page with the total. */
   def search(query: String, scope: Option[String] = None,
              offset: Int = 0, limit: Int = 20,
              exactTotal: Boolean = true): SearchResult = {
+    require(offset >= 0, s"offset must be non-negative, got $offset")
+    require(limit >= 0, s"limit must be non-negative, got $limit")
     if (dfCache.size > MaxDfCache) dfCache.clear()
     Wand.searchPartitioned(idx, serving, dfCache, query, scope, offset, limit, exactTotal)
   }

@@ -2,6 +2,7 @@ package searchspark.query
 
 import scala.collection.mutable
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 
 import searchspark.index.{BuiltIndex, Segments}
@@ -128,9 +129,17 @@ object Wand {
     * [[wandShard]] per shard holding every term, folds the shards with
     * [[mergeShardTops]], and hydrates + snippets that partition's top k
     * from the co-partitioned docs. idf and the term orders ride in the
-    * task closure. The driver merges, windows and normalizes relevance.
-    * The `collect` stays in this method: the benchmark's tracer names
-    * the scatter phase after it. */
+    * task ([[ScatterTask]]). The driver merges, windows and normalizes
+    * relevance.
+    *
+    * The job is `SparkContext.runJob` on the persisted serving RDD with a
+    * named task class, so a query builds no RDD and hands Spark's
+    * ClosureCleaner no lambda: the cleaner scans a lambda's declaring
+    * class (here `Wand$`, and `RDD` / `SparkContext` for the lambdas of
+    * `mapPartitions(...).collect()`) with ASM on every call, which cost
+    * more driver time than the WAND kernel itself. The `runJob` call
+    * stays in this method: the benchmark's tracer names the scatter
+    * phase after it (WandSpec pins the call site). */
   def searchPartitioned(idx: BuiltIndex, serving: RDD[ServingPartition],
                         dfCache: scala.collection.concurrent.Map[String, Long],
                         query: String, scope: Option[String], offset: Int, limit: Int,
@@ -140,16 +149,17 @@ object Wand {
     SearchService.planTerms(idx, serving, dfCache, query, scope) match {
       case Left(err) => err
       case Right((surviving, dfMap, n, avgdl)) =>
-        val k = offset + limit
+        // the page's end without Int overflow; the heaps keep at least
+        // one entry, so the total stays exact when the page is empty
+        val end = math.min(offset.toLong + limit, Int.MaxValue.toLong).toInt
+        val k = math.max(end, 1)
         val roleId = scope.fold(-1)(idx.roleIds)
         val idfByTerm = surviving.map(t => t -> Scoring.idf(dfMap(t), n)).toMap
         val termsAsc = surviving.sorted
         val byRarity = surviving.sortBy(t => (dfMap(t), t))
-        val qSet = surviving.toSet
-        val tops = serving
-          .mapPartitions(_.flatMap(p => partitionTop(p, idfByTerm, termsAsc, byRarity,
-            avgdl, k, roleId, exactTotal, qSet)))
-          .collect()
+        val task = new ScatterTask(idfByTerm, termsAsc, byRarity, avgdl, k, roleId,
+          exactTotal, surviving.toSet)
+        val tops = serving.sparkContext.runJob(serving, task, serving.partitions.indices).flatten
         lastFanIn = tops.length
 
         // partition totals are already resolved by mergeShardTops (exact
@@ -160,10 +170,24 @@ object Wand {
         val merged = tops.flatMap(_._2)
           .sortWith((a, b) => better((a.docId, a.score), (b.docId, b.score)))
         val maxScore = merged.head.score
-        val page = merged.slice(offset, offset + limit)
+        val page = merged.slice(offset, end)
           .map(h => h.copy(relevance = h.score / maxScore))
         SearchResult(ok = true, total, page.toIndexedSeq, null)
     }
+  }
+
+  /** The scatter job's task: [[partitionTop]] over each serving
+    * partition of the task's split (there is one). A named class, not a
+    * lambda, so ClosureCleaner leaves it alone (see
+    * [[searchPartitioned]]). */
+  private final class ScatterTask(idfByTerm: Map[String, Double],
+                                  termsAsc: Seq[String], byRarity: Seq[String],
+                                  avgdl: Double, k: Int, roleId: Int, exactTotal: Boolean,
+                                  qSet: Set[String])
+      extends ((TaskContext, Iterator[ServingPartition]) => Array[PartitionTop]) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[ServingPartition]): Array[PartitionTop] =
+      it.flatMap(p => partitionTop(p, idfByTerm, termsAsc, byRarity, avgdl, k, roleId,
+        exactTotal, qSet)).toArray
   }
 
   /** One partition's share of a query, run on the executor. Shards are

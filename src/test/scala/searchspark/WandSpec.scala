@@ -91,6 +91,82 @@ class WandSpec extends AnyFunSuite {
     } finally fresh.close()
   }
 
+  test("a cold and a warm query build no RDD") {
+    val sc = spark.sparkContext
+    val fresh = SearchEngine(spark, idx, postings, shardSize = 512) // empty df cache
+    /** RDDs `body` builds: the next RDD id moves past every one of them. */
+    def rddsBuilt(body: => Unit): Int = {
+      val before = sc.parallelize(Seq(1)).id
+      body
+      sc.parallelize(Seq(1)).id - before - 1
+    }
+    try {
+      val qs = QueryFixtures.deriveQueries(oracle)
+      Seq(qs.find(_.scope.isEmpty).get, qs.find(_.scope.nonEmpty).get).foreach { q =>
+        val cold = rddsBuilt(assert(fresh.search(q.query, q.scope, q.offset, q.limit).ok))
+        val warm = rddsBuilt(fresh.search(q.query, q.scope, q.offset, q.limit))
+        assert(cold == 0 && warm == 0, s"${q.id}: cold built $cold RDDs, warm $warm")
+      }
+    } finally fresh.close()
+  }
+
+  test("each query job's first program frame is the method that names its phase") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"wandspec-sites-${java.util.UUID.randomUUID()}"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // the first searchspark frame of the job's (long) call site, as
+    // perfbench's tracer reads it to tell the scatter from the df lookup
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          sites.add(e.stageInfos.maxBy(_.stageId).details.linesIterator.map(_.trim)
+            .find(_.startsWith("searchspark."))
+            .map(_.takeWhile(_ != '(').split('.').takeRight(2).mkString(".")).getOrElse(""))
+    }
+    val fresh = SearchEngine(spark, idx, postings, shardSize = 512) // empty df cache
+    sc.addSparkListener(listener)
+    try {
+      val q = QueryFixtures.deriveQueries(oracle).find(_.scope.nonEmpty).get
+      def sitesOf(body: => Unit): List[String] = {
+        sites.clear()
+        sc.setJobGroup(group, "query jobs")
+        try body finally sc.clearJobGroup()
+        org.apache.spark.ListenerBusDrain(sc)
+        sites.toArray(Array.empty[String]).toList
+      }
+      val scatter = "Wand$.searchPartitioned"
+      val dfLookup = "SearchService$.servingDf"
+      Seq(None, q.scope).foreach { scope =>
+        assert(sitesOf(fresh.search(q.query, scope)) == List(dfLookup, scatter), s"cold, scope $scope")
+        assert(sitesOf(fresh.search(q.query, scope)) == List(scatter), s"warm, scope $scope")
+      }
+    } finally { sc.removeSparkListener(listener); fresh.close() }
+  }
+
+  test("limit 0 and an offset + limit past Int.MaxValue answer like the oracle") {
+    val spec = new RankIdentitySpec
+    val q = QueryFixtures.deriveQueries(oracle).find(_.scope.isEmpty).get
+    Seq((0, 0), (5, 0), (Int.MaxValue - 5, 10), (0, Int.MaxValue), (3, Int.MaxValue),
+      (Int.MaxValue, Int.MaxValue)).foreach { case (offset, limit) =>
+      val expect = oracle.search(q.query, None, offset, limit)
+      assert(expect.ok && expect.count > 0, s"fixture sanity: offset $offset limit $limit")
+      if (limit == Int.MaxValue && offset < expect.count)
+        assert(expect.hits.size == expect.count - offset, "an unbounded page holds every hit")
+      spec.assertSame(s"offset $offset limit $limit", engine.search(q.query, None, offset, limit), expect)
+    }
+  }
+
+  test("a negative offset or limit is rejected, naming the value") {
+    Seq((-1, 20, "offset must be non-negative, got -1"),
+      (0, -3, "limit must be non-negative, got -3")).foreach { case (offset, limit, msg) =>
+      val e = intercept[IllegalArgumentException](engine.search("w0001", None, offset, limit))
+      assert(e.getMessage.contains(msg), e.getMessage)
+      val o = intercept[IllegalArgumentException](oracle.search("w0001", None, offset, limit))
+      assert(o.getMessage.contains(msg), o.getMessage)
+    }
+  }
+
   test("a scope with stats but no roleId answers Nothing found without a job") {
     val role = idx.statsByRole.keys.min
     val noRoleId = SearchEngine(spark, idx.copy(roleList = Seq("no-such-role")), postings,
