@@ -12,11 +12,12 @@ import searchspark.index.{BuildPipeline, IndexBuild}
   * Usage (also runnable via `sbt "runMain searchspark.IndexBuildMain ..."`):
   *   spark-submit --class searchspark.IndexBuildMain <jar> \
   *     --root /path/to/index [--transcripts /path/to/parquet | --convs N] \
-  *     [--partitions P] [--shard-size S] [--append]
+  *     [--partitions P] [--shard-size S | --append]
   *
   * Cold runs build both stages (docs_raw, postings); re-runs resume
   * from the checkpoint manifest; `--append` routes through the
-  * incremental path instead (indexPage analog).
+  * incremental path instead (indexPage analog), at the shard size the
+  * root's build manifest records.
   */
 object IndexBuildMain {
   def main(args: Array[String]): Unit = {
@@ -24,7 +25,7 @@ object IndexBuildMain {
     var transcripts: Option[String] = None
     var convs = 500L
     var partitions = 0
-    var shardSize = searchspark.index.PostingIndex.DefaultShardSize
+    var shardSize: Option[Int] = None
     var appendMode = false
     var i = 0
     while (i < args.length) {
@@ -33,12 +34,15 @@ object IndexBuildMain {
         case "--transcripts" => transcripts = Some(args(i + 1)); i += 2
         case "--convs" => convs = args(i + 1).toLong; i += 2
         case "--partitions" => partitions = args(i + 1).toInt; i += 2
-        case "--shard-size" => shardSize = args(i + 1).toInt; i += 2
+        case "--shard-size" => shardSize = Some(args(i + 1).toInt); i += 2
         case "--append" => appendMode = true; i += 1
         case other => sys.error(s"unknown arg: $other")
       }
     }
     require(root.nonEmpty, "--root is required")
+    require(!(appendMode && shardSize.isDefined),
+      "--shard-size cannot be combined with --append: an append uses the shard size " +
+        "the root's build manifest records")
 
     val spark = SparkSession.builder()
       .appName("searchspark-index-build")
@@ -55,11 +59,12 @@ object IndexBuildMain {
     }
 
     if (appendMode) {
-      val rep = searchspark.index.Incremental.append(spark, root, turns, p, shardSize)
+      val rep = searchspark.index.Incremental.append(spark, root, turns)
       println(s"[append] replaced=${rep.replaced} added=${rep.added} " +
         s"shardsRebuilt=${rep.shardsRebuilt} shardsReused=${rep.shardsReused}")
     } else {
-      val rep = BuildPipeline.run(spark, turns, root, inputId, p, shardSize)
+      val rep = BuildPipeline.run(spark, turns, root, inputId, p,
+        shardSize.getOrElse(searchspark.index.PostingIndex.DefaultShardSize))
       println(s"[build] ran=${rep.ranStages.mkString(",")} " +
         s"skipped=${rep.skippedStages.mkString(",")} docs=${rep.totalRows}")
     }

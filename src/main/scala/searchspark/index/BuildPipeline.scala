@@ -158,8 +158,7 @@ object BuildPipeline {
           inputId: String, partitions: Int,
           shardSize: Int = PostingIndex.DefaultShardSize,
           failAfter: Option[String] = None,
-          zones: Option[ZoneConfig] = None,
-          catalog: TableCatalog = IceLite): BuildReport = {
+          zones: Option[ZoneConfig] = None): BuildReport = {
     require(shardSize > 0, s"shardSize must be positive, got $shardSize")
     val params = Map("partitions" -> partitions.toString,
       "shardSize" -> shardSize.toString, "codec" -> "delta-varint-v2",
@@ -185,13 +184,13 @@ object BuildPipeline {
       lastStage = name
       val ok = manifest.stages.get(name).exists(r =>
         r.fingerprint == fp && r.status == "done" &&
-          (catalog.currentSnapshot(table(name)).isDefined || r.table.isEmpty))
+          (IceLite.currentSnapshot(table(name)).isDefined || r.table.isEmpty))
       if (ok) { skipped += name }
       else {
         val t0 = System.nanoTime()
         val rows = body
         val rec = StageRecord(name, fp,
-          if (catalog.currentSnapshot(table(name)).isDefined) table(name) else "",
+          if (IceLite.currentSnapshot(table(name)).isDefined) table(name) else "",
           rows, (System.nanoTime() - t0) / 1000000, "done")
         manifest = manifest.copy(stages = manifest.stages + (name -> rec))
         writeManifest(root, manifest)
@@ -204,22 +203,17 @@ object BuildPipeline {
     try {
     stage("docs_raw") {
       val totalTurns = turns.count()
-      // Sort-on-write, one file per doc-range shard: a docId lookup
-      // (docId isin(ids)) prunes files and row groups via parquet min/max stats instead of
-      // scanning every file (PlanGuardSpec pins it), and an append
-      // rewrites only the shards it touches. The engine reads the whole
-      // table once, at load, into its serving partitions.
-      // The layout's shard exchange is the ONE text-bearing exchange
-      // left anywhere, and it is a durable-layout choice in the
-      // persist-only path — the in-memory build (the throughput metric)
-      // never moves text bytes (DocIds.assign class doc).
+      // One file per doc-range shard, sorted by docId: an append
+      // rewrites only the shards it touches, and each file's docId
+      // min/max stats let a docId filter prune files and row groups
+      // (PlanGuardSpec pins it).
       CacheScope { scope =>
-        catalog.commit(spark, DocIds.assign(spark, turns, partitions, scope),
+        IceLite.commit(spark, DocIds.assign(spark, turns, partitions, scope),
           table("docs_raw"), props = Map("totalTurns" -> totalTurns.toString),
           layout = docLayout(shardSize)).totalRows
       }
     }
-    stage("postings") { commitPostings(spark, root, catalog, zones, shardSize).totalRows }
+    stage("postings") { commitPostings(spark, root, zones, shardSize).totalRows }
 
     } catch {
       case e: Throwable =>
@@ -249,20 +243,20 @@ object BuildPipeline {
     * encode and commit every shard's segments from it. A cold build
     * lists its roles sorted; with `appendRoles` the roles already in
     * stats.json keep their position (see [[roleList]]). */
-  private[index] def commitPostings(spark: SparkSession, root: String, catalog: TableCatalog,
+  private[index] def commitPostings(spark: SparkSession, root: String,
                                     zones: Option[ZoneConfig], shardSize: Int,
                                     appendRoles: Boolean = false,
                                     props: Map[String, String] = Map.empty): IceLite.Snapshot =
     CacheScope { scope =>
-      val docs = catalog.read(spark, table(root, "docs_raw"))
+      val docs = IceLite.read(spark, table(root, "docs_raw"))
       val tf = scope.cache(IndexBuild.tfFromDocs(docs, zones))
-      val totalTurns = catalog.currentSnapshot(table(root, "docs_raw"))
+      val totalTurns = IceLite.currentSnapshot(table(root, "docs_raw"))
         .flatMap(_.props.get("totalTurns")).map(_.toLong).getOrElse(0L)
       val sums = IndexBuild.corpusSums(docs, tf)
       val roles = roleList(if (appendRoles) readRoles(root) else Nil,
         sums.collect { case (r, d) if d.n > 0 => r })
       writeStats(root, sums, totalTurns, roles, props)
-      catalog.commit(spark,
+      IceLite.commit(spark,
         PostingIndex.encode(spark, tf, roles.zipWithIndex.toMap, shardSize).toDF(),
         table(root, "postings"), props = props, layout = postingsLayout)
     }
@@ -326,8 +320,7 @@ object BuildPipeline {
     * stats. `tf` is a lazy view, the TF kernel over docs_raw under the
     * manifest's zones; nothing on the search, load or append path reads
     * it. */
-  def loadRelational(spark: SparkSession, root: String,
-                     catalog: TableCatalog = IceLite): BuiltIndex = {
+  def loadRelational(spark: SparkSession, root: String): BuiltIndex = {
     def table(name: String) = Paths.get(root, name).toString
     val statsMap = readStats(root).getOrElse(
       throw new IllegalStateException(s"no stats.json in $root"))
@@ -337,15 +330,14 @@ object BuildPipeline {
       val Array(n, a) = v.split(":")
       k.stripPrefix("role.") -> (n.toLong, a.toDouble)
     }
-    val docs = catalog.read(spark, table("docs_raw"))
+    val docs = IceLite.read(spark, table("docs_raw"))
     BuiltIndex(docs, IndexBuild.tfFromDocs(docs, manifestZones(root)), stats, byRole,
       roleList = statsMap.get("roles").map(decodeRoles).getOrElse(Nil))
   }
 
   /** Load the compressed posting segments from a build root. */
-  def loadPostings(spark: SparkSession, root: String,
-                   catalog: TableCatalog = IceLite): Dataset[TermPostings] = {
+  def loadPostings(spark: SparkSession, root: String): Dataset[TermPostings] = {
     import spark.implicits._
-    catalog.read(spark, Paths.get(root, "postings").toString).as[TermPostings]
+    IceLite.read(spark, Paths.get(root, "postings").toString).as[TermPostings]
   }
 }

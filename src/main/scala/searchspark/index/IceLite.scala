@@ -11,12 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** IceLite — a minimal Iceberg-shaped table layer (SURVEY.md §7.0: no
-  * Iceberg runtime jar is available offline, so the snapshot/manifest
-  * semantics are implemented in-repo with an Iceberg-compatible shape:
-  * immutable data files + versioned snapshot JSON + atomic current-
-  * pointer swap, so a real Iceberg catalog could replace this without
-  * touching callers).
+/** IceLite — the index's one table layer (SURVEY.md §7.0: no Iceberg
+  * runtime jar is available offline, so the snapshot/manifest semantics
+  * are implemented in-repo). The layout is Iceberg-shaped: immutable
+  * data files + versioned snapshot JSON + an atomic current-pointer
+  * swap.
   *
   * Layout:
   * {{{
@@ -42,7 +41,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * reader resolving `current` sees one immutable file set; a concurrent
   * commit only ever renames a new pointer over it.
   */
-object IceLite extends TableCatalog {
+object IceLite {
 
   /** Min/max of a table's layout key over one file, from its footer. */
   final case class KeyRange(lo: Long, hi: Long)
@@ -77,7 +76,7 @@ object IceLite extends TableCatalog {
   private def metaDir(table: String): Path = Paths.get(table, "metadata")
   private def currentPtr(table: String): Path = metaDir(table).resolve("current")
 
-  override def currentSnapshot(table: String): Option[Snapshot] = {
+  def currentSnapshot(table: String): Option[Snapshot] = {
     val ptr = currentPtr(table)
     if (!Files.exists(ptr)) None
     else {
@@ -89,10 +88,10 @@ object IceLite extends TableCatalog {
   /** Commit `df` as the table's next snapshot, superseding the previous
     * one (its files stay on disk, immutable — time travel by reading an
     * old v<id>.json still works). */
-  override def commit(spark: SparkSession, df: DataFrame, table: String,
-                      operation: String = "overwrite",
-                      props: Map[String, String] = Map.empty,
-                      layout: Option[FileLayout] = None): Snapshot =
+  def commit(spark: SparkSession, df: DataFrame, table: String,
+             operation: String = "overwrite",
+             props: Map[String, String] = Map.empty,
+             layout: Option[FileLayout] = None): Snapshot =
     publish(stage(spark, df, table, layout), operation, props)
 
   /** Data files written for a table's next snapshot; invisible to readers
@@ -180,9 +179,9 @@ object IceLite extends TableCatalog {
     * A sharded layout writes one `file_shard=<n>/` directory per shard with
     * one file in it (one hash exchange on the shard). An empty `df`
     * still writes one empty file, so a snapshot always has a readable
-    * schema. Shared with [[DirCatalog]]. */
-  private[index] def writeFiles(spark: SparkSession, df: DataFrame, dataDir: Path,
-                                layout: Option[FileLayout]): Seq[FileEntry] = {
+    * schema. */
+  private def writeFiles(spark: SparkSession, df: DataFrame, dataDir: Path,
+                         layout: Option[FileLayout]): Seq[FileEntry] = {
     layout match {
       case Some(l) =>
         val shard = (col(l.key) / lit(l.shardSize)).cast("long")
@@ -210,8 +209,8 @@ object IceLite extends TableCatalog {
     * written (at a 100 TB commit a re-read for counting would double the
     * write cost; footers are O(KB/file)). `key`'s min/max come from the
     * row groups' column statistics. */
-  private[index] def footerEntries(spark: SparkSession, dataDir: Path,
-                                   key: Option[String]): Seq[FileEntry] = {
+  private def footerEntries(spark: SparkSession, dataDir: Path,
+                            key: Option[String]): Seq[FileEntry] = {
     val hconf = spark.sessionState.newHadoopConf()
     val dataStream = Files.walk(dataDir)
     try dataStream.iterator().asScala
@@ -243,7 +242,7 @@ object IceLite extends TableCatalog {
   }
 
   /** Read the current snapshot (or a pinned one — time travel). */
-  override def read(spark: SparkSession, table: String, snapshotId: Option[Long] = None): DataFrame = {
+  def read(spark: SparkSession, table: String, snapshotId: Option[Long] = None): DataFrame = {
     val snap = snapshotId match {
       case Some(id) =>
         mapper.readValue(metaDir(table).resolve(s"v$id.json").toFile, classOf[Snapshot])

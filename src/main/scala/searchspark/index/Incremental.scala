@@ -94,24 +94,19 @@ object Incremental {
   private val Add = "add"
   private val Retract = "retract"
 
-  /** Apply `newTurns` to the index at `root`. `partitions` is not read:
-    * the append's work is sized by the shards it touches. */
-  def append(spark: SparkSession, root: String, newTurns: Dataset[Turn],
-             partitions: Int, shardSize: Int = 0): Report = {
+  /** Apply `newTurns` to the index at `root`. The append's work is sized
+    * by the shards it touches. */
+  def append(spark: SparkSession, root: String, newTurns: Dataset[Turn]): Report = {
     def table(name: String) = Paths.get(root, name).toString
     def snapshot(name: String): Snapshot = IceLite.currentSnapshot(table(name))
       .getOrElse(throw new IllegalStateException(s"no current snapshot in ${table(name)}"))
     // the delta MUST be processed under the BUILD's config: zone setup
-    // and shard size come from the manifest (a mismatched shardSize
-    // silently mis-shards the rebuilt segments and duplicates kept ones
-    // — caught by StreamIngestSpec); an explicit argument is only
-    // accepted when it agrees
+    // and shard size come from the manifest alone (another shardSize
+    // would mis-shard the rebuilt segments and duplicate kept ones); a
+    // manifest without one means the default, as SearchEngine.load reads it
     val zones = BuildPipeline.manifestZones(root)
-    val manifestShard = BuildPipeline.manifestShardSize(root)
-    require(shardSize <= 0 || manifestShard.forall(_ == shardSize),
-      s"shardSize $shardSize contradicts the build manifest ($manifestShard)")
-    val effShardSize = manifestShard
-      .orElse(Some(shardSize).filter(_ > 0)).getOrElse(PostingIndex.DefaultShardSize)
+    val shardSize = BuildPipeline.manifestShardSize(root)
+      .getOrElse(PostingIndex.DefaultShardSize)
 
     val stepMs = mutable.LinkedHashMap.empty[String, Long]
     def step[T](name: String)(body: => T): T = {
@@ -122,7 +117,7 @@ object Incremental {
     val docsSnap0 = snapshot("docs_raw")
     val gen = docsSnap0.props.get(Generation).map(_.toLong).getOrElse(0L)
     step("rederive") {
-      if (!consistent(root, gen)) rederive(spark, root, zones, effShardSize, gen)
+      if (!consistent(root, gen)) rederive(spark, root, zones, shardSize, gen)
     }
     val nextGen = Map(Generation -> (gen + 1).toString)
 
@@ -149,7 +144,7 @@ object Incremental {
         .filter(col("v").isNotNull || !fresh)
         .select(
           docId.as("docId"),
-          (docId / effShardSize).cast("long").as("shard"),
+          (docId / shardSize).cast("long").as("shard"),
           when(col("v").isNull, lit(Retract)).when(fresh, lit(Add))
             .otherwise(lit(Replace)).as("kind"),
           col("conv_id"), col("turn_idx"),
@@ -216,11 +211,11 @@ object Incremental {
         // stages). docs_raw is staged now and published LAST, as the
         // append's commit point, with the report (its own files included)
         // in its props
-        val (docsKeep, docsRepl) = split(docsSnap0.files, effShardSize)
+        val (docsKeep, docsRepl) = split(docsSnap0.files, shardSize)
         val staged = fork(step("docs_raw") {
           IceLite.stage(spark,
             union(read(docsSnap0, docsRepl).map(_.filter(dropOld)), Some(newDocs)),
-            table("docs_raw"), layout = BuildPipeline.docLayout(effShardSize))
+            table("docs_raw"), layout = BuildPipeline.docLayout(shardSize))
         })
 
         // stats: exact per-role sums moved by the delta; Σ dlE1 by +tfE1 per
@@ -247,7 +242,7 @@ object Incremental {
           val postSnap = step("postings") {
             val rows = union(tfOld.map(_.filter(dropOld)), Some(tfDelta))
             commit("postings",
-              PostingIndex.encode(spark, rows, roles.zipWithIndex.toMap, effShardSize).toDF(),
+              PostingIndex.encode(spark, rows, roles.zipWithIndex.toMap, shardSize).toDF(),
               postKeep, BuildPipeline.postingsLayout)
           }
           statsDone()
@@ -303,6 +298,6 @@ object Incremental {
     * own stage body, stamped with docs_raw's generation. */
   private def rederive(spark: SparkSession, root: String, zones: Option[ZoneConfig],
                        shardSize: Int, gen: Long): Unit =
-    BuildPipeline.commitPostings(spark, root, IceLite, zones, shardSize, appendRoles = true,
+    BuildPipeline.commitPostings(spark, root, zones, shardSize, appendRoles = true,
       props = Map(Generation -> gen.toString))
 }

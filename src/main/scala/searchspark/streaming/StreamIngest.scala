@@ -74,13 +74,16 @@ object StreamIngest {
   }
 
   /** Apply one micro-batch (exposed for tests / manual batches). An
-    * empty batch commits nothing: the append's first job finds no keys. */
+    * empty batch commits nothing: the append's first job finds no keys.
+    * `partitions` is not read (the append is sized by the shards it
+    * touches); it stays because callers pass it positionally before
+    * `checkpointId`. */
   def applyBatch(spark: SparkSession, root: String, batch: Dataset[Turn],
-                 batchId: Long, partitions: Int,
+                 batchId: Long, partitions: Int = 0,
                  checkpointId: String = "default"): Boolean = {
     if (batchId <= lastApplied(root, checkpointId)) false // replay after crash → no-op
     else {
-      Incremental.append(spark, root, batch, partitions)
+      Incremental.append(spark, root, batch)
       recordApplied(root, checkpointId, batchId)
       true
     }
@@ -93,7 +96,7 @@ object StreamIngest {
     * (BuildPipeline.run) — streams extend indexes, they don't bootstrap
     * them. */
   def run(spark: SparkSession, root: String, stream: Dataset[Turn],
-          checkpointDir: String, partitions: Int,
+          checkpointDir: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -101,8 +104,8 @@ object StreamIngest {
       .foreachBatch { (batch: Dataset[Turn], batchId: Long) =>
         // resolved per batch: Spark has written the metadata id by the
         // time the first batch fires
-        applyBatch(spark, root, batch, batchId, partitions,
-          checkpointIdentity(checkpointDir)): Unit
+        applyBatch(spark, root, batch, batchId,
+          checkpointId = checkpointIdentity(checkpointDir)): Unit
       }
       .start()
 

@@ -33,7 +33,7 @@ class IncrementalSpec extends AnyFunSuite {
     val edited = base.head.copy(text = "completely new wording about w0001 w0002 tables")
     val delta = ds(newConvs :+ edited)
 
-    val rep = Incremental.append(spark, root, delta, partitions = 4, shardSize = 256)
+    val rep = Incremental.append(spark, root, delta)
     assert(rep.replaced == 1)
     assert(rep.added > 50)
     assert(rep.shardsReused > 0, "expected untouched shards to be reused")
@@ -79,7 +79,7 @@ class IncrementalSpec extends AnyFunSuite {
       victim.copy(text = "   "),
       victim.copy(conv_id = "ghost-conv", text = null)) ++
       TranscriptGen.conversation(42L, 700L)
-    val rep = Incremental.append(spark, root, ds(delta), partitions = 4)
+    val rep = Incremental.append(spark, root, ds(delta))
     assert(rep.retracted == 1, s"exactly the victim retracts: $rep")
     assert(rep.replaced == 0)
 
@@ -117,7 +117,7 @@ class IncrementalSpec extends AnyFunSuite {
     // mapping would shift EVERY existing id and corrupt kept shards
     val delta = (500L until 502L).flatMap(TranscriptGen.conversation(42L, _))
       .map(_.copy(role = "admin"))
-    Incremental.append(spark, root, ds(delta), partitions = 4)
+    Incremental.append(spark, root, ds(delta))
 
     val idx = BuildPipeline.loadRelational(spark, root)
     assert(oldRoleIds.forall { case (r, id) => idx.roleIds(r) == id },
@@ -163,7 +163,7 @@ class IncrementalSpec extends AnyFunSuite {
     val delta = Seq(solo.copy(text = ""),
       base.head.copy(text = "aaaa zzzz replaced wording w0002")) ++
       TranscriptGen.conversation(42L, 900L)
-    val rep = Incremental.append(spark, root, ds(delta), partitions = 4)
+    val rep = Incremental.append(spark, root, ds(delta))
     assert(rep.retracted == 1 && rep.replaced == 1 && rep.added > 0, s"$rep")
     IndexChecks.assertDictionaryIsRecompute(spark, root)
     // the engine counts the retracted term as unknown, and nothing in the
@@ -180,7 +180,7 @@ class IncrementalSpec extends AnyFunSuite {
     assert(preDf("aaaa") == 0 && df("aaaa") > 0, "a new term enters the index")
 
     // the role comes back on a second append, which chains the generation
-    Incremental.append(spark, root, ds(Seq(solo.copy(conv_id = "solo-conv-2"))), partitions = 4)
+    Incremental.append(spark, root, ds(Seq(solo.copy(conv_id = "solo-conv-2"))))
     IndexChecks.assertDictionaryIsRecompute(spark, root)
     IndexChecks.assertEngineDfIsRecompute(spark, root)
     assert(BuildPipeline.loadRelational(spark, root).statsByRole.contains("auditor"))
@@ -199,7 +199,7 @@ class IncrementalSpec extends AnyFunSuite {
     // base.head holds docId 0 (shard 0); new conversations land at the end
     val delta = base.head.copy(text = "00 first sorting term w0001") +:
       TranscriptGen.conversation(42L, 800L)
-    Incremental.append(spark, root, ds(delta), partitions = 4, shardSize = 256)
+    Incremental.append(spark, root, ds(delta))
     assert(oldTerms.forall("00" < _), "the probe term must sort before every existing term")
 
     // no persisted posting field can go stale: rows hold (shard, term,
@@ -255,7 +255,7 @@ class IncrementalSpec extends AnyFunSuite {
       (pre.values.max + 1 to pre.values.max + fresh)
     var rep: Incremental.Report = null
     val jobs = IndexChecks.countJobs(spark.sparkContext) {
-      rep = Incremental.append(spark, root, delta, partitions = 4)
+      rep = Incremental.append(spark, root, delta)
     }
     assert(jobs <= JobsPerAppendCeiling, s"append ran $jobs Spark jobs")
 
@@ -292,7 +292,7 @@ class IncrementalSpec extends AnyFunSuite {
     val postTable = Paths.get(root, "postings").toString
     IceLite.commit(spark, IceLite.read(spark, postTable).limit(10), postTable,
       props = Map(Incremental.Generation -> "1"))
-    Incremental.append(spark, root, ds(TranscriptGen.conversation(42L, 820L)), partitions = 4)
+    Incremental.append(spark, root, ds(TranscriptGen.conversation(42L, 820L)))
 
     IndexChecks.assertPostingsAreRecompute(spark, root)
     IndexChecks.assertDictionaryIsRecompute(spark, root)
@@ -329,7 +329,7 @@ class IncrementalSpec extends AnyFunSuite {
     val engine = SearchEngine.load(spark, root)
     try assert(engine.search("w0001 w0002").ok) finally engine.close()
     val delta = base.head.copy(text = "legacy root wording w0001") +: TranscriptGen.conversation(42L, 840L)
-    val rep = Incremental.append(spark, root, ds(delta), partitions = 4)
+    val rep = Incremental.append(spark, root, ds(delta))
     assert(rep.replaced == 1 && rep.added > 0)
     IndexChecks.assertPostingsAreRecompute(spark, root)
     val after = SearchEngine.load(spark, root)
@@ -350,7 +350,16 @@ class IncrementalSpec extends AnyFunSuite {
     BuildPipeline.run(spark, ds(base), root, "gen:42:10", partitions = 4, shardSize = 256)
     assert(sc.getPersistentRDDs.keySet == cachedBefore, "BuildPipeline.run leaked a cache")
     Incremental.append(spark, root, ds(base.take(3).map(_.copy(text = "fresh words w0001")) ++
-      TranscriptGen.conversation(42L, 830L)), partitions = 4)
+      TranscriptGen.conversation(42L, 830L)))
     assert(sc.getPersistentRDDs.keySet == cachedBefore, "Incremental.append leaked a cache")
+  }
+
+  test("IndexBuildMain rejects --shard-size with --append, naming both flags") {
+    val root = Files.createTempDirectory("idx-cli").toString
+    val e = intercept[IllegalArgumentException] {
+      IndexBuildMain.main(Array("--root", root, "--append", "--shard-size", "256"))
+    }
+    assert(e.getMessage.contains("--shard-size") && e.getMessage.contains("--append"),
+      e.getMessage)
   }
 }

@@ -61,46 +61,6 @@ class ResumeSpec extends AnyFunSuite {
     assert(stats(cold) == stats(resumed), "stats.json differs")
   }
 
-  test("catalog seam: DirCatalog build is byte-identical to IceLite + resumable") {
-    // round-3 verdict #6: the pipeline's table layer must be genuinely
-    // swappable. Run the SAME build through the plain-directory catalog
-    // and assert every produced table is value-identical to the IceLite
-    // build, then prove the resume machinery works through the alternate
-    // catalog too (stage-skip consults catalog.currentSnapshot).
-    import java.nio.file.Paths
-    import searchspark.index.DirCatalog
-    val viaIce = Files.createTempDirectory("idx-ice").toString
-    val viaDir = Files.createTempDirectory("idx-dir").toString
-    BuildPipeline.run(spark, corpus, viaIce, "gen:42:" + convs, partitions = 4)
-    val r = BuildPipeline.run(spark, corpus, viaDir, "gen:42:" + convs,
-      partitions = 4, catalog = DirCatalog)
-    assert(r.ranStages.size == 2 && r.skippedStages.isEmpty)
-    def dirRows(name: String): Seq[String] =
-      DirCatalog.read(spark, Paths.get(viaDir, name).toString)
-        .toJSON.collect().sorted.toSeq
-    Seq("docs_raw", "postings").foreach { t =>
-      assert(dirRows(t) == tableRows(viaIce, t),
-        s"table $t must be byte-identical across catalogs")
-    }
-    // lineage props survive the alternate catalog
-    assert(DirCatalog.currentSnapshot(Paths.get(viaDir, "docs_raw").toString)
-      .exists(_.props.contains("totalTurns")))
-    // resume: a re-run through DirCatalog skips every stage
-    val r2 = BuildPipeline.run(spark, corpus, viaDir, "gen:42:" + convs,
-      partitions = 4, catalog = DirCatalog)
-    assert(r2.ranStages.isEmpty && r2.skippedStages.size == 2)
-    // and the DirCatalog-persisted index loads + answers like the IceLite one
-    val idxDir = BuildPipeline.loadRelational(spark, viaDir, catalog = DirCatalog)
-    val idxIce = BuildPipeline.loadRelational(spark, viaIce)
-    val pDir = BuildPipeline.loadPostings(spark, viaDir, catalog = DirCatalog)
-    val pIce = BuildPipeline.loadPostings(spark, viaIce)
-    def query(e: SearchEngine) = try e.search("w0001 w0002") finally e.close()
-    val qDir = query(SearchEngine(spark, idxDir, pDir))
-    val qIce = query(SearchEngine(spark, idxIce, pIce))
-    assert(qDir.hits.map(h => (h.docId, h.score)) ==
-      qIce.hits.map(h => (h.docId, h.score)))
-  }
-
   test("already-complete build is a full no-op resume") {
     val root = Files.createTempDirectory("idx-noop").toString
     BuildPipeline.run(spark, corpus, root, "gen:42:" + convs, partitions = 4)

@@ -62,7 +62,7 @@ class RoleDictSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("idx-roles-inc").toString
     BuildPipeline.run(spark, spark.createDataset(turns), root, "roles:v1", partitions = 4)
     val delta = (0 until 4).map(i => Turn("znew", i, "tool,caller", text("delta", i), null, ts))
-    Incremental.append(spark, root, spark.createDataset(delta), partitions = 4)
+    Incremental.append(spark, root, spark.createDataset(delta))
 
     val idx = BuildPipeline.loadRelational(spark, root)
     assert(idx.roleList == Seq("", "a,b", "user", "tool,caller"),

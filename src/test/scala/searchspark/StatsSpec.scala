@@ -75,7 +75,7 @@ class StatsSpec extends AnyFunSuite {
     // add a conversation
     val delta = Seq(solo.copy(text = ""), base.head.copy(text = "aaaa replaced wording w0002")) ++
       TranscriptGen.conversation(42L, 900L)
-    Incremental.append(spark, root, spark.createDataset(delta), partitions = 3)
+    Incremental.append(spark, root, spark.createDataset(delta))
 
     val keys = delta.map(t => (t.conv_id, t.turn_idx)).toSet
     val finalTurns = base.filterNot(t => keys((t.conv_id, t.turn_idx))) ++ delta

@@ -36,11 +36,11 @@ class StreamIngestSpec extends AnyFunSuite {
       base.head.copy(text = "streamed replacement wording w0001")
     ds(late1).write.parquet(s"$landing/batch1")
     val q1 = StreamIngest.run(spark, root,
-      StreamIngest.fromParquetDir(spark, s"$landing/batch*"), ckpt, partitions = 4)
+      StreamIngest.fromParquetDir(spark, s"$landing/batch*"), ckpt)
     q1.awaitTermination()
     ds(late2).write.parquet(s"$landing/batch2")
     val q2 = StreamIngest.run(spark, root,
-      StreamIngest.fromParquetDir(spark, s"$landing/batch*"), ckpt, partitions = 4)
+      StreamIngest.fromParquetDir(spark, s"$landing/batch*"), ckpt)
     q2.awaitTermination()
 
     // the postings and stats equal a recompute from the merged docs_raw
@@ -74,11 +74,11 @@ class StreamIngestSpec extends AnyFunSuite {
     BuildPipeline.run(spark, ds(base), root, "gen:42:10", partitions = 2, shardSize = 256)
 
     val delta = (400L until 402L).flatMap(TranscriptGen.conversation(42L, _))
-    assert(StreamIngest.applyBatch(spark, root, ds(delta), batchId = 0L, partitions = 2))
+    assert(StreamIngest.applyBatch(spark, root, ds(delta), batchId = 0L))
     val snap1 = IceLite.currentSnapshot(
       java.nio.file.Paths.get(root, "docs_raw").toString).get
     // redelivery of the same batch id (crash-replay semantics) → no-op
-    assert(!StreamIngest.applyBatch(spark, root, ds(delta), batchId = 0L, partitions = 2))
+    assert(!StreamIngest.applyBatch(spark, root, ds(delta), batchId = 0L))
     val snap2 = IceLite.currentSnapshot(
       java.nio.file.Paths.get(root, "docs_raw").toString).get
     assert(snap1.snapshotId == snap2.snapshotId && snap1.totalRows == snap2.totalRows)
@@ -87,7 +87,7 @@ class StreamIngestSpec extends AnyFunSuite {
     // independent, so the batch re-applies (idempotent replacement)
     // rather than being silently dropped against the old watermark
     assert(StreamIngest.applyBatch(spark, root, ds(delta), batchId = 0L,
-      partitions = 2, checkpointId = "fresh-ckpt"))
+      checkpointId = "fresh-ckpt"))
     val snap3 = IceLite.currentSnapshot(
       java.nio.file.Paths.get(root, "docs_raw").toString).get
     assert(snap3.totalRows == snap2.totalRows,

@@ -45,8 +45,7 @@ class ZoneSpec extends AnyFunSuite {
     searchspark.index.BuildPipeline.run(spark, spark.createDataset(base), root,
       "gen:42:zoned", partitions = 4, shardSize = 256, zones = zones)
     val delta = (600L until 602L).flatMap(TranscriptGen.conversation(42L, _))
-    searchspark.index.Incremental.append(spark, root,
-      spark.createDataset(delta), partitions = 4)
+    searchspark.index.Incremental.append(spark, root, spark.createDataset(delta))
     // the merged postings must equal a full ZONED recompute — if the
     // append had analyzed the delta unzoned, delta postings would carry
     // plain 10x-count tfE1 instead of the weighted values

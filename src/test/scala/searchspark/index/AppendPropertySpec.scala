@@ -152,7 +152,7 @@ class AppendPropertySpec extends AnyFunSuite {
         s"${c.appends.size} appends): ") {
         BuildPipeline.run(spark, ds(c.base), appended, s"prop:$seed", partitions = 2,
           shardSize = c.shardSize, zones = c.zones)
-        c.appends.foreach(rows => Incremental.append(spark, appended, ds(rows), partitions = 2))
+        c.appends.foreach(rows => Incremental.append(spark, appended, ds(rows)))
         val finalTurns = c.appends.foldLeft(initial(c.base))(applyBatch).values.toSeq
         BuildPipeline.run(spark, ds(finalTurns), cold, s"prop-cold:$seed", partitions = 2,
           shardSize = c.shardSize, zones = c.zones)
